@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .design import DesignInfo, build_design, standardize_coef_names
 from .formula import ParsedFormula, parse_formula, parse_vcov
-from .plans.common import Source, agg_select_sql, resolve_source
+from .plans.common import Source, agg_select_sql, resolve_source, run_agg
 from .plans.exprs import (
     Agg,
     CaseGE,
@@ -457,11 +457,10 @@ def _negbin_moment_theta(pois_model, df: DataFrame, weights: str | None) -> floa
 
 # --------------------------------------------------------------------------
 # One IRLS pass: spec + projection + oracle SQL
-_IRLS_VIEW_SEQ = 0
 # --------------------------------------------------------------------------
 
 
-def _irls_pass_exprs(
+def irls_pass_plan(
     frame: Frame,
     family: _Family,
     beta: np.ndarray,
@@ -471,9 +470,21 @@ def _irls_pass_exprs(
     offset: str | None = None,
     weights: str | None = None,
 ):
-    """IR for one IRLS pass: (proj_exprs, spec) — shared by the lazy
-    DataFrame/SQL builder (:func:`irls_pass_plan`) and the one-round-trip
-    SQL executor in the fit loop (plans.common.run_agg_via_sql)."""
+    """Build the single-pass weighted-moment aggregation at literal β.
+
+    Returns (spec, agg_df, sql). ``first=True`` adds the once-per-fit free
+    riders (Σωy, Σωy², Σω, min/max of y and ω, a non-binary-y detector, the
+    saturated log-likelihood) to the same scan.
+
+    ``offset`` adds a per-row linear-predictor shift (η = offset + Xβ);
+    ``weights`` are prior weights ω: the IRLS weight becomes ω·w, the score
+    ω·(y−μ), and the log-likelihood/pearson terms are ω-scaled — R's
+    ``glm(weights=)`` semantics (for binomial: y = proportion, ω = trials).
+
+    The per-row μ/w/wz/ll expressions are materialized ONCE in a projection
+    before the aggregation — inlining η into all p(p+1)/2 product terms
+    blows up codegen quadratically (same finding as hc1_meat_plan).
+    """
     y = _d(Var(frame.y_col))
     eta_x = _eta_expr(beta, x_names, intercept)  # Xβ part only
     off_e: Expr | None = _d(Var(offset)) if offset is not None else None
@@ -506,9 +517,7 @@ def _irls_pass_exprs(
             ("__llsat", _d(llsat if om is None else om * llsat))
         )
         proj_exprs.append(("__y", y))
-        # _d wraps keep every projection on run_agg_via_sql's top-level
-        # double-cast contract (no value change — already double)
-        proj_exprs.append(("__wt", _d(om if om is not None else Lit(1.0))))
+        proj_exprs.append(("__wt", om if om is not None else Lit(1.0)))
         if family.name == "binomial":
             # y(1−y) ≠ 0 ⇔ y ∉ {0,1}; Σ|·| > 0 flags a non-binary outcome
             proj_exprs.append(
@@ -540,46 +549,11 @@ def _irls_pass_exprs(
             spec.append((f"a_{i}_{j}", asum(wv * _d(cols[i]) * _d(cols[j]))))
     for i in range(p):
         spec.append((f"b_{i}", asum(Var("__wz") * _d(cols[i]))))
-    return proj_exprs, spec
-
-
-def irls_pass_plan(
-    frame: Frame,
-    family: _Family,
-    beta: np.ndarray,
-    x_names: list[str],
-    intercept: bool = True,
-    first: bool = False,
-    offset: str | None = None,
-    weights: str | None = None,
-):
-    """Build the single-pass weighted-moment aggregation at literal β.
-
-    Returns (spec, agg_df, sql). ``first=True`` adds the once-per-fit free
-    riders (Σωy, Σωy², Σω, min/max of y and ω, a non-binary-y detector, the
-    saturated log-likelihood) to the same scan.
-
-    ``offset`` adds a per-row linear-predictor shift (η = offset + Xβ);
-    ``weights`` are prior weights ω: the IRLS weight becomes ω·w, the score
-    ω·(y−μ), and the log-likelihood/pearson terms are ω-scaled — R's
-    ``glm(weights=)`` semantics (for binomial: y = proportion, ω = trials).
-
-    The per-row μ/w/wz/ll expressions are materialized ONCE in a projection
-    before the aggregation — inlining η into all p(p+1)/2 product terms
-    blows up codegen quadratically (same finding as hc1_meat_plan).
-    """
-    proj_exprs, spec = _irls_pass_exprs(
-        frame, family, beta, x_names, intercept, first, offset, weights
-    )
-    from .plans.exprs import aggs_to_spark_fast, to_spark_fast
-
     proj = frame.df.select(
-        *[to_spark_fast(e).alias(n) for n, e in proj_exprs],
+        *[to_spark(e).alias(n) for n, e in proj_exprs],
         *[F.col(n) for n in x_names],
     )
-    # one F.expr per aggregate (contract: every sum/min/max here is
-    # double-typed — projections are _d-cast, products are over casts)
-    agg_df = proj.agg(*aggs_to_spark_fast(spec))
+    agg_df = proj.agg(*[agg_to_spark(a).alias(n) for n, a in spec])
 
     sql = None
     if frame.sql_cte:
@@ -728,12 +702,10 @@ def glm_meat(
     cols: list[Expr] = ([Lit(1.0)] if intercept else []) + [Var(n) for n in x_names]
     p = len(cols)
 
-    from .plans.exprs import aggs_to_spark_fast, to_spark_fast
-
     key_cols = cluster_cols or []
     proj = frame.df.select(
         *[F.col(c) for c in key_cols],
-        to_spark_fast(_d(s)).alias("__s"),
+        to_spark(_d(s)).alias("__s"),
         *[F.col(n) for n in x_names],
     )
     sv = Var("__s")
@@ -742,7 +714,7 @@ def glm_meat(
         for i in range(p):
             for j in range(i, p):
                 spec.append((f"m_{i}_{j}", asum(sv * sv * _d(cols[i]) * _d(cols[j]))))
-        row = proj.agg(*aggs_to_spark_fast(spec)).collect()[0].asDict()
+        row = run_agg(proj, spec)
         meat = np.zeros((p, p))
         for i in range(p):
             for j in range(i, p):
@@ -750,12 +722,14 @@ def glm_meat(
         return meat, None
 
     score_spec = [(f"score_{j}", asum(sv * _d(c))) for j, c in enumerate(cols)]
-    scores = proj.groupBy(*cluster_cols).agg(*aggs_to_spark_fast(score_spec))
+    scores = proj.groupBy(*cluster_cols).agg(
+        *[agg_to_spark(a).alias(n) for n, a in score_spec]
+    )
     outer = [("n_clusters", Agg("count_star", None, "long"))]
     for i in range(p):
         for j in range(i, p):
             outer.append((f"m_{i}_{j}", asum(Var(f"score_{i}") * Var(f"score_{j}"))))
-    row = scores.agg(*aggs_to_spark_fast(outer)).collect()[0].asDict()
+    row = run_agg(scores, outer)
     g = int(row["n_clusters"])
     meat = np.zeros((p, p))
     for i in range(p):
@@ -1687,34 +1661,8 @@ def dbglm(
     x_names = list(frame.x_cols)
     p_all = len(names_all)
 
-    # every IRLS pass goes through ONE spark.sql round-trip against a temp
-    # view over the frame (plans.common.run_agg_via_sql; guide §4 — the
-    # Column-builder path pays 2+ py4j round-trips per aggregate column).
-    # Table-sourced fits (sql_cte set) keep the plan builder so the SQL
-    # mirror text rides along unchanged; non-bare-safe names fall back too.
-    pass_view = None
-    if not frame.sql_cte:
-        global _IRLS_VIEW_SEQ
-        _IRLS_VIEW_SEQ += 1
-        pass_view = f"__dbglm_irls_frame_{_IRLS_VIEW_SEQ}"
-        try:
-            frame.df.createOrReplaceTempView(pass_view)
-        except Exception:  # pragma: no cover - exotic session states
-            pass_view = None
-
     def run_pass(beta_, x_, icpt_, first_=False):
         """(row, sql) for one IRLS pass at literal β."""
-        from .plans.common import run_agg_via_sql
-
-        if pass_view is not None:
-            proj_exprs, spec_ = _irls_pass_exprs(
-                frame, fam, beta_, x_, icpt_, first_, offset, weights
-            )
-            r = run_agg_via_sql(
-                frame.df.sparkSession, pass_view, proj_exprs, list(x_), spec_
-            )
-            if r is not None:
-                return r, None
         _, agg_df_, sql_ = irls_pass_plan(
             frame, fam, beta_, x_, icpt_, first=first_,
             offset=offset, weights=weights,
@@ -1952,11 +1900,6 @@ def dbglm(
     # df_residual, R's summary.glm convention; fixed dispersion ⇒ Wald-z
     use_t = fam.name == "gaussian" or fam.quasi
     ct = gen_coeftable(beta, V, df_res, names, use_z=not use_t)
-    if pass_view is not None:
-        try:
-            frame.df.sparkSession.catalog.dropTempView(pass_view)
-        except Exception:  # pragma: no cover
-            pass
     frame.cleanup()
     return GlmModel(
         coeftable=ct,

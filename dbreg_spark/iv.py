@@ -430,7 +430,7 @@ def dbiv(
         frame.cleanup()
         return sql if sql is not None else f"SELECT {agg_select_sql(spec)} FROM base"
     try:
-        row = run_agg(frame.df, spec, fe_cols=ivf.fe or None, fast=True)
+        row = run_agg(frame.df, spec, fe_cols=ivf.fe or None)
         if data_only:
             return pd.DataFrame([row])
         from .api import _check_weights_valid

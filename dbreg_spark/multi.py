@@ -70,7 +70,7 @@ from .plans.exprs import (
     Cast,
     Lit,
     Var,
-    aggs_to_spark_fast,
+    agg_to_spark,
     asum,
     to_spark,
 )
@@ -456,7 +456,7 @@ def _batched_hc1(frame, fits, weight_col):
                         asum(e * e * Cast(cols[i], "double") * Cast(cols[j], "double")),
                     )
                 )
-    row = run_agg(proj, spec, fast=True)
+    row = run_agg(proj, spec)
     for m, f in enumerate(fits):
         p = (1 if f.icpt else 0) + len(f.kept_x)
         meat = np.zeros((p, p))
@@ -476,9 +476,8 @@ def _batched_cluster_pass(frame, fits, weight_col, cluster_cols):
         e = Var(f"__e{m}")
         for i, c in enumerate(cols):
             score_spec.append((f"s{m}_{i}", asum(e * Cast(c, "double"))))
-    # wide pass (models x columns): fast rendering — one F.expr per agg
     scores = proj.groupBy(*[F.col(c) for c in cluster_cols]).agg(
-        *aggs_to_spark_fast(score_spec)
+        *[agg_to_spark(a).alias(n) for n, a in score_spec]
     )
     outer: list[tuple[str, Agg]] = [
         ("n_clusters", Agg("count_star", None, "long"))
@@ -490,7 +489,7 @@ def _batched_cluster_pass(frame, fits, weight_col, cluster_cols):
                 outer.append(
                     (f"m{m}_{i}_{j}", asum(Var(f"s{m}_{i}") * Var(f"s{m}_{j}")))
                 )
-    row = run_agg(scores, outer, fast=True)
+    row = run_agg(scores, outer)
     g = int(row["n_clusters"])
     meats = []
     for m, f in enumerate(fits):
@@ -646,7 +645,7 @@ def _batched_dk(frame, fits, weight_col, time_col, hac_lag):
             )
     pdf = (
         proj.groupBy(F.col(time_col))
-        .agg(*aggs_to_spark_fast(score_spec))
+        .agg(*[agg_to_spark(a).alias(n) for n, a in score_spec])
         .toPandas()
         .sort_values(time_col)
         .reset_index(drop=True)
@@ -900,7 +899,6 @@ def dbreg_multi(
             frame.df,
             mspec,
             fe_cols=fe if strategy != "moments" else None,
-            fast=True,
         )
         n_passes += 1
         _check_weights_valid(urow, weight_col)
@@ -1114,9 +1112,7 @@ def build_multi_plan(
         n_fe_exprs=n_fe_exprs,
         weight=Var(weight_col) if weight_col else None,
     )
-    # union-wide moment pass: fast rendering (moment_spec aggregates are
-    # all double-cast sums / count_star — exprs.aggs_to_spark_fast contract)
-    agg_df = frame.df.agg(*aggs_to_spark_fast(mspec))
+    agg_df = frame.df.agg(*[agg_to_spark(a).alias(n) for n, a in mspec])
     sql = None
     if frame.sql_cte:
         sql = (

@@ -37,19 +37,18 @@ from .design import standardize_coef_names
 from .formula import ParsedFormula, parse_formula, parse_vcov, parse_weights
 from .glm import GlmModel, _Family, _d, _eta_expr, get_family
 from .multi import DbregMulti, _union_design, parse_multi_formula
-from .plans.common import resolve_source, run_agg, run_agg_via_sql
+from .plans.common import resolve_source, run_agg
 from .plans.exprs import (
     Agg,
     Expr,
     Lit,
     Var,
-    aggs_to_spark_fast,
+    agg_to_spark,
     amax,
     amin,
     asum,
     count_star,
     to_spark,
-    to_spark_fast,
 )
 from .plans.frames import build_base_frame
 from .plans.meat import nw_combine
@@ -58,9 +57,6 @@ from .solve import compute_vcov, detect_collinearity, gen_coeftable, solve_with_
 
 class GlmMulti(DbregMulti):
     """Ordered dict of fitted :class:`GlmModel` (same container API)."""
-
-
-_PASS_VIEW_SEQ = 0
 
 
 def _decode_block(row, prefix, p):
@@ -257,361 +253,335 @@ def dbglm_multi(
             cond = cc if cond is None else (cond & cc)
         frame.df = frame.df.where(cond)
     fdf = frame.df.cache()
-    # one temp view over the cached frame: every lockstep pass renders to
-    # SQL text and submits via ONE spark.sql call (plans.common.
-    # run_agg_via_sql; guide §4 — the Column-builder path measured ~1000
-    # py4j round-trips per pass). The view resolves to the same analyzed
-    # plan as fdf, so the CacheManager serves the cached relation.
-    global _PASS_VIEW_SEQ
-    _PASS_VIEW_SEQ += 1
-    pass_view = f"__dbglm_multi_frame_{_PASS_VIEW_SEQ}"
     try:
-        fdf.createOrReplaceTempView(pass_view)
-    except Exception:  # pragma: no cover - exotic session states
-        pass_view = None
-    n_passes = 0
+        n_passes = 0
 
-    term_cols: dict[str, list[str]] = {}
-    for n, t in zip(design.names, col_term):
-        term_cols.setdefault(t, []).append(n)
+        term_cols: dict[str, list[str]] = {}
+        for n, t in zip(design.names, col_term):
+            term_cols.setdefault(t, []).append(n)
 
-    # per-model column subsets (frame column names; outcomes map to selves)
-    class _M:
-        pass
+        # per-model column subsets (frame column names; outcomes map to selves)
+        class _M:
+            pass
 
-    models: list[_M] = []
-    for key, p in subs.items():
-        m = _M()
-        m.key = key
-        m.parsed = p
-        m.y = key[0] if key[0] != spec.lhs[0] else frame.y_col
-        sub_x: list[str] = []
-        for t in p.terms:
-            for c in term_cols.get(t.label, []):
-                if c not in sub_x:
-                    sub_x.append(c)
-        m.x = sub_x
-        m.p_all = (1 if icpt_req else 0) + len(sub_x)
-        m.names_all = (["(Intercept)"] if icpt_req else []) + [
-            standardize_coef_names(n) for n in sub_x
-        ]
-        m.fam = get_family("poisson") if want_auto_theta else fam
-        models.append(m)
-
-    om: Expr | None = _d(Var(weight_col)) if weight_col else None
-    off_e: Expr | None = _d(Var(offset)) if offset else None
-
-    def pass_once(active, first=False):
-        """ONE aggregation advancing every model in ``active``."""
-        nonlocal n_passes
-        proj_exprs: list[tuple[str, Expr]] = []
-        spec_aggs: list[tuple[str, Agg]] = [("n_total", count_star())]
-        carry: list[str] = []
-        for k, m in enumerate(active):
-            y = _d(Var(m.y))
-            beta = m.cand_full  # full-width β (dropped cols as 0)
-            eta_x = _eta_expr(beta, m.x, icpt_req)
-            eta = off_e + eta_x if off_e is not None else eta_x
-            mu = m.fam.mu(eta)
-            w = m.fam.w(eta, mu)
-            wz = m.fam.wz(eta_x, mu, y, w, off_e)
-            ll = m.fam.ll(eta, mu, y)
-            p2 = m.fam.pearson_sq(mu, y)
-            if om is not None:
-                w, wz, ll, p2 = om * w, om * wz, om * ll, om * p2
-            proj_exprs += [
-                (f"m{k}__w", _d(w)),
-                (f"m{k}__wz", _d(wz)),
-                (f"m{k}__ll", _d(ll)),
-                (f"m{k}__p2", _d(p2)),
+        models: list[_M] = []
+        for key, p in subs.items():
+            m = _M()
+            m.key = key
+            m.parsed = p
+            m.y = key[0] if key[0] != spec.lhs[0] else frame.y_col
+            sub_x: list[str] = []
+            for t in p.terms:
+                for c in term_cols.get(t.label, []):
+                    if c not in sub_x:
+                        sub_x.append(c)
+            m.x = sub_x
+            m.p_all = (1 if icpt_req else 0) + len(sub_x)
+            m.names_all = (["(Intercept)"] if icpt_req else []) + [
+                standardize_coef_names(n) for n in sub_x
             ]
-            spec_aggs.append((f"m{k}_ll", asum(Var(f"m{k}__ll"))))
-            spec_aggs.append((f"m{k}_pearson", asum(Var(f"m{k}__p2"))))
-            cols = ([Lit(1.0)] if icpt_req else []) + [Var(n) for n in m.x]
-            for i in range(len(cols)):
-                for j in range(i, len(cols)):
-                    spec_aggs.append(
-                        (
-                            f"m{k}_a_{i}_{j}",
-                            asum(Var(f"m{k}__w") * _d(cols[i]) * _d(cols[j])),
-                        )
-                    )
-                spec_aggs.append(
-                    (f"m{k}_b_{i}", asum(Var(f"m{k}__wz") * _d(cols[i])))
-                )
-            carry += m.x
-        if first:
-            # per-outcome diagnostics (shared across models with the same y)
-            # saturated ll is PER MODEL (negbin's depends on each model's
-            # theta); min/max/sum diagnostics stay per outcome
+            m.fam = get_family("poisson") if want_auto_theta else fam
+            models.append(m)
+
+        om: Expr | None = _d(Var(weight_col)) if weight_col else None
+        off_e: Expr | None = _d(Var(offset)) if offset else None
+
+        def pass_once(active, first=False):
+            """ONE aggregation advancing every model in ``active``."""
+            nonlocal n_passes
+            proj_exprs: list[tuple[str, Expr]] = []
+            spec_aggs: list[tuple[str, Agg]] = [("n_total", count_star())]
+            carry: list[str] = []
             for k, m in enumerate(active):
-                yv = _d(Var(m.y))
-                llsat = m.fam.ll_sat(yv)
-                proj_exprs.append(
-                    (f"m{k}__sat", _d(llsat if om is None else om * llsat))
-                )
-                spec_aggs.append((f"m{k}_ll_sat", asum(Var(f"m{k}__sat"))))
-            for yi, yn in enumerate(dict.fromkeys([m.y for m in active])):
-                yv = _d(Var(yn))
-                spec_aggs += [
-                    (f"y{yi}_min", amin(yv)),
-                    (f"y{yi}_max", amax(yv)),
-                    (f"y{yi}_sum", asum(om * yv if om is not None else yv)),
+                y = _d(Var(m.y))
+                beta = m.cand_full  # full-width β (dropped cols as 0)
+                eta_x = _eta_expr(beta, m.x, icpt_req)
+                eta = off_e + eta_x if off_e is not None else eta_x
+                mu = m.fam.mu(eta)
+                w = m.fam.w(eta, mu)
+                wz = m.fam.wz(eta_x, mu, y, w, off_e)
+                ll = m.fam.ll(eta, mu, y)
+                p2 = m.fam.pearson_sq(mu, y)
+                if om is not None:
+                    w, wz, ll, p2 = om * w, om * wz, om * ll, om * p2
+                proj_exprs += [
+                    (f"m{k}__w", _d(w)),
+                    (f"m{k}__wz", _d(wz)),
+                    (f"m{k}__ll", _d(ll)),
+                    (f"m{k}__p2", _d(p2)),
                 ]
-                if fam.name == "binomial" and om is None:
-                    from .plans.exprs import Func
-
-                    # _d wrap keeps the projection on run_agg_via_sql's
-                    # top-level double-cast contract (no value change —
-                    # the product is already double)
-                    proj_exprs.append(
-                        (f"y{yi}__bad",
-                         _d(Func("abs", (yv * (Lit(1.0) - yv),))))
-                    )
-                    spec_aggs.append(
-                        (f"y{yi}_bad", asum(Var(f"y{yi}__bad")))
-                    )
-            spec_aggs.append(
-                ("sum_wt", asum(om if om is not None else Lit(1.0)))
-            )
-            if om is not None:
-                spec_aggs.append(("wt_min", amin(om)))
-        carry_all = dict.fromkeys(
-            carry
-            + [m.y for m in active]
-            + ([weight_col] if weight_col else [])
-        )
-        row = run_agg_via_sql(
-            fdf.sparkSession, pass_view, proj_exprs, list(carry_all),
-            spec_aggs,
-        )
-        if row is None:  # non-bare-safe identifiers: Column-builder path
-            proj_cols = [to_spark_fast(e).alias(n) for n, e in proj_exprs]
-            proj = fdf.select(*proj_cols, *[F.col(c) for c in carry_all])
-            row = run_agg(proj, spec_aggs, fast=True)
-        n_passes += 1
-        return row
-
-    n_total = sum_wt = 0.0
-    y_order: list = []
-    y_stats: dict = {}
-
-    def to_full(m, b):
-        full = np.zeros(m.p_all)
-        full[np.asarray(m.keep_idx, dtype=int)] = b
-        return full
-
-    def fit_lockstep():
-        """Initial pass (collinearity + validation + saturated ll at each
-        model's CURRENT m.fam) then the IRLS lockstep to convergence."""
-        nonlocal n_total, sum_wt, y_order, y_stats
-        # binomial 0/1 validation rides a dedicated tiny expression set on the
-        # first pass result via y_min/y_max (weights => proportions in [0,1])
-        for m in models:
-            m.cand_full = np.zeros(m.p_all)
-        row0 = pass_once(models, first=True)
-        n_total = float(row0["n_total"])
-        if n_total == 0:
-            raise ValueError("dbglm_multi: zero rows after missing-value filtering")
-        if weight_col is not None and float(row0["wt_min"]) <= 0:
-            raise ValueError("dbglm_multi: weights must be strictly positive")
-        y_order = list(dict.fromkeys([m.y for m in models]))
-        y_stats = {}
-        for yi, yn in enumerate(y_order):
-            y_stats[yn] = dict(
-                y_min=float(row0[f"y{yi}_min"]),
-                y_max=float(row0[f"y{yi}_max"]),
-                sum_y=float(row0[f"y{yi}_sum"]),
-            )
-            if fam.name == "binomial":
-                lo, hi = y_stats[yn]["y_min"], y_stats[yn]["y_max"]
-                if lo < 0 or hi > 1:
-                    raise ValueError(
-                        f"dbglm_multi(family='binomial'): outcome {yn} outside "
-                        "[0, 1]"
-                    )
-                if weight_col is None and float(row0.get(f"y{yi}_bad") or 0.0) > 0:
-                    raise ValueError(
-                        f"dbglm_multi(family='binomial') needs 0/1 outcomes; "
-                        f"{yn} has values outside {{0, 1}}"
-                    )
-            if fam.name in ("poisson", "negbin") and y_stats[yn]["y_min"] < 0:
-                raise ValueError(
-                    f"dbglm_multi(family={fam.name!r}): outcome {yn} has "
-                    "negative values"
-                )
-        sum_wt = float(row0["sum_wt"])
-
-        # per-model collinearity from the β=0 blocks + first Newton candidate
-        for k, m in enumerate(models):
-            a0, b0, ll0 = _decode_block(row0, f"m{k}_", m.p_all)
-            collin = detect_collinearity(a0, b0, m.names_all)
-            m.keep_idx = list(collin.keep_idx)
-            m.names = list(collin.keep_names)
-            m.collin_drop = list(collin.drop_names)
-            sol = solve_with_fallback(collin.xtx, collin.xty)
-            m.cand = sol.betahat
-            m.accepted = np.zeros(len(m.keep_idx))
-            m.prev = np.zeros(len(m.keep_idx))
-            m.ll_prev = ll0
-            m.halvings = 0
-            m.converged = False
-            m.gave_up = False
-            m.n_iter = 1
-            m.final_a = collin.xtx
-            m.final_ll = ll0
-            m.final_pearson = float(row0[f"m{k}_pearson"])
-            m.ll_sat = float(row0[f"m{k}_ll_sat"])
-            off0 = 1 if icpt_req else 0
-            m.icpt = icpt_req and 0 in m.keep_idx
-            m.x_kept = [m.x[i - off0] for i in m.keep_idx if i >= off0]
-
-        it = 1
-        while it < max_iter:
-            active = [m for m in models if not m.converged and not m.gave_up]
-            if not active:
-                break
-            for m in active:
-                m.cand_full = to_full(m, m.cand)
-            row = pass_once(active)
-            it += 1
-            for k, m in enumerate(active):
-                ki = np.asarray(m.keep_idx, dtype=int)
-                a_f, b_f, ll_i = _decode_block(row, f"m{k}_", m.p_all)
-                a_i, b_i = a_f[np.ix_(ki, ki)], b_f[ki]
-                m.n_iter += 1
-                if not math.isfinite(ll_i) or ll_i < m.ll_prev - 1e-10 * (
-                    abs(m.ll_prev) + 1.0
-                ):
-                    m.halvings += 1
-                    if m.halvings > 12:
-                        warnings.warn(
-                            f"[dbglm_multi] model {m.key}: step-halving failed; "
-                            "stopping at the last accepted coefficients"
+                spec_aggs.append((f"m{k}_ll", asum(Var(f"m{k}__ll"))))
+                spec_aggs.append((f"m{k}_pearson", asum(Var(f"m{k}__p2"))))
+                cols = ([Lit(1.0)] if icpt_req else []) + [Var(n) for n in m.x]
+                for i in range(len(cols)):
+                    for j in range(i, len(cols)):
+                        spec_aggs.append(
+                            (
+                                f"m{k}_a_{i}_{j}",
+                                asum(Var(f"m{k}__w") * _d(cols[i]) * _d(cols[j])),
+                            )
                         )
-                        m.gave_up = True
-                        m.cand = m.accepted
-                        continue
-                    m.cand = 0.5 * (m.cand + m.prev)
-                    continue
-                m.halvings = 0
-                m.final_a, m.final_ll = a_i, ll_i
-                m.final_pearson = float(row[f"m{k}_pearson"])
-                m.accepted = m.cand
-                if verbose:
-                    print(f"[dbglm_multi] {m.key} iter {m.n_iter}: ll = {ll_i:.10g}")
-                if abs(ll_i - m.ll_prev) <= tol * (abs(ll_i) + 0.1):
-                    m.ll_prev = ll_i
-                    m.converged = True
-                    continue
-                sol = solve_with_fallback(a_i, b_i)
-                m.prev, m.cand = m.cand, sol.betahat
-                m.ll_prev = ll_i
+                    spec_aggs.append(
+                        (f"m{k}_b_{i}", asum(Var(f"m{k}__wz") * _d(cols[i])))
+                    )
+                carry += m.x
+            if first:
+                # per-outcome diagnostics (shared across models with the same y)
+                # saturated ll is PER MODEL (negbin's depends on each model's
+                # theta); min/max/sum diagnostics stay per outcome
+                for k, m in enumerate(active):
+                    yv = _d(Var(m.y))
+                    llsat = m.fam.ll_sat(yv)
+                    proj_exprs.append(
+                        (f"m{k}__sat", _d(llsat if om is None else om * llsat))
+                    )
+                    spec_aggs.append((f"m{k}_ll_sat", asum(Var(f"m{k}__sat"))))
+                for yi, yn in enumerate(dict.fromkeys([m.y for m in active])):
+                    yv = _d(Var(yn))
+                    spec_aggs += [
+                        (f"y{yi}_min", amin(yv)),
+                        (f"y{yi}_max", amax(yv)),
+                        (f"y{yi}_sum", asum(om * yv if om is not None else yv)),
+                    ]
+                    if fam.name == "binomial" and om is None:
+                        from .plans.exprs import Func
 
-        for m in models:
-            if not m.converged and not m.gave_up:
-                warnings.warn(
-                    f"[dbglm_multi] model {m.key}: IRLS did not converge in "
-                    f"{max_iter} iterations"
+                        proj_exprs.append(
+                            (f"y{yi}__bad", Func("abs", (yv * (Lit(1.0) - yv),)))
+                        )
+                        spec_aggs.append(
+                            (f"y{yi}_bad", asum(Var(f"y{yi}__bad")))
+                        )
+                spec_aggs.append(
+                    ("sum_wt", asum(om if om is not None else Lit(1.0)))
                 )
-            m.beta = m.accepted
-
-    fit_lockstep()
-
-    if want_auto_theta:
-        # ---- ONE shared scored pass: every model's Cameron-Trivedi
-        # alpha-hat at its converged poisson mu-hat (glm.py's
-        # _negbin_moment_theta, batched: 2 agg columns per model) ----------
-        aggs = []
-        proj_cols = []
-        for k, m in enumerate(models):
-            y = _d(Var(m.y))
-            eta_x = _eta_expr(to_full(m, m.beta), m.x, icpt_req)
-            eta = off_e + eta_x if off_e is not None else eta_x
-            mu = m.fam.mu(eta)
-            wexp = om if om is not None else Lit(1.0)
-            proj_cols += [
-                (f"t{k}__num", _d(wexp * ((y - mu) * (y - mu) - mu))),
-                (f"t{k}__den", _d(wexp * mu * mu)),
-            ]
-            aggs += [
-                (f"t{k}_num", asum(Var(f"t{k}__num"))),
-                (f"t{k}_den", asum(Var(f"t{k}__den"))),
-            ]
-        carry = dict.fromkeys(
-            sum([m.x for m in models], [])
-            + [m.y for m in models]
-            + [c for c in (offset, weight_col) if c]
-        )
-        trow = run_agg_via_sql(
-            fdf.sparkSession, pass_view, proj_cols, list(carry), aggs
-        )
-        if trow is None:
-            proj = fdf.select(
-                *[to_spark_fast(e).alias(n) for n, e in proj_cols],
-                *[F.col(c) for c in carry],
+                if om is not None:
+                    spec_aggs.append(("wt_min", amin(om)))
+            carry_all = dict.fromkeys(
+                carry
+                + [m.y for m in active]
+                + ([weight_col] if weight_col else [])
             )
-            trow = run_agg(proj, aggs, fast=True)
-        n_passes += 1
-        for k, m in enumerate(models):
-            num, den = float(trow[f"t{k}_num"]), float(trow[f"t{k}_den"])
-            alpha = num / den if den > 0 else float("nan")
-            if not (alpha > 1e-12):
-                raise ValueError(
-                    f"dbglm_multi(family='negbin'): model {m.key} has a "
-                    f"non-positive two-step alpha-hat ({alpha:.3g}) — no "
-                    "Poisson overdispersion. Fit it with family='poisson', "
-                    "or pass a fixed theta= explicitly."
+            proj = fdf.select(
+                *[to_spark(e).alias(n) for n, e in proj_exprs],
+                *[F.col(c) for c in carry_all],
+            )
+            row = run_agg(proj, spec_aggs)
+            n_passes += 1
+            return row
+
+        n_total = sum_wt = 0.0
+        y_order: list = []
+        y_stats: dict = {}
+
+        def to_full(m, b):
+            full = np.zeros(m.p_all)
+            full[np.asarray(m.keep_idx, dtype=int)] = b
+            return full
+
+        def fit_lockstep():
+            """Initial pass (collinearity + validation + saturated ll at each
+            model's CURRENT m.fam) then the IRLS lockstep to convergence."""
+            nonlocal n_total, sum_wt, y_order, y_stats
+            # binomial 0/1 validation rides a dedicated tiny expression set on the
+            # first pass result via y_min/y_max (weights => proportions in [0,1])
+            for m in models:
+                m.cand_full = np.zeros(m.p_all)
+            row0 = pass_once(models, first=True)
+            n_total = float(row0["n_total"])
+            if n_total == 0:
+                raise ValueError("dbglm_multi: zero rows after missing-value filtering")
+            if weight_col is not None and float(row0["wt_min"]) <= 0:
+                raise ValueError("dbglm_multi: weights must be strictly positive")
+            y_order = list(dict.fromkeys([m.y for m in models]))
+            y_stats = {}
+            for yi, yn in enumerate(y_order):
+                y_stats[yn] = dict(
+                    y_min=float(row0[f"y{yi}_min"]),
+                    y_max=float(row0[f"y{yi}_max"]),
+                    sum_y=float(row0[f"y{yi}_sum"]),
                 )
-            m.fam = get_family("negbin", theta=1.0 / alpha)
-            if verbose:
-                print(
-                    f"[dbglm_multi] {m.key} two-step theta-hat = "
-                    f"{1.0 / alpha:.6g}"
-                )
-        # ---- negbin lockstep refit at the per-model FIXED thetas (warm
-        # saturated-ll / collinearity re-derived under the negbin fams) ----
+                if fam.name == "binomial":
+                    lo, hi = y_stats[yn]["y_min"], y_stats[yn]["y_max"]
+                    if lo < 0 or hi > 1:
+                        raise ValueError(
+                            f"dbglm_multi(family='binomial'): outcome {yn} outside "
+                            "[0, 1]"
+                        )
+                    if weight_col is None and float(row0.get(f"y{yi}_bad") or 0.0) > 0:
+                        raise ValueError(
+                            f"dbglm_multi(family='binomial') needs 0/1 outcomes; "
+                            f"{yn} has values outside {{0, 1}}"
+                        )
+                if fam.name in ("poisson", "negbin") and y_stats[yn]["y_min"] < 0:
+                    raise ValueError(
+                        f"dbglm_multi(family={fam.name!r}): outcome {yn} has "
+                        "negative values"
+                    )
+            sum_wt = float(row0["sum_wt"])
+
+            # per-model collinearity from the β=0 blocks + first Newton candidate
+            for k, m in enumerate(models):
+                a0, b0, ll0 = _decode_block(row0, f"m{k}_", m.p_all)
+                collin = detect_collinearity(a0, b0, m.names_all)
+                m.keep_idx = list(collin.keep_idx)
+                m.names = list(collin.keep_names)
+                m.collin_drop = list(collin.drop_names)
+                sol = solve_with_fallback(collin.xtx, collin.xty)
+                m.cand = sol.betahat
+                m.accepted = np.zeros(len(m.keep_idx))
+                m.prev = np.zeros(len(m.keep_idx))
+                m.ll_prev = ll0
+                m.halvings = 0
+                m.converged = False
+                m.gave_up = False
+                m.n_iter = 1
+                m.final_a = collin.xtx
+                m.final_ll = ll0
+                m.final_pearson = float(row0[f"m{k}_pearson"])
+                m.ll_sat = float(row0[f"m{k}_ll_sat"])
+                off0 = 1 if icpt_req else 0
+                m.icpt = icpt_req and 0 in m.keep_idx
+                m.x_kept = [m.x[i - off0] for i in m.keep_idx if i >= off0]
+
+            it = 1
+            while it < max_iter:
+                active = [m for m in models if not m.converged and not m.gave_up]
+                if not active:
+                    break
+                for m in active:
+                    m.cand_full = to_full(m, m.cand)
+                row = pass_once(active)
+                it += 1
+                for k, m in enumerate(active):
+                    ki = np.asarray(m.keep_idx, dtype=int)
+                    a_f, b_f, ll_i = _decode_block(row, f"m{k}_", m.p_all)
+                    a_i, b_i = a_f[np.ix_(ki, ki)], b_f[ki]
+                    m.n_iter += 1
+                    if not math.isfinite(ll_i) or ll_i < m.ll_prev - 1e-10 * (
+                        abs(m.ll_prev) + 1.0
+                    ):
+                        m.halvings += 1
+                        if m.halvings > 12:
+                            warnings.warn(
+                                f"[dbglm_multi] model {m.key}: step-halving failed; "
+                                "stopping at the last accepted coefficients"
+                            )
+                            m.gave_up = True
+                            m.cand = m.accepted
+                            continue
+                        m.cand = 0.5 * (m.cand + m.prev)
+                        continue
+                    m.halvings = 0
+                    m.final_a, m.final_ll = a_i, ll_i
+                    m.final_pearson = float(row[f"m{k}_pearson"])
+                    m.accepted = m.cand
+                    if verbose:
+                        print(f"[dbglm_multi] {m.key} iter {m.n_iter}: ll = {ll_i:.10g}")
+                    if abs(ll_i - m.ll_prev) <= tol * (abs(ll_i) + 0.1):
+                        m.ll_prev = ll_i
+                        m.converged = True
+                        continue
+                    sol = solve_with_fallback(a_i, b_i)
+                    m.prev, m.cand = m.cand, sol.betahat
+                    m.ll_prev = ll_i
+
+            for m in models:
+                if not m.converged and not m.gave_up:
+                    warnings.warn(
+                        f"[dbglm_multi] model {m.key}: IRLS did not converge in "
+                        f"{max_iter} iterations"
+                    )
+                m.beta = m.accepted
+
         fit_lockstep()
 
-    # ---- batched sandwiches at the final βs ------------------------------
-    for m in models:
-        m.meat = None
-        m.n_clusters = None
-    if vcov_type in ("hc1", "cluster", "dk"):
-        n_passes += _batched_glm_meats(
-            fdf, fam, models, icpt_req, offset, weight_col, vcov_type,
-            cluster_vars, hac_lag, n_total, pass_view=pass_view,
-        )
-    if vcov_type == "conley":
-        _batched_glm_conley(
-            fdf, models, icpt_req, offset, weight_col, cluster_vars,
-            conley_opts,
-        )
-        n_passes += 1
+        if want_auto_theta:
+            # ---- ONE shared scored pass: every model's Cameron-Trivedi
+            # alpha-hat at its converged poisson mu-hat (glm.py's
+            # _negbin_moment_theta, batched: 2 agg columns per model) ----------
+            aggs = []
+            proj_cols = []
+            for k, m in enumerate(models):
+                y = _d(Var(m.y))
+                eta_x = _eta_expr(to_full(m, m.beta), m.x, icpt_req)
+                eta = off_e + eta_x if off_e is not None else eta_x
+                mu = m.fam.mu(eta)
+                wexp = om if om is not None else Lit(1.0)
+                proj_cols += [
+                    (f"t{k}__num", _d(wexp * ((y - mu) * (y - mu) - mu))),
+                    (f"t{k}__den", _d(wexp * mu * mu)),
+                ]
+                aggs += [
+                    (f"t{k}_num", asum(Var(f"t{k}__num"))),
+                    (f"t{k}_den", asum(Var(f"t{k}__den"))),
+                ]
+            carry = dict.fromkeys(
+                sum([m.x for m in models], [])
+                + [m.y for m in models]
+                + [c for c in (offset, weight_col) if c]
+            )
+            proj = fdf.select(
+                *[to_spark(e).alias(n) for n, e in proj_cols],
+                *[F.col(c) for c in carry],
+            )
+            trow = run_agg(proj, aggs)
+            n_passes += 1
+            for k, m in enumerate(models):
+                num, den = float(trow[f"t{k}_num"]), float(trow[f"t{k}_den"])
+                alpha = num / den if den > 0 else float("nan")
+                if not (alpha > 1e-12):
+                    raise ValueError(
+                        f"dbglm_multi(family='negbin'): model {m.key} has a "
+                        f"non-positive two-step alpha-hat ({alpha:.3g}) — no "
+                        "Poisson overdispersion. Fit it with family='poisson', "
+                        "or pass a fixed theta= explicitly."
+                    )
+                m.fam = get_family("negbin", theta=1.0 / alpha)
+                if verbose:
+                    print(
+                        f"[dbglm_multi] {m.key} two-step theta-hat = "
+                        f"{1.0 / alpha:.6g}"
+                    )
+            # ---- negbin lockstep refit at the per-model FIXED thetas (warm
+            # saturated-ll / collinearity re-derived under the negbin fams) ----
+            fit_lockstep()
 
-    # negbin: the reported loglik adds the beta-free lgamma terms (one
-    # y-histogram pass per DISTINCT (outcome, theta); deviance stays
-    # constant-free, matching dbglm)
-    for m in models:
-        m.nb_const = 0.0
-    if fam.name == "negbin":
-        from .glm import _negbin_ll_const
-
-        _nb_cache: dict = {}
+        # ---- batched sandwiches at the final βs ------------------------------
         for m in models:
-            ck = (m.y, float(m.fam.theta))
-            if ck not in _nb_cache:
-                shim = type("_Shim", (), {"df": fdf, "y_col": m.y})()
-                _nb_cache[ck] = _negbin_ll_const(shim, weight_col, ck[1])
-                n_passes += 1
-            m.nb_const = _nb_cache[ck]
+            m.meat = None
+            m.n_clusters = None
+        if vcov_type in ("hc1", "cluster", "dk"):
+            n_passes += _batched_glm_meats(
+                fdf, fam, models, icpt_req, offset, weight_col, vcov_type,
+                cluster_vars, hac_lag, n_total,
+            )
+        if vcov_type == "conley":
+            _batched_glm_conley(
+                fdf, models, icpt_req, offset, weight_col, cluster_vars,
+                conley_opts,
+            )
+            n_passes += 1
 
-    if pass_view is not None:
-        try:
-            fdf.sparkSession.catalog.dropTempView(pass_view)
-        except Exception:  # pragma: no cover
-            pass
-    fdf.unpersist()
+        # negbin: the reported loglik adds the beta-free lgamma terms (one
+        # y-histogram pass per DISTINCT (outcome, theta); deviance stays
+        # constant-free, matching dbglm)
+        for m in models:
+            m.nb_const = 0.0
+        if fam.name == "negbin":
+            from .glm import _negbin_ll_const
+
+            _nb_cache: dict = {}
+            for m in models:
+                ck = (m.y, float(m.fam.theta))
+                if ck not in _nb_cache:
+                    shim = type("_Shim", (), {"df": fdf, "y_col": m.y})()
+                    _nb_cache[ck] = _negbin_ll_const(shim, weight_col, ck[1])
+                    n_passes += 1
+                m.nb_const = _nb_cache[ck]
+
+    finally:
+        fdf.unpersist()
 
     # ---- assemble GlmModels ----------------------------------------------
     out = GlmMulti(
@@ -730,7 +700,7 @@ def _batched_glm_conley(
         s = m.fam.score(mu, y)
         if om is not None:
             s = om * s
-        proj_cols.append(to_spark_fast(_d(s)).alias(f"__e{k}"))
+        proj_cols.append(to_spark(_d(s)).alias(f"__e{k}"))
     carry = dict.fromkeys(sum([m.x_kept for m in models], []))
     proj = fdf.select(
         *proj_cols,
@@ -757,14 +727,15 @@ def _batched_glm_conley(
 
 def _batched_glm_meats(
     fdf, fam: _Family, models, icpt_req, offset, weight_col, vcov_type,
-    cluster_vars, hac_lag, n_total, pass_view=None,
+    cluster_vars, hac_lag, n_total,
 ):
     """All models' HC1 / CR1 / DK meats from shared passes (one per
     cluster subset for CGM). Mirrors multi._batched_* with GLM scores."""
     om: Expr | None = _d(Var(weight_col)) if weight_col else None
 
-    def score_exprs(extra_keys):
-        """(name, Expr) score columns + carry names for one shared pass."""
+    def score_proj(extra_keys):
+        """Every model's score column plus the carried columns, for one
+        shared pass."""
         proj_exprs: list[tuple[str, Expr]] = []
         carry: list[str] = []
         for k, m in enumerate(models):
@@ -779,13 +750,9 @@ def _batched_glm_meats(
                 s = om * s
             proj_exprs.append((f"__s{k}", _d(s)))
             carry += m.x_kept
-        carry = list(dict.fromkeys(carry + list(extra_keys)))
-        return proj_exprs, carry
-
-    def score_proj(extra_keys):
-        proj_exprs, carry = score_exprs(extra_keys)
+        carry = dict.fromkeys(carry + list(extra_keys))
         return fdf.select(
-            *[to_spark_fast(e).alias(n) for n, e in proj_exprs],
+            *[to_spark(e).alias(n) for n, e in proj_exprs],
             *[F.col(c) for c in carry],
         )
 
@@ -808,12 +775,7 @@ def _batched_glm_meats(
                         (f"m{k}_{i}_{j}",
                          asum(e * e * _d(cols[i]) * _d(cols[j])))
                     )
-        proj_exprs, carry = score_exprs([])
-        row = run_agg_via_sql(
-            fdf.sparkSession, pass_view, proj_exprs, carry, spec
-        )
-        if row is None:
-            row = run_agg(score_proj([]), spec, fast=True)
+        row = run_agg(score_proj([]), spec)
         for k, m in enumerate(models):
             p = len(model_cols(m))
             meat = np.zeros((p, p))
@@ -831,7 +793,9 @@ def _batched_glm_meats(
             for i, c in enumerate(model_cols(m)):
                 sspec.append((f"s{k}_{i}", asum(Var(f"__s{k}") * _d(c))))
         pdf = (
-            proj.groupBy(F.col(tcol)).agg(*aggs_to_spark_fast(sspec)).toPandas()
+            proj.groupBy(F.col(tcol))
+            .agg(*[agg_to_spark(a).alias(n) for n, a in sspec])
+            .toPandas()
             .sort_values(tcol).reset_index(drop=True)
         )
         for k, m in enumerate(models):
@@ -851,7 +815,7 @@ def _batched_glm_meats(
             for i, c in enumerate(model_cols(m)):
                 score_spec.append((f"s{k}_{i}", asum(Var(f"__s{k}") * _d(c))))
         scores = proj.groupBy(*[F.col(c) for c in keys]).agg(
-            *aggs_to_spark_fast(score_spec)
+            *[agg_to_spark(a).alias(n) for n, a in score_spec]
         )
         outer: list[tuple[str, Agg]] = [
             ("n_clusters", Agg("count_star", None, "long"))
@@ -864,7 +828,7 @@ def _batched_glm_meats(
                         (f"m{k}_{i}_{j}",
                          asum(Var(f"s{k}_{i}") * Var(f"s{k}_{j}")))
                     )
-        row = run_agg(scores, outer, fast=True)
+        row = run_agg(scores, outer)
         g = int(row["n_clusters"])
         meats = []
         for k, m in enumerate(models):

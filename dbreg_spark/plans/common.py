@@ -27,7 +27,6 @@ from .exprs import (
     Agg,
     Cast,
     Expr,
-    Lit,
     Var,
     acountd,
     agg_to_spark,
@@ -35,8 +34,6 @@ from .exprs import (
     amin,
     asum,
     count_star,
-    to_spark,
-    to_sql,
 )
 
 
@@ -182,7 +179,6 @@ def run_agg(
     df: DataFrame,
     spec: list[tuple[str, Agg]],
     fe_cols: list[str] | None = None,
-    fast: bool = False,
 ) -> dict:
     """Execute a single-row aggregation and return it as a plain dict.
 
@@ -202,16 +198,7 @@ def run_agg(
         and all(isinstance(a.expr, Var) and a.expr.name in fe_cols for _, a in cd)
     )
     if not two_level:
-        # fast=True: one F.expr JVM call per aggregate instead of a py4j
-        # round-trip per IR node (exprs.aggs_to_spark_fast's caller
-        # contract: every non-count aggregate is double-typed)
-        if fast:
-            from .exprs import aggs_to_spark_fast
-
-            cols = aggs_to_spark_fast(spec)
-        else:
-            cols = [agg_to_spark(a).alias(name) for name, a in spec]
-        row = df.agg(*cols).collect()[0]
+        row = df.agg(*[agg_to_spark(a).alias(name) for name, a in spec]).collect()[0]
         return row.asDict()
 
     partial_cols = []
@@ -242,65 +229,6 @@ def run_agg(
 
 def agg_select_sql(spec: list[tuple[str, Agg]]) -> str:
     return ",\n  ".join(f"{agg_to_sql(a)} AS {name}" for name, a in spec)
-
-
-def run_agg_via_sql(
-    spark,
-    view: str,
-    proj_cols: list[tuple[str, Expr]],
-    carry_cols: list[str],
-    spec: list[tuple[str, Agg]],
-) -> dict | None:
-    """Projection + single-row aggregation as ONE ``spark.sql`` round-trip
-    (r10, guide §4 — the driver/JVM boundary). The Column-builder path
-    costs 2+ py4j socket round-trips per projected/aggregated column —
-    cProfile measured ~1000 round-trips ≈ 0.7 s of driver latency PER
-    lockstep IRLS pass at sf0.1 — while the whole pass rendered as SQL
-    text submits in one call. The per-column strings are the SAME
-    renderings ``to_spark_fast`` / ``aggs_to_spark_fast`` already feed
-    ``F.expr`` one column at a time, so the analyzed plan (and the
-    result) is identical to the Column path by construction.
-
-    Returns the collected row dict, or None — caller falls back to the
-    Column path — unless every projected expression is top-level
-    CAST(· AS DOUBLE), every identifier/alias is bare-safe, and ``view``
-    names a registered temp view over the same frame."""
-    if view is None:
-        return None
-    names: set[str] = set()
-    from .exprs import _SAFE_IDENT, expr_vars, to_sql
-
-    for n, e in proj_cols:
-        if not (isinstance(e, Cast) and e.to == "double"):
-            return None
-        names.add(n)
-        names.update(expr_vars(e))
-    names.update(carry_cols)
-    for n, a in spec:
-        names.add(n)
-        if a.expr is not None:
-            names.update(expr_vars(a.expr))
-    if not all(_SAFE_IDENT.match(v) for v in names):
-        return None
-    agg_sel = []
-    for n, a in spec:
-        if a.kind in ("sum", "min", "max", "avg") and not a.cast_to:
-            # same double-cast wrapper aggs_to_spark_fast applies (SQL
-            # DECIMAL literal typing cannot drift the result schema)
-            agg_sel.append(f"CAST({agg_to_sql(a)} AS DOUBLE) AS {n}")
-        else:
-            # count_star/count_distinct carry their own result casts in
-            # agg_to_sql — identical to the builder rendering
-            agg_sel.append(f"{agg_to_sql(a)} AS {n}")
-    proj_sel = [f"{to_sql(e)} AS {n}" for n, e in proj_cols] + list(carry_cols)
-    q = (
-        "SELECT "
-        + ", ".join(agg_sel)
-        + " FROM (SELECT "
-        + ", ".join(proj_sel)
-        + f" FROM {view})"
-    )
-    return spark.sql(q).collect()[0].asDict()
 
 
 # --------------------------------------------------------------------------

@@ -1,21 +1,22 @@
-"""Tiny neutral expression IR with two renderers: PySpark Column and ANSI SQL.
+"""One IR, rendered as SQL text in two dialects: Spark executes, DuckDB checks.
 
 The reference engine (grantmcdermott/dbreg) builds SQL strings directly via
 glue templates (reference: R/dbreg.R:724-757, R/sql_model_matrix.R:143-175).
 We instead describe every generated column once, as a small AST, and render it
-twice: to a ``pyspark.sql.Column`` (the primary, distributed execution path)
-and to an ANSI-SQL string that DuckDB can run (the correctness oracle /
-``sql_only`` parity mode).  This keeps a single source of truth for the
-semantics of every emitted expression.
+as SQL text twice: in Spark's dialect, parsed into a ``pyspark.sql.Column``
+by ``F.expr`` (the distributed execution path), and in DuckDB's, which the
+correctness oracle and ``sql_only`` parity mode run. This module is the only
+place an expression becomes a Spark column.
 """
 
 from __future__ import annotations
 
-import re
+import math
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Union
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -142,139 +143,24 @@ def acountd(e: Exprish) -> Agg:
 
 
 # --------------------------------------------------------------------------
-# Spark renderer
+# SQL renderers: one tree walk, two dialects
 # --------------------------------------------------------------------------
 
-
-def to_spark(e: Expr) -> Column:
-    if isinstance(e, Var):
-        return F.col(e.name)
-    if isinstance(e, Lit):
-        return F.lit(e.value)
-    if isinstance(e, BinOp):
-        left, right = to_spark(e.left), to_spark(e.right)
-        if e.op == "*":
-            return left * right
-        if e.op == "+":
-            return left + right
-        if e.op == "-":
-            return left - right
-        if e.op == "/":
-            return left / right
-        raise ValueError(f"unknown op {e.op}")
-    if isinstance(e, Func):
-        args = [to_spark(a) for a in e.args]
-        fn = {
-            "pow": F.pow,
-            "sqrt": F.sqrt,
-            "floor": F.floor,
-            "ln": F.log,  # natural log
-            "log10": F.log10,
-            "least": F.least,
-            "greatest": F.greatest,
-            "abs": F.abs,
-            "round": F.round,
-            "exp": F.exp,
-        }[e.name]
-        return fn(*args)
-    if isinstance(e, OneHot):
-        return F.when(F.col(e.var) == F.lit(e.level), F.lit(1.0)).otherwise(F.lit(0.0))
-    if isinstance(e, CaseGE):
-        cond = to_spark(e.cond_var)
-        c = cond > F.lit(e.knot) if e.strict else cond >= F.lit(e.knot)
-        return F.when(c, to_spark(e.then)).otherwise(F.lit(0.0))
-    if isinstance(e, Cast):
-        return to_spark(e.expr).cast(e.to)
-    raise TypeError(f"unknown expr {e!r}")
-
-
-_SAFE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def expr_vars(e: Expr) -> set[str]:
-    """Every column name referenced anywhere in the IR tree."""
-    out: set[str] = set()
-    stack: list[Expr] = [e]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, Var):
-            out.add(n.name)
-        elif isinstance(n, BinOp):
-            stack += [n.left, n.right]
-        elif isinstance(n, Func):
-            stack += list(n.args)
-        elif isinstance(n, OneHot):
-            out.add(n.var)
-        elif isinstance(n, CaseGE):
-            stack += [n.cond_var, n.then]
-        elif isinstance(n, Cast):
-            stack.append(n.expr)
-    return out
-
-
-def to_spark_fast(e: Expr) -> Column:
-    """Column for ``e`` via ONE JVM call — F.expr over the SQL rendering —
-    instead of one py4j round-trip per IR node. The node-by-node builder
-    measured ~10 s of pure driver socket time for one 4-model IRLS
-    lockstep fit (55k py4j commands; SCALE.md round 9). Exactness
-    contract: the fast path fires only when (a) the top node is
-    CAST(· AS DOUBLE), so SQL's DECIMAL literal typing cannot reach the
-    result type, and (b) every referenced column is a bare-safe
-    identifier (F.expr would need quoting otherwise). Any other shape
-    falls back to :func:`to_spark` — always correct, just slower."""
-    if (
-        isinstance(e, Cast)
-        and e.to == "double"
-        and all(_SAFE_IDENT.match(v) for v in expr_vars(e))
-    ):
-        return F.expr(to_sql(e))
-    return to_spark(e)
-
-
-def aggs_to_spark_fast(spec: list[tuple[str, "Agg"]]) -> list[Column]:
-    """Aliased aggregate Columns, one F.expr JVM call each.
-
-    CALLER CONTRACT: every sum/min/max/avg aggregate in ``spec`` is
-    double-typed (its expr is a double cast or a product/sum of
-    double-cast columns) — the rendering wraps CAST(· AS DOUBLE) so SQL
-    DECIMAL literal typing cannot drift the result schema, and the cast
-    is a no-op on the contract's types. count_star / count_distinct /
-    explicitly-cast aggregates keep the builder path, as does any
-    aggregate referencing a non-bare-safe column name."""
-    out: list[Column] = []
-    for name, a in spec:
-        if (
-            a.kind in ("sum", "min", "max", "avg")
-            and not a.cast_to
-            and all(_SAFE_IDENT.match(v) for v in expr_vars(a.expr))
-        ):
-            out.append(
-                F.expr(f"CAST({agg_to_sql(a)} AS DOUBLE)").alias(name)
-            )
-        else:
-            out.append(agg_to_spark(a).alias(name))
-    return out
-
-
-def agg_to_spark(a: Agg) -> Column:
-    if a.kind == "count_star":
-        c = F.count(F.lit(1))
-    elif a.kind == "count_distinct":
-        c = F.countDistinct(to_spark(a.expr))
-    else:
-        fn = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count}[a.kind]
-        c = fn(to_spark(a.expr))
-    if a.cast_to:
-        c = c.cast(a.cast_to)
-    return c
-
-
-# --------------------------------------------------------------------------
-# ANSI SQL renderer (DuckDB-compatible; also valid Spark SQL)
-# --------------------------------------------------------------------------
+_FUNC_SQL = {"pow": "POWER", "ln": "LN", "log10": "LOG10"}
+_TYPE_SQL = {"double": "DOUBLE", "long": "BIGINT"}
+# the type F.lit gives a numpy scalar (it casts the Python value back)
+_NUMPY_SQL = {
+    "int8": "TINYINT",
+    "int16": "SMALLINT",
+    "int32": "INT",
+    "int64": "BIGINT",
+    "float32": "FLOAT",
+    "float64": "DOUBLE",
+}
 
 
 def _sql_lit(v: object) -> str:
+    """DuckDB literal: floats print with 17 significant digits."""
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     if isinstance(v, float):
@@ -285,41 +171,105 @@ def _sql_lit(v: object) -> str:
     return f"'{s}'"
 
 
-def to_sql(e: Expr) -> str:
+def _spark_lit(v: object) -> str:
+    """Spark literal of the same value and type as ``F.lit(v)``. Floats are
+    typed DOUBLE (an untyped ``0.1`` is DECIMAL in Spark SQL) and strings
+    use Spark's backslash escaping."""
+    if isinstance(v, np.generic):
+        t = _NUMPY_SQL.get(v.dtype.name)
+        s = _spark_lit(v.item())
+        return f"CAST({s} AS {t})" if t else s
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return f"{v!r}D"
+        name = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    if isinstance(v, int):
+        return str(v)
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _spark_ident(name: str) -> str:
+    """``name`` quoted so Spark resolves the column ``F.col(name)`` does:
+    a dot outside backticks separates nested parts, and a backtick-quoted
+    part may hold dots and doubled backticks."""
+    parts, cur, quoted, i = [], "", False, 0
+    while i < len(name):
+        c = name[i]
+        if quoted and c == "`" and name[i + 1 : i + 2] == "`":
+            cur += "`"
+            i += 1
+        elif c == "`":
+            quoted = not quoted
+        elif c == "." and not quoted:
+            parts.append(cur)
+            cur = ""
+        else:
+            cur += c
+        i += 1
+    parts.append(cur)
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _render(e: Expr, spark: bool) -> str:
+    lit = _spark_lit if spark else _sql_lit
     if isinstance(e, Var):
-        return e.name
+        return _spark_ident(e.name) if spark else e.name
     if isinstance(e, Lit):
-        return _sql_lit(e.value)
+        return lit(e.value)
     if isinstance(e, BinOp):
-        return f"({to_sql(e.left)} {e.op} {to_sql(e.right)})"
+        if e.op not in ("*", "+", "-", "/"):
+            raise ValueError(f"unknown op {e.op}")
+        return f"({_render(e.left, spark)} {e.op} {_render(e.right, spark)})"
     if isinstance(e, Func):
-        name = {"pow": "POWER", "ln": "LN", "log10": "LOG10"}.get(e.name, e.name.upper())
-        return f"{name}({', '.join(to_sql(a) for a in e.args)})"
+        name = _FUNC_SQL.get(e.name, e.name.upper())
+        return f"{name}({', '.join(_render(a, spark) for a in e.args)})"
     if isinstance(e, OneHot):
-        return f"CASE WHEN {e.var} = {_sql_lit(e.level)} THEN 1.0 ELSE 0.0 END"
+        var = _spark_ident(e.var) if spark else e.var
+        return f"CASE WHEN {var} = {lit(e.level)} THEN {lit(1.0)} ELSE {lit(0.0)} END"
     if isinstance(e, CaseGE):
         op = ">" if e.strict else ">="
         return (
-            f"CASE WHEN {to_sql(e.cond_var)} {op} {_sql_lit(float(e.knot))} "
-            f"THEN {to_sql(e.then)} ELSE 0.0 END"
+            f"CASE WHEN {_render(e.cond_var, spark)} {op} {lit(float(e.knot))} "
+            f"THEN {_render(e.then, spark)} ELSE {lit(0.0)} END"
         )
     if isinstance(e, Cast):
-        to = {"double": "DOUBLE", "long": "BIGINT"}.get(e.to, e.to.upper())
-        return f"CAST({to_sql(e.expr)} AS {to})"
+        return f"CAST({_render(e.expr, spark)} AS {_TYPE_SQL.get(e.to, e.to.upper())})"
     raise TypeError(f"unknown expr {e!r}")
 
 
-def agg_to_sql(a: Agg) -> str:
+def _render_agg(a: Agg, spark: bool) -> str:
     if a.kind == "count_star":
         s = "COUNT(*)"
     elif a.kind == "count_distinct":
-        s = f"COUNT(DISTINCT {to_sql(a.expr)})"
+        s = f"COUNT(DISTINCT {_render(a.expr, spark)})"
     else:
-        s = f"{a.kind.upper()}({to_sql(a.expr)})"
+        s = f"{a.kind.upper()}({_render(a.expr, spark)})"
     if a.cast_to:
-        to = {"double": "DOUBLE", "long": "BIGINT"}.get(a.cast_to, a.cast_to.upper())
-        s = f"CAST({s} AS {to})"
+        s = f"CAST({s} AS {_TYPE_SQL.get(a.cast_to, a.cast_to.upper())})"
     return s
+
+
+def to_spark(e: Expr) -> Column:
+    """``e`` as a Spark column: its Spark SQL text, parsed by ``F.expr``."""
+    return F.expr(_render(e, spark=True))
+
+
+def agg_to_spark(a: Agg) -> Column:
+    return F.expr(_render_agg(a, spark=True))
+
+
+def to_sql(e: Expr) -> str:
+    """``e`` as DuckDB SQL text (the oracle and ``sql_only`` output)."""
+    return _render(e, spark=False)
+
+
+def agg_to_sql(a: Agg) -> str:
+    return _render_agg(a, spark=False)
 
 
 # --------------------------------------------------------------------------

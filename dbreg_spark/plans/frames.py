@@ -463,26 +463,16 @@ def build_demeaned_frame_iterative(
         staged = out.observe(obs, F.max(chk).alias("d"))
         return staged.select(*keys, *vals), obs
 
-    import os as _os
-    import time as _time
-
-    _dbg = _os.environ.get("SPARK_GRAFT_DEBUG") == "1"
     cur = base.df
     prev_ids: set = set()
     scale = None
     prev_delta = None
-    for _sweep_i in range(max_sweeps):
-        _t0 = _time.perf_counter()
+    for _ in range(max_sweeps):
         ids0 = _persistent_ids()
         staged, obs = one_sweep_observed(cur)
         cur = staged.localCheckpoint(eager=True)
         my_ids = _persistent_ids() - ids0
         delta = float(obs.get["d"] or 0.0)
-        if _dbg:
-            print(
-                f"[demean_iter] sweep {_sweep_i}: {_time.perf_counter() - _t0:.3f}s "
-                f"delta={delta:.3e}"
-            )
         _release(prev_ids)
         prev_ids = my_ids
         if scale is None:

@@ -153,7 +153,7 @@ def cluster_meat(
             outer_spec.append(
                 (f"m_{i}_{j}", asum(Var(f"score_{i}") * Var(f"score_{j}")))
             )
-    row = run_agg(scores, outer_spec, fast=True)
+    row = run_agg(scores, outer_spec)
     g = int(row["n_clusters"])
     meat = np.zeros((p, p))
     for i in range(p):

@@ -192,6 +192,28 @@ def load_tables(spark: SparkSession, sf_dir: str, register: bool = True) -> dict
 # --------------------------------------------------------------------------
 
 
+def _estimated_bytes(df: DataFrame) -> int | None:
+    """Output size estimate: the optimized plan's ``sizeInBytes``, capped by
+    its leaf relations' rows at the output row width. Without column
+    statistics Spark sizes a join as the PRODUCT of its inputs' sizes (1k
+    rows joined to three 10-row tables estimate at 5 GB); the cap sizes it
+    as if every join emitted its inputs' rows, and leaves join-free plans,
+    whose estimate is at most the cap, unchanged."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        rows = 0.0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            # Spark's own per-row size: 8 bytes of overhead + column widths
+            width = 8 + leaf.schema().defaultSize()
+            rows += int(leaf.stats().sizeInBytes()) / width
+        cap = rows * (8 + plan.schema().defaultSize())
+        return int(min(int(plan.stats().sizeInBytes()), cap))
+    except Exception:
+        return None
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -217,10 +239,7 @@ def write_parquet(
     tasks instead of landing as one oversized file written by one
     straggler task, while small partition values keep a single file. The
     salt is a content hash — deterministic under task retries."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = None
+    size = _estimated_bytes(df)
     if size is not None and size > 0:
         n_files = max(1, min(100_000, round(size / (target_file_mb * (1 << 20)))))
         if partition_by:

@@ -39,7 +39,7 @@ from .plans.common import (
     moment_spec,
     resolve_source,
 )
-from .plans.exprs import Var, agg_to_sql, aggs_to_spark_fast
+from .plans.exprs import Var, agg_to_spark, agg_to_sql
 from .plans.frames import _wmean_col, build_base_frame
 from .solve import (
     compute_vcov,
@@ -384,7 +384,7 @@ def _grouped_fit(
     )
     rows = (
         frame_df.groupBy(split)
-        .agg(*aggs_to_spark_fast(spec))
+        .agg(*[agg_to_spark(a).alias(n) for n, a in spec])
         .limit(split_nmax + 1)
         .collect()
     )

@@ -40,7 +40,7 @@ from .plans.exprs import (
     Func,
     Lit,
     Var,
-    aggs_to_spark_fast,
+    agg_to_spark,
     amax,
     amin,
     asum,
@@ -143,7 +143,11 @@ def _grouped_pass(
             spec.append((f"a_{i}_{k}", asum(wv * _d(cols[i]) * _d(cols[k]))))
     for i in range(p):
         spec.append((f"b_{i}", asum(Var("__wz") * _d(cols[i]))))
-    rows = proj.groupBy("__sp").agg(*aggs_to_spark_fast(spec)).collect()
+    rows = (
+        proj.groupBy("__sp")
+        .agg(*[agg_to_spark(a).alias(n) for n, a in spec])
+        .collect()
+    )
     return {r["__sp"]: r.asDict() for r in rows}, p
 
 
@@ -459,7 +463,11 @@ def _grouped_glm_meat(
                 mspec.append(
                     (f"m_{i}_{k}", asum(sv * sv * _d(cols[i]) * _d(cols[k])))
                 )
-        rows = proj.groupBy("__sp").agg(*aggs_to_spark_fast(mspec)).collect()
+        rows = (
+            proj.groupBy("__sp")
+            .agg(*[agg_to_spark(a).alias(n) for n, a in mspec])
+            .collect()
+        )
         meats = {}
         for r in rows:
             lvl = r["__sp"]
@@ -483,7 +491,7 @@ def _grouped_glm_meat(
     sv = Var("__s")
     sspec = [(f"s_{i}", asum(sv * _d(c))) for i, c in enumerate(cols)]
     scores_df = proj.groupBy("__sp", *cluster_vars).agg(
-        *aggs_to_spark_fast(sspec)
+        *[agg_to_spark(a).alias(n) for n, a in sspec]
     )
     cap = 2_000_000
     rows = scores_df.limit(cap + 1).collect()

@@ -74,3 +74,32 @@ def test_dbreg_strategies_leave_no_cache(spark, tables):
     dbreg("l_extendedprice ~ l_quantity | l_returnflag + l_linestatus + l_linenumber",
           li, strategy="demean")
     assert _cached_ids(spark) - before == set()
+
+
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_raising_glm_fits_leave_no_views_or_cache(spark):
+    """A GLM fit that raises (binomial on a 0/1/2 outcome) must leave no
+    temp view behind and nothing in the session's cache manager."""
+    from dbreg_spark import dbglm
+    from dbreg_spark.multi_glm import dbglm_multi
+
+    rng = np.random.default_rng(3)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"y": np.arange(60) % 3, "x": rng.normal(size=60), "z": rng.normal(size=60)}
+        )
+    )
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    views = _temp_views(spark)
+    for fit in (
+        lambda: dbglm("y ~ x", df, family="binomial"),
+        lambda: dbglm_multi("y ~ csw(x, z)", df, family="binomial"),
+    ):
+        with pytest.raises(ValueError, match="outside"):
+            fit()
+        assert _temp_views(spark) == views
+        assert cache_manager.isEmpty()

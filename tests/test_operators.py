@@ -716,6 +716,31 @@ def test_write_parquet_hot_partition_spreads_files(spark, tmp_path):
     assert back.count() == 60_000
 
 
+def test_write_parquet_join_estimate_does_not_inflate_files(spark, tmp_path):
+    """Spark sizes a join without column stats as the product of its
+    inputs; a ~1k-row join-heavy frame must still write no more files
+    than its input has partitions (not one file per 256 MB of a
+    multi-GB estimate)."""
+    import glob as _g
+
+    import pyspark.sql.functions as F
+
+    from dbreg_spark.sources.io import write_parquet
+
+    src = spark.range(1000, numPartitions=4).withColumn("k", F.col("id") % 10)
+    dims = [
+        spark.range(10).select(F.col("id").alias("k"), F.lit(float(i)).alias(f"v{i}"))
+        for i in range(3)
+    ]
+    df = src
+    for d in dims:
+        df = df.join(d, "k")
+    out = str(tmp_path / "join_out")
+    write_parquet(df, out)
+    assert len(_g.glob(out + "/*.parquet")) <= src.rdd.getNumPartitions()
+    assert spark.read.parquet(out).count() == 1000
+
+
 def test_write_parquet_null_partition_value_kept(spark, tmp_path):
     """Rows whose partition column is NULL must survive the skew-aware
     salt join (null-safe equality) and land in the hive default
