@@ -28,6 +28,7 @@ from .exprs import (
     Cast,
     Expr,
     Var,
+    _spark_ident,
     acountd,
     agg_to_spark,
     agg_to_sql,
@@ -107,13 +108,11 @@ def not_null_filter_sql(vars_: list[str]) -> str:
 
 def filter_missing(df: DataFrame, vars_: list[str]) -> DataFrame:
     """IS-NOT-NULL filter on model variables (reference: R/dbreg.R:451-468).
-    Expressed as a conjunction so it reaches the parquet scan as pushed
-    filters."""
-    cond = None
-    for v in vars_:
-        c = F.col(v).isNotNull()
-        cond = c if cond is None else (cond & c)
-    return df.where(cond) if cond is not None else df
+    One Spark SQL conjunction, handed over in one call, so it reaches the
+    parquet scan as pushed filters."""
+    if not vars_:
+        return df
+    return df.where(" AND ".join(f"{_spark_ident(v)} IS NOT NULL" for v in vars_))
 
 
 # --------------------------------------------------------------------------

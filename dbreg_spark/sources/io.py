@@ -11,8 +11,8 @@ parquet footer via pyarrow and rebuilds proper timestamp columns
 from __future__ import annotations
 
 import glob
+import logging
 import os
-import sys
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -31,15 +31,47 @@ TPCH_TABLES = [
 ]
 
 
+# The engine's session defaults, applied by :func:`get_session` to every
+# session it builds. Keys are Spark config names, values their settings.
+SESSION_DEFAULTS = {
+    # parquet TIMESTAMP(NANOS) columns surface as BIGINT nanoseconds
+    # (repaired by load_parquet) instead of failing at action time
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # runtime re-planning: partition coalescing and skew-join handling
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Arrow-accelerated pandas interchange
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Compiled whole-stage classes live in one JVM-wide LRU, sized when
+    # the JVM first generates code. Spark's 100 entries are less than one
+    # pass over the estimators: 13 benchmark fits need about 230 classes,
+    # the dedup operators about 105, so at 100 every repeated fit
+    # recompiles all of its code (about 2.5 s of Janino time per pass
+    # over the 13). 1,000 is over 4x the larger working set; a class is a
+    # few KB of Metaspace.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
+
+_log = logging.getLogger("dbreg_spark")
+
+
 def get_session(
     app_name: str = "dbreg_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's default tuning:
-    AQE on (runtime re-planning, skew-join handling), nanos-parquet
-    compatibility, and Arrow-accelerated pandas interchange.
+    """Build (or fetch) a SparkSession with the engine's defaults,
+    :data:`SESSION_DEFAULTS`: AQE on (runtime re-planning, skew-join
+    handling), nanos-parquet compatibility, Arrow-accelerated pandas
+    interchange, and a generated-code cache that holds every query shape
+    the estimators compile.
+
+    The code cache is JVM-wide and its size is fixed when the JVM first
+    generates code, so it only takes effect if this call creates the
+    first session. A session built elsewhere should set
+    ``spark.sql.codegen.cache.maxEntries`` before its first query;
+    otherwise every repeated fit recompiles its code.
 
     Local mode runs everything in the driver JVM, whose 1g default heap
     starves N concurrent hash-aggregation tasks of execution memory
@@ -49,13 +81,7 @@ def get_session(
     ``driver_memory`` or ``$SPARK_GRAFT_DRIVER_MEM``). On a real cluster
     executor memory comes from the deployment, not from here."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    b = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    )
+    b = SparkSession.builder.appName(app_name).config(map=SESSION_DEFAULTS)
     if master:
         b = b.master(master)
     elif not SparkSession.getActiveSession():
@@ -78,11 +104,11 @@ def get_session(
             # falls back to Spark's own dir, and two "identical" local
             # runs can differ 10x for environment reasons — make which
             # mode a run used greppable from its log.
-            print(
-                f"[dbreg-spark] spark.local.dir -> {local_dir} "
+            _log.warning(
+                "[dbreg-spark] spark.local.dir -> %s "
                 "(local-mode shuffle/spill on tmpfs; override with "
                 "$SPARK_GRAFT_LOCAL_DIR)",
-                file=sys.stderr,
+                local_dir,
             )
     if shuffle_partitions:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -198,16 +224,25 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     statistics Spark sizes a join as the PRODUCT of its inputs' sizes (1k
     rows joined to three 10-row tables estimate at 5 GB); the cap sizes it
     as if every join emitted its inputs' rows, and leaves join-free plans,
-    whose estimate is at most the cap, unchanged."""
+    whose estimate is at most the cap, unchanged.
+
+    A leaf Spark cannot size (a frame built from an RDD) reports
+    ``spark.sql.defaultSizeInBytes``; the output size is then unknown
+    (None), and the write keeps the input partitioning."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = conf.defaultSizeInBytes()
         leaves = plan.collectLeaves()
         rows = 0.0
         for i in range(leaves.size()):
             leaf = leaves.apply(i)
+            size = int(leaf.stats().sizeInBytes())
+            if size >= unknown:
+                return None
             # Spark's own per-row size: 8 bytes of overhead + column widths
             width = 8 + leaf.schema().defaultSize()
-            rows += int(leaf.stats().sizeInBytes()) / width
+            rows += size / width
         cap = rows * (8 + plan.schema().defaultSize())
         return int(min(int(plan.stats().sizeInBytes()), cap))
     except Exception:

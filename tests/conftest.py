@@ -44,13 +44,20 @@ TABLES = [
 
 @pytest.fixture(scope="session")
 def spark():
+    """The library's session defaults plus the suite's own settings: local
+    sizing, and pandas interchange without Arrow. The suite's NaN and
+    array-column tests build frames from pandas and read them back under
+    the row-by-row conversion, which keeps NaN as NaN; Arrow turns a
+    pandas NaN into NULL and an array cell into a numpy array."""
+    from dbreg_spark.sources.io import SESSION_DEFAULTS
+
     s = (
         SparkSession.builder.master("local[4]")
         .appName("dbreg-spark-tests")
+        .config(map=SESSION_DEFAULTS)
+        .config("spark.sql.execution.arrow.pyspark.enabled", "false")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", "4g")
         .getOrCreate()
     )

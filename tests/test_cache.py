@@ -103,3 +103,75 @@ def test_raising_glm_fits_leave_no_views_or_cache(spark):
             fit()
         assert _temp_views(spark) == views
         assert cache_manager.isEmpty()
+
+
+def _compiles(spark) -> int:
+    """Janino compiles in this JVM so far: Spark's own CodegenMetrics
+    counter, which records one sample per generated class compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_repeated_fits_compile_no_new_code(spark):
+    """Compiled whole-stage classes are cached per JVM, keyed by their
+    source. Ten distinct fits need well over Spark's default 100 cache
+    entries; with the session's cache sized for them, fitting them all a
+    second time compiles (almost) nothing new. With a 100-entry cache the
+    first fits' classes are evicted before their next use and the second
+    round recompiles about as much as the first."""
+    from dbreg_spark import (
+        dbbinsreg,
+        dbglm,
+        dbiv,
+        dbreg_multi,
+        dbreg_split,
+    )
+
+    rng = np.random.default_rng(11)
+    n = 600
+    x1, x2, z = rng.normal(size=n), rng.normal(size=n), rng.normal(size=n)
+    f1, f2, f3 = rng.integers(0, 3, n), rng.integers(0, 2, n), rng.integers(0, 7, n)
+    eta = 0.2 + 0.5 * x1 - 0.3 * x2
+    pdf = pd.DataFrame(
+        {
+            "y": 1 + x1 - x2 + 0.3 * f1 + rng.normal(size=n),
+            "y2": 2 - x1 + 0.1 * f3 + rng.normal(size=n),
+            "x1": x1 + 0.5 * z,
+            "x2": x2,
+            "z": z,
+            "f1": [f"a{k}" for k in f1],
+            "f2": [f"b{k}" for k in f2],
+            "f3": f3,
+            "seg": rng.integers(0, 5, n),
+            "b": (rng.uniform(size=n) < 1 / (1 + np.exp(-eta))).astype("int64"),
+            "cnt": rng.poisson(np.exp(eta)),
+        }
+    )
+    df = spark.createDataFrame(pdf).cache()
+    df.count()
+    fits = [
+        lambda: dbreg("y ~ x1 + x2 | f1 + f2", df, strategy="compress", vcov="hc1"),
+        lambda: dbreg("y ~ x1 + x2 | f1 + f2", df, strategy="demean", vcov="hc1"),
+        lambda: dbreg("y ~ x1 + x2 | f1 + f2 + f3", df, strategy="demean", vcov="~seg"),
+        lambda: dbreg("y ~ x1 + x2 | f1", df, strategy="mundlak", vcov="~seg"),
+        lambda: dbglm("b ~ x1 + x2", df, family="binomial", vcov="hc1"),
+        lambda: dbglm("cnt ~ x1 + x2 | f1", df, family="poisson", vcov="~seg"),
+        lambda: dbbinsreg("y ~ x1", df, points=(0, 0), nbins=10, vcov="hc1"),
+        lambda: dbiv("y ~ x2 | x1 ~ z", df, vcov="~seg"),
+        lambda: dbreg_multi("c(y, y2) ~ x1 + csw(x2, f3)", df, vcov="hc1",
+                            strategy="moments"),
+        lambda: dbreg_split("y ~ x1 + x2", df, split="seg", strategy="moments",
+                            vcov="~f1"),
+    ]
+    try:
+        rounds = []
+        for _ in range(2):
+            before = _compiles(spark)
+            for fit in fits:
+                fit()
+            rounds.append(_compiles(spark) - before)
+    finally:
+        df.unpersist()
+    first, second = rounds
+    assert first > 100, rounds  # the working set exceeds Spark's default
+    assert second <= 12, rounds

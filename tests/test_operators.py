@@ -741,6 +741,25 @@ def test_write_parquet_join_estimate_does_not_inflate_files(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1000
 
 
+def test_write_parquet_unsized_leaf_keeps_input_partitions(spark, tmp_path):
+    """A frame built from an RDD has no size estimate: Spark reports
+    ``spark.sql.defaultSizeInBytes`` (about 9.2e18 bytes) for it. A
+    100-row such frame must write no more files than it has input
+    partitions, not one file per 256 MB of that default."""
+    import glob as _g
+
+    from dbreg_spark.sources.io import write_parquet
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i, float(i)) for i in range(100)], 3),
+        "id long, v double",
+    )
+    out = str(tmp_path / "rdd_out")
+    write_parquet(df, out)
+    assert len(_g.glob(out + "/*.parquet")) <= df.rdd.getNumPartitions()
+    assert spark.read.parquet(out).count() == 100
+
+
 def test_write_parquet_null_partition_value_kept(spark, tmp_path):
     """Rows whose partition column is NULL must survive the skew-aware
     salt join (null-safe equality) and land in the hive default

@@ -46,6 +46,26 @@ def test_moments_plan_single_exchange_pushdown(tables):
     assert "SortMergeJoin" not in plan and "Window" not in plan
 
 
+def test_filter_missing_pushes_every_not_null_to_scan(spark, tmp_path):
+    """``filter_missing`` hands Spark one SQL predicate string; each of its
+    IS NOT NULL terms must still reach the parquet scan as a pushed
+    filter, including a column whose name needs quoting."""
+    from dbreg_spark.plans.common import filter_missing
+
+    path = str(tmp_path / "nulls.parquet")
+    spark.createDataFrame(
+        [(1.0, None, 3.0, 4.0), (None, 2.0, 3.0, 4.0), (1.0, 2.0, 3.0, 4.0)],
+        "a double, b double, `x col` double, unused double",
+    ).write.parquet(path)
+    df = filter_missing(spark.read.parquet(path), ["a", "b", "x col"])
+    plan = _formatted(df)
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln][0]
+    for col in ("a", "b", "`x col`"):
+        assert f"IsNotNull({col})" in pushed, pushed
+    assert "unused" not in pushed
+    assert df.count() == 1
+
+
 def test_demean_plan_broadcasts_means(tables):
     df, _sql = build_plan(FML, tables["lineitem"], strategy="demean")
     plan = _formatted(df)

@@ -1,8 +1,9 @@
 """Driver<->JVM round trips per fit. Every py4j command a fit sends (bar
 memory releases) is counted by patching ``GatewayClient.send_command``.
 Each bound is the count measured when the IR reached Spark as SQL text
-(one ``F.expr`` per column), plus 20%: a per-node Column builder, which
-costs one or more round trips per IR node, cannot come back unnoticed."""
+(one ``F.expr`` per column, one predicate string per missing-value
+filter), plus 20%: a per-node Column builder, which costs one or more
+round trips per IR node, cannot come back unnoticed."""
 
 from __future__ import annotations
 
@@ -15,8 +16,8 @@ from py4j.protocol import MEMORY_COMMAND_NAME
 from dbreg_spark import dbglm, dbreg
 
 # measured counts (local[4] test session, the frame below)
-COMPRESS_HC1 = 325
-LOGIT = 1770
+COMPRESS_HC1 = 237
+LOGIT = 1676
 
 
 @pytest.fixture(scope="module")
