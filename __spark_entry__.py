@@ -548,8 +548,8 @@ def _diag_wooldridge_plan(spark: SparkSession):
 
 def _meat_hc3_plan(spark: SparkSession):
     """(agg_df, oracle_sql) for the HC3 leverage-corrected meat pass
-    (plans/meat.py:hck_meat's algebra at a FIXED beta and a FIXED literal
-    inverse-Gram): h = quadratic form in the design columns, psi2 =
+    (plans/meat.py:sandwich_meat's HC3 algebra at a FIXED beta and a
+    FIXED literal inverse-Gram): h = quadratic form in the design columns, psi2 =
     u^2/(1-h)^2 (squared as (1-h)*(1-h) — POWER() differs by 1 ulp across
     engines), meat = upper-triangular psi2-weighted cross products."""
     b0, b1, b2 = MEAT_BETA

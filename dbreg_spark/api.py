@@ -13,6 +13,8 @@ statistics ever reach the driver, where numpy solves the normal equations.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -38,7 +40,14 @@ from .plans.frames import (
     build_demeaned_frame_iterative,
     build_mundlak_frame,
 )
-from .plans.meat import cluster_meat, count_nested_fe_levels, dk_meat, hc1_meat
+from .plans.meat import (
+    MEAT_KIND,
+    cgm_combine,
+    count_nested_fe_levels,
+    fe_leverage,
+    ols_block,
+    sandwich_meat,
+)
 from .solve import (
     compute_vcov,
     detect_collinearity,
@@ -47,6 +56,8 @@ from .solve import (
     solve_with_fallback,
     tss_from_moments,
 )
+
+_log = logging.getLogger("dbreg_spark")
 
 
 def dbreg(
@@ -163,7 +174,7 @@ def dbreg(
     if vcov_type in ("hc2", "hc3"):
         # leverage needs row-level quadratic forms: cells (compress) drop
         # rows; mundlak's design leverage is not the LSDV leverage; the
-        # 1-FE LSDV hat matrix decomposes exactly (plans/meat.py:hck_meat)
+        # 1-FE LSDV hat matrix decomposes exactly (plans/meat.py:fe_leverage)
         # but k >= 2 absorbed FEs have no closed decomposition
         if len(parsed.fe) > 1:
             raise NotImplementedError(
@@ -320,48 +331,27 @@ def _cluster_label(cluster_vars):
     return "+".join(cluster_vars) if cluster_vars else None
 
 
-def _cluster_meat_any(
-    frame, betahat, kept_x, icpt, cluster_vars, n_total, n_params,
-    score_names=None, score_intercept=None, weight_col=None,
+def _linear_meat(
+    frame, vcov_type, betahat, x, icpt, keys, weight_col=None, hac_lag=None,
+    conley_opts=None, xtx_inv=None, fe_col=None, score_names=None,
+    score_intercept=None,
 ):
-    """Single- or multiway-cluster meat.
-
-    Multiway (Cameron-Gelbach-Miller): V = Σ_S (−1)^{|S|+1} V_S over the
-    non-empty subsets S of the cluster variables, each V_S a CR1 sandwich
-    clustered on the interaction of S. Returned as an *effective* meat
-    scaled so that compute_vcov's single CR1 formula (with G = min
-    single-variable G, the conventional reporting choice) reproduces the
-    component sum exactly. Each component is one groupBy pass — 2^k − 1
-    passes for k cluster variables (k ≤ 3)."""
-    from itertools import combinations
-
-    if len(cluster_vars) == 1:
-        return cluster_meat(
-            frame, betahat, kept_x, intercept=icpt, cluster_col=cluster_vars[0],
-            score_names=score_names, score_intercept=score_intercept,
-            weight_col=weight_col,
-        )
-    comps = []
-    g_single = {}
-    for r in range(1, len(cluster_vars) + 1):
-        for S in combinations(cluster_vars, r):
-            meat_S, g_S, _sql = cluster_meat(
-                frame, betahat, kept_x, intercept=icpt, cluster_col=list(S),
-                score_names=score_names, score_intercept=score_intercept,
-                weight_col=weight_col,
-            )
-            comps.append((r, meat_S, g_S))
-            if r == 1:
-                g_single[S[0]] = g_S
-    g_min = min(g_single.values())
-    scale_ref = (g_min / (g_min - 1)) * (n_total / (n_total - n_params))
-    meat_eff = None
-    for r, meat_S, g_S in comps:
-        sign = 1.0 if r % 2 == 1 else -1.0
-        scale_S = (g_S / (g_S - 1)) * (n_total / (n_total - n_params))
-        term = sign * (scale_S / scale_ref) * meat_S
-        meat_eff = term if meat_eff is None else meat_eff + term
-    return meat_eff, g_min, None
+    """(meat, G or T) of a linear fit from the sandwich kernel, or (None,
+    None) when the vcov needs no meat. The score is w·(y − x'β̂) over the
+    kept columns (``score_names``: the Z columns of 2SLS). HC2/HC3 add the
+    leverage from ``xtx_inv``, plus the exact one-FE term for ``fe_col``."""
+    kind = MEAT_KIND.get(vcov_type)
+    if kind is None:
+        return None, None
+    src, h_extra = frame, None
+    if vcov_type in ("hc2", "hc3") and fe_col is not None:
+        src, h_extra = fe_leverage(frame.df, fe_col, weight_col)
+    block = ols_block(
+        frame.y_col, betahat, x, icpt, weight_col, score_names,
+        score_intercept, xtx_inv, vcov_type, h_extra,
+    )
+    res = sandwich_meat(src, [block], kind, keys or (), lag=hac_lag, conley=conley_opts)
+    return res.one()
 
 
 def _choose_strategy(source, parsed, strategy, compress_ratio, compress_nmax, verbose):
@@ -378,7 +368,7 @@ def _choose_strategy(source, parsed, strategy, compress_ratio, compress_nmax, ve
         fail_ratio = cr_est is not None and cr_est > compress_ratio
         fail_nmax = comp_size is not None and comp_size > compress_nmax
         if verbose:
-            print(
+            _log.info(
                 f"[dbreg] auto: compression ratio {cr_est:.4g} "
                 f"({'exceeds' if fail_ratio else 'satisfies'} {compress_ratio}); "
                 f"continuous regressors: {any_continuous}"
@@ -401,7 +391,7 @@ def _choose_strategy(source, parsed, strategy, compress_ratio, compress_nmax, ve
             # iterated-demeaning path absorbs the FEs exactly
             chosen = "demean" if (fail_ratio or fail_nmax) else "compress"
         if verbose:
-            print(f"[dbreg] auto decision: {chosen}")
+            _log.info(f"[dbreg] auto decision: {chosen}")
 
     # guard unsupported combos (reference: R/dbreg.R:674-695)
     if chosen == "moments" and len(fe) > 0:
@@ -557,42 +547,14 @@ def _execute_moments(
     p = len(collin.keep_names)
     df_res = max(n_total - p, 1)
 
-    meat = n_clusters = None
     kept_x = [n for n in frame.x_cols if standardize_coef_names(n) in collin.keep_names]
     # the pivoted QR may drop the intercept itself (e.g. a constant regressor
     # column wins its pivot) — the meat residual must use the kept layout
     icpt = "(Intercept)" in collin.keep_names
-    if vcov_type == "hc1":
-        meat, _ = hc1_meat(
-            frame, sol.betahat, kept_x, intercept=icpt, weight_col=weight_col
-        )
-    elif vcov_type in ("hc2", "hc3"):
-        from .plans.meat import hck_meat
-
-        meat = hck_meat(
-            frame, sol.betahat, kept_x, intercept=icpt,
-            xtx_inv=sol.xtx_inv, kind=vcov_type, weight_col=weight_col,
-        )
-    elif vcov_type == "cluster":
-        meat, n_clusters, _ = _cluster_meat_any(
-            frame, sol.betahat, kept_x, icpt, cluster_var, n_total, p,
-            weight_col=weight_col,
-        )
-    elif vcov_type == "dk":
-        meat, n_clusters, _lag, _ = dk_meat(
-            frame, sol.betahat, kept_x, intercept=icpt,
-            time_col=cluster_var[0], lag=hac_lag, weight_col=weight_col,
-        )
-    elif vcov_type == "conley":
-        from .plans.conley import conley_meat
-
-        cutoff, kernel, distance = conley_opts
-        meat = conley_meat(
-            frame, sol.betahat, kept_x, intercept=icpt,
-            lat_col=cluster_var[0], lon_col=cluster_var[1],
-            cutoff=cutoff, kernel=kernel, distance=distance,
-            weight_col=weight_col,
-        )
+    meat, n_clusters = _linear_meat(
+        frame, vcov_type, sol.betahat, kept_x, icpt, cluster_var, weight_col,
+        hac_lag, conley_opts, xtx_inv=sol.xtx_inv,
+    )
 
     if vcov_type == "cr3":
         from .boot import cr3_vcov
@@ -768,48 +730,17 @@ def _finish_demean(
             df_fe = n_fe1 + n_fe2 - comps
     df_res = max(n_total - p_kept - df_fe, 1)
 
-    meat = n_clusters = None
     n_params_cluster = p_kept + df_fe
     kept_x = [n for n in frame.x_cols if standardize_coef_names(n) in collin.keep_names]
-    if vcov_type == "hc1":
-        meat, _ = hc1_meat(
-            frame, sol.betahat, kept_x, intercept=False, weight_col=weight_col
-        )
-    elif vcov_type in ("hc2", "hc3"):
-        from .plans.meat import hck_meat
-
-        # exact 1-FE LSDV leverage: w_i/W_g + within quadratic form
-        # (k >= 2 FEs refused upstream in dbreg)
-        meat = hck_meat(
-            frame, sol.betahat, kept_x, intercept=False,
-            xtx_inv=sol.xtx_inv, kind=vcov_type, weight_col=weight_col,
-            fe_col=fe[0],
-        )
-    elif vcov_type == "cluster":
-        meat, n_clusters, _ = _cluster_meat_any(
-            frame, sol.betahat, kept_x, False, cluster_var, n_total,
-            n_params_cluster, weight_col=weight_col,
-        )
-        if ssc == "nested":
-            if len(cluster_var) > 1:
-                raise ValueError("ssc='nested' is not defined for multiway clustering")
-            nested = count_nested_fe_levels(base.df, fe, cluster_var[0])
-            n_params_cluster = p_kept + df_fe - nested
-    elif vcov_type == "dk":
-        meat, n_clusters, _lag, _ = dk_meat(
-            frame, sol.betahat, kept_x, intercept=False,
-            time_col=cluster_var[0], lag=hac_lag, weight_col=weight_col,
-        )
-    elif vcov_type == "conley":
-        from .plans.conley import conley_meat
-
-        cutoff, kernel, distance = conley_opts
-        meat = conley_meat(
-            frame, sol.betahat, kept_x, intercept=False,
-            lat_col=cluster_var[0], lon_col=cluster_var[1],
-            cutoff=cutoff, kernel=kernel, distance=distance,
-            weight_col=weight_col,
-        )
+    meat, n_clusters = _linear_meat(
+        frame, vcov_type, sol.betahat, kept_x, False, cluster_var, weight_col,
+        hac_lag, conley_opts, xtx_inv=sol.xtx_inv, fe_col=fe[0],
+    )
+    if vcov_type == "cluster" and ssc == "nested":
+        if len(cluster_var) > 1:
+            raise ValueError("ssc='nested' is not defined for multiway clustering")
+        nested = count_nested_fe_levels(base.df, fe, cluster_var[0])
+        n_params_cluster = p_kept + df_fe - nested
 
     if vcov_type == "cr3":
         # exactness precondition (see the dbreg dispatch comment): every
@@ -1021,25 +952,14 @@ def _finish_mundlak(
     p = len(collin.keep_names)
     df_res = max(n_total - p, 1)
 
-    meat = n_clusters = None
     kept_x = [n for n in frame.x_cols if standardize_coef_names(n) in collin.keep_names]
     # the intercept itself can lose its pivot to a near-constant x_bar column
     # (tiny samples with a 2-level FE) — meat must follow the kept layout
     icpt = "(Intercept)" in collin.keep_names
-    if vcov_type == "hc1":
-        meat, _ = hc1_meat(
-            frame, sol.betahat, kept_x, intercept=icpt, weight_col=weight_col
-        )
-    elif vcov_type == "cluster":
-        meat, n_clusters, _ = _cluster_meat_any(
-            frame, sol.betahat, kept_x, icpt, cluster_var, n_total, p,
-            weight_col=weight_col,
-        )
-    elif vcov_type == "dk":
-        meat, n_clusters, _lag, _ = dk_meat(
-            frame, sol.betahat, kept_x, intercept=icpt,
-            time_col=cluster_var[0], lag=hac_lag, weight_col=weight_col,
-        )
+    meat, n_clusters = _linear_meat(
+        frame, vcov_type, sol.betahat, kept_x, icpt, cluster_var, weight_col,
+        hac_lag,
+    )
 
     V = compute_vcov(vcov_type, sol.xtx_inv, rss, df_res, n_total, p, meat, n_clusters)
     ct = gen_coeftable(sol.betahat, V, df_res, collin.keep_names)
@@ -1219,7 +1139,7 @@ def _execute_compress(
     pdf = _collect_cells_guarded(comp, compress_nmax)
     if pdf is None or len(pdf) > compress_nmax:
         if verbose:
-            print(
+            _log.info(
                 f"[dbreg] compressed size exceeds compress_nmax "
                 f"({compress_nmax:,}); using the distributed-Gram fallback"
             )
@@ -1296,7 +1216,7 @@ def _execute_compress(
     elif vcov_type == "cluster":
         meat, n_clusters = _compress_cluster_meat(
             source, parsed, design, group_cols, cluster_var, pdf, cd, collin,
-            sol.betahat, yhat, drop_missings, nobs_orig, p, weight_col
+            sol.betahat, yhat, drop_missings, weight_col
         )
         if ssc == "nested":
             from .plans.common import filter_missing
@@ -1529,22 +1449,12 @@ def _execute_compress_distributed(
                 if len(cluster_var) == 1:
                     meat_full, n_clusters = comp_meat(aliases)
                 else:
-                    comps, g_single = [], {}
-                    for r in range(1, len(aliases) + 1):
-                        for S in combinations(range(len(aliases)), r):
-                            m_S, g_S = comp_meat([aliases[i] for i in S])
-                            comps.append((r, m_S, g_S))
-                            if r == 1:
-                                g_single[S[0]] = g_S
-                    g_min = min(g_single.values())
-                    scale_ref = (g_min / (g_min - 1)) * (n_tot / (n_tot - p))
-                    meat_full = None
-                    for r, m_S, g_S in comps:
-                        sign = 1.0 if r % 2 == 1 else -1.0
-                        scale_S = (g_S / (g_S - 1)) * (n_tot / (n_tot - p))
-                        term = sign * (scale_S / scale_ref) * m_S
-                        meat_full = term if meat_full is None else meat_full + term
-                    n_clusters = g_min
+                    comps = [
+                        (r, *comp_meat([aliases[i] for i in S]))
+                        for r in range(1, len(aliases) + 1)
+                        for S in combinations(range(len(aliases)), r)
+                    ]
+                    meat_full, n_clusters = cgm_combine(comps)
             finally:
                 if len(cluster_var) > 1:
                     cc.unpersist()
@@ -1604,7 +1514,7 @@ def _execute_compress_distributed(
 
 def _compress_cluster_meat(
     source, parsed, design, group_cols, cluster_vars, pdf, cd, collin, betahat, yhat,
-    drop_missings, n_total, n_params, weight_col=None
+    drop_missings, weight_col=None
 ):
     """Cluster meat for compress (reference: R/dbreg.R:2008-2068), vectorized:
     per-(cluster, cell) summed residuals u = Σy − n·ŷ(cell), score vectors
@@ -1614,9 +1524,8 @@ def _compress_cluster_meat(
     the FINEST (all cluster vars × cell) table is aggregated in ONE source
     scan; every subset component's score table is a re-aggregation of it
     (n/Σy are additive), so 2^k − 1 components cost one scan + k−1 tiny
-    group-bys. Components combine with CGM signs, rescaled so compute_vcov's
-    single CR1 formula (G = min single-variable G) reproduces the sum —
-    identical to the moments-path convention (:func:`_cluster_meat_any`).
+    group-bys. Components combine by :func:`plans.meat.cgm_combine`, the
+    convention every other path shares.
 
     The (cluster × cell) table is strictly larger than the cell table, so its
     collect is guarded the same way as the cells (spark.driver.maxResultSize
@@ -1679,7 +1588,7 @@ def _compress_cluster_meat(
     try:
         if len(cluster_vars) == 1:
             return component(aliases, cc_df)
-        comps, g_single = [], {}
+        comps = []
         for r in range(1, len(aliases) + 1):
             for S in combinations(range(len(aliases)), r):
                 sub = [aliases[i] for i in S]
@@ -1689,19 +1598,8 @@ def _compress_cluster_meat(
                         F.sum("n_gc").alias("n_gc"),
                         F.sum("sum_y_gc").alias("sum_y_gc"),
                     )
-                meat_S, g_S = component(sub, sub_df)
-                comps.append((r, meat_S, g_S))
-                if r == 1:
-                    g_single[S[0]] = g_S
-        g_min = min(g_single.values())
-        scale_ref = (g_min / (g_min - 1)) * (n_total / (n_total - n_params))
-        meat_eff = None
-        for r, meat_S, g_S in comps:
-            sign = 1.0 if r % 2 == 1 else -1.0
-            scale_S = (g_S / (g_S - 1)) * (n_total / (n_total - n_params))
-            term = sign * (scale_S / scale_ref) * meat_S
-            meat_eff = term if meat_eff is None else meat_eff + term
-        return meat_eff, g_min
+                comps.append((r, *component(sub, sub_df)))
+        return cgm_combine(comps)
     finally:
         if cc is None:
             cc_df.unpersist()

@@ -51,6 +51,7 @@ a fixed literal β.
 
 from __future__ import annotations
 
+import logging
 import math
 import warnings
 from dataclasses import dataclass, field
@@ -62,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .design import DesignInfo, build_design, standardize_coef_names
 from .formula import ParsedFormula, parse_formula, parse_vcov
-from .plans.common import Source, agg_select_sql, resolve_source, run_agg
+from .plans.common import agg_select_sql, resolve_source
 from .plans.exprs import (
     Agg,
     CaseGE,
@@ -81,6 +82,7 @@ from .plans.exprs import (
 )
 from .guards import is_result_too_large
 from .plans.frames import Frame, build_base_frame
+from .plans.meat import MEAT_KIND, ScoreBlock, quad_form, sandwich_meat
 from .solve import (
     compute_vcov,
     detect_collinearity,
@@ -88,6 +90,8 @@ from .solve import (
     solve_with_fallback,
 )
 from .stats import norm_ppf
+
+_log = logging.getLogger("dbreg_spark")
 
 FAMILIES = (
     "binomial",
@@ -585,321 +589,38 @@ def _decode_pass(row: dict, p: int) -> tuple[np.ndarray, np.ndarray, float, floa
 # --------------------------------------------------------------------------
 
 
-def _cluster_meat_from_scores(sc: DataFrame, p: int, keys: list[str]):
-    """Cluster meat from a row-level score frame carrying ``__s`` and
-    ``__xt0..p-1`` plus the cluster key columns: per-cluster score sums,
-    then Σ s_g s_gᵀ — with CGM inclusion-exclusion (per-component
-    G_S/(G_S−1) factors folded into an effective meat, the repo-wide
-    convention) for multiway keys. The frame is persisted across the
-    2^K−1 component passes and released before returning.
-
-    Shared by the 1-FE and k-FE fepois paths."""
-
-    def _component(subset):
-        score_aggs = [
-            F.sum(F.col("__s") * F.col(f"__xt{i}")).alias(f"sc_{i}")
-            for i in range(p)
-        ]
-        stab = sc.groupBy(*subset).agg(*score_aggs)
-        aggs = [F.count(F.lit(1)).alias("G")]
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(
-                    F.sum(F.col(f"sc_{i}") * F.col(f"sc_{j}")).alias(f"m_{i}_{j}")
-                )
-        mr = stab.agg(*aggs).collect()[0].asDict()
-        mm = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                mm[i, j] = mm[j, i] = float(mr[f"m_{i}_{j}"])
-        return mm, int(mr["G"])
-
-    multi = len(keys) > 1
-    if multi:
-        sc = sc.persist()
-    try:
-        if not multi:
-            meat, g = _component(keys)
-            if g < 2:
-                raise ValueError(
-                    "cluster-robust SEs need at least 2 clusters "
-                    f"(got {g} for {keys})"
-                )
-            return meat, g
-        from itertools import combinations
-
-        comps = []
-        gmin = None
-        for r in range(1, len(keys) + 1):
-            for subset in combinations(keys, r):
-                m_s, g_s = _component(list(subset))
-                comps.append((r, m_s, g_s))
-                if r == 1:
-                    gmin = g_s if gmin is None else min(gmin, g_s)
-        if gmin < 2:
-            raise ValueError(
-                "cluster-robust SEs need at least 2 clusters in every "
-                f"dimension (min G = {gmin} across {keys})"
-            )
-        scale_ref = gmin / (gmin - 1)
-        meat = np.zeros((p, p))
-        for r, m_s, g_s in comps:
-            sign = 1.0 if r % 2 == 1 else -1.0
-            meat += sign * ((g_s / (g_s - 1)) / scale_ref) * m_s
-        return meat, gmin
-    finally:
-        if multi:
-            sc.unpersist()
-
-
-def _dk_meat_from_scores(sc, p: int, time_col: str, lag: int | None):
-    """Driscoll-Kraay meat from a row-level score frame carrying ``__s``
-    and ``__xt0..p-1`` plus the time column: per-period score sums from
-    one grouped pass, NW Bartlett weighting driver-side. Shared by the
-    1-FE and k-FE fepois paths (the no-FE path uses glm_dk_meat)."""
-    from .plans.meat import nw_combine
-
-    score_aggs = [
-        F.sum(F.col("__s") * F.col(f"__xt{i}")).alias(f"sc_{i}")
-        for i in range(p)
-    ]
-    cap = 100_000
-    rows = sc.groupBy(time_col).agg(*score_aggs).limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"Driscoll-Kraay time variable {time_col!r} has more than "
-            f"{cap:,} distinct periods — pass a period column, not a raw "
-            "timestamp"
-        )
-    rows.sort(key=lambda r: (r[time_col] is None, r[time_col]))
-    S = np.array(
-        [[float(r[f"sc_{i}"] or 0.0) for i in range(p)] for r in rows]
-    )
-    return nw_combine(S, lag)
-
-
-def glm_meat(
-    frame: Frame,
-    family: _Family,
-    beta: np.ndarray,
+def glm_block(
+    fam: _Family,
+    eta: Expr,
+    y: Expr,
     x_names: list[str],
     intercept: bool,
-    cluster_cols: list[str] | None = None,
-    offset: str | None = None,
     weights: str | None = None,
-) -> tuple[np.ndarray, int | None]:
-    """HC meat Σ s²·x·xᵀ, or with ``cluster_cols`` the CR meat
-    Σ_g s_g s_gᵀ from per-cluster score sums s_g = Σ_g s·x — the score
-    shuffle carries one p-vector per cluster, the outer-product sum is one
-    more single-row aggregation (driver never loops over clusters; mirrors
-    plans/meat.py:cluster_meat). The score residual is s = ω·(y−μ̂)."""
-    y = _d(Var(frame.y_col))
-    eta = _eta_expr(beta, x_names, intercept, offset)
-    mu = family.mu(eta)
-    s = family.score(mu, y)
-    if weights is not None:
-        s = _d(Var(weights)) * s
-    cols: list[Expr] = ([Lit(1.0)] if intercept else []) + [Var(n) for n in x_names]
-    p = len(cols)
-
-    key_cols = cluster_cols or []
-    proj = frame.df.select(
-        *[F.col(c) for c in key_cols],
-        to_spark(_d(s)).alias("__s"),
-        *[F.col(n) for n in x_names],
-    )
-    sv = Var("__s")
-    if not cluster_cols:
-        spec = []
-        for i in range(p):
-            for j in range(i, p):
-                spec.append((f"m_{i}_{j}", asum(sv * sv * _d(cols[i]) * _d(cols[j]))))
-        row = run_agg(proj, spec)
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                meat[i, j] = meat[j, i] = float(row[f"m_{i}_{j}"])
-        return meat, None
-
-    score_spec = [(f"score_{j}", asum(sv * _d(c))) for j, c in enumerate(cols)]
-    scores = proj.groupBy(*cluster_cols).agg(
-        *[agg_to_spark(a).alias(n) for n, a in score_spec]
-    )
-    outer = [("n_clusters", Agg("count_star", None, "long"))]
-    for i in range(p):
-        for j in range(i, p):
-            outer.append((f"m_{i}_{j}", asum(Var(f"score_{i}") * Var(f"score_{j}"))))
-    row = run_agg(scores, outer)
-    g = int(row["n_clusters"])
-    meat = np.zeros((p, p))
-    for i in range(p):
-        for j in range(i, p):
-            meat[i, j] = meat[j, i] = float(row[f"m_{i}_{j}"])
-    return meat, g
-
-
-def glm_conley_meat(
-    frame: Frame,
-    family: _Family,
-    beta: np.ndarray,
-    x_names: list[str],
-    intercept: bool,
-    lat_col: str,
-    lon_col: str,
-    conley_opts,
-    offset: str | None = None,
-    weights: str | None = None,
-) -> np.ndarray:
-    """Conley (1999) spatial HAC meat for a GLM: the family score rows
-    s = [omega] score(mu, y) feed the SAME cell-bucketed pair enumeration
-    as the linear path (plans/conley.py:conley_pair_agg) — never
-    all-pairs."""
-    from .plans.conley import conley_pair_agg
-
-    cutoff, kernel, distance = conley_opts
-    y = _d(Var(frame.y_col))
-    eta = _eta_expr(beta, x_names, intercept, offset)
-    mu = family.mu(eta)
-    s = family.score(mu, y)
-    if weights is not None:
-        s = _d(Var(weights)) * s
-    s_names = list(dict.fromkeys(x_names))
-    proj = frame.df.select(
-        to_spark(_d(s)).alias("__e"),
-        *[F.col(n) for n in s_names],
-        F.col(lat_col).cast("double").alias("__lat"),
-        F.col(lon_col).cast("double").alias("__lon"),
-    )
-    agg_df, pp, _cc = conley_pair_agg(
-        proj, s_names, intercept, cutoff, kernel, distance, cache=True
-    )
-    row = agg_df.collect()[0].asDict()
-    if _cc is not None:
-        _cc.unpersist()
-    meat = np.zeros((pp, pp))
-    for i in range(pp):
-        for j in range(i, pp):
-            v = row[f"m_{i}_{j}"]
-            meat[i, j] = meat[j, i] = float(v) if v is not None else 0.0
-    return meat
-
-
-def glm_hck_meat(
-    frame: Frame,
-    family: _Family,
-    beta: np.ndarray,
-    x_names: list[str],
-    intercept: bool,
-    info_inv: np.ndarray,
-    kind: str,
-    offset: str | None = None,
-    weights: str | None = None,
-) -> np.ndarray:
-    """HC2/HC3 leverage-corrected GLM meat: the IRLS hat-matrix leverage
-    h_i = omega_i w_i(eta) x_i'(X'WX)^-1 x_i is a COLUMN quadratic form
-    with the literal inverse-information (plans/meat.py:hck_meat's shape
-    with the GLM working weight riding the form); meat =
-    sum s_i^2/(1-h_i)^k x x' with s the (prior-weighted) score residual,
-    k = 1 (HC2) or 2 (HC3) — one projection + one aggregation."""
-    k = 1 if kind == "hc2" else 2
-    y = _d(Var(frame.y_col))
-    eta = _eta_expr(beta, x_names, intercept, offset)
-    mu = family.mu(eta)
-    s = family.score(mu, y)
-    w_irls = family.w(eta, mu)
+    info_inv=None,
+    kind: str = "hc1",
+) -> ScoreBlock:
+    """The GLM score block: s = ω·score(μ̂, y) over ``[1] + x`` at the
+    linear predictor ``eta``. For ``kind`` hc2/hc3, ``info_inv`` gives the
+    IRLS hat-matrix leverage h = ω·w(η)·x̃'(X'WX)⁻¹x̃."""
+    mu = fam.mu(eta)
+    s = fam.score(mu, y)
     om = _d(Var(weights)) if weights is not None else None
     if om is not None:
         s = om * s
-        w_irls = om * w_irls
-    cols: list[Expr] = ([Lit(1.0)] if intercept else []) + [
-        Var(n) for n in x_names
-    ]
-    p = len(cols)
-    Minv = np.asarray(info_inv, dtype=float)
-    q: Expr = Lit(0.0)
-    for a in range(p):
-        for b in range(a, p):
-            coef = float(Minv[a, b] * (1.0 if a == b else 2.0))
-            if coef != 0.0:
-                q = q + Lit(coef) * _d(cols[a]) * _d(cols[b])
-    h = _d(w_irls) * q
-    proj = frame.df.select(
-        to_spark(_d(s)).alias("__s"),
-        to_spark(_d(h)).alias("__h"),
-        *[F.col(n) for n in dict.fromkeys(x_names)],
-    )
-    denom = F.greatest(F.lit(1.0) - F.col("__h"), F.lit(1e-12))
-    psi2 = (F.col("__s") * F.col("__s")) / denom**k
-
-    def col_of(idx: int):
-        if intercept and idx == 0:
-            return F.lit(1.0)
-        return F.col(x_names[idx - (1 if intercept else 0)]).cast("double")
-
-    aggs = []
-    for i in range(p):
-        for j in range(i, p):
-            aggs.append(
-                F.sum(psi2 * col_of(i) * col_of(j)).alias(f"m_{i}_{j}")
-            )
-    row = proj.agg(*aggs).collect()[0].asDict()
-    meat = np.zeros((p, p))
-    for i in range(p):
-        for j in range(i, p):
-            meat[i, j] = meat[j, i] = float(row[f"m_{i}_{j}"])
-    return meat
+    block = ScoreBlock(s, tuple(x_names), intercept)
+    if kind not in ("hc2", "hc3"):
+        return block
+    w = fam.w(eta, mu)
+    if om is not None:
+        w = om * w
+    h = _d(w) * quad_form(block.cols, np.asarray(info_inv, dtype=float))
+    return ScoreBlock(s, block.x, intercept, h, 2 if kind == "hc3" else 1)
 
 
-def glm_dk_meat(
-    frame: Frame,
-    family: _Family,
-    beta: np.ndarray,
-    x_names: list[str],
-    intercept: bool,
-    time_col: str,
-    lag: int | None = None,
-    offset: str | None = None,
-    weights: str | None = None,
-) -> tuple[np.ndarray, int, int]:
-    """Driscoll-Kraay HAC meat for a GLM: per-PERIOD score sums (the same
-    grouped pass as the CR meat keyed by the time column), Newey-West
-    Bartlett weighting across periods driver-side (plans/meat.py:nw_combine
-    — lag 0 reproduces cluster-by-time exactly). Returns (meat, T,
-    lag_used); only the T × p score matrix reaches the driver."""
-    from .plans.meat import nw_combine
-
-    y = _d(Var(frame.y_col))
-    eta = _eta_expr(beta, x_names, intercept, offset)
-    mu = family.mu(eta)
-    s = family.score(mu, y)
-    if weights is not None:
-        s = _d(Var(weights)) * s
-    cols: list[Expr] = ([Lit(1.0)] if intercept else []) + [Var(n) for n in x_names]
-    p = len(cols)
-    proj = frame.df.select(
-        F.col(time_col),
-        to_spark(_d(s)).alias("__s"),
-        *[F.col(n) for n in x_names],
-    )
-    sv = Var("__s")
-    score_aggs = [
-        agg_to_spark(asum(sv * _d(c))).alias(f"score_{j}")
-        for j, c in enumerate(cols)
-    ]
-    cap = 100_000  # periods; a near-continuous timestamp is user error
-    rows = proj.groupBy(time_col).agg(*score_aggs).limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"Driscoll-Kraay time variable {time_col!r} has more than "
-            f"{cap:,} distinct periods — pass a period column (e.g. a "
-            "date truncated to day/month), not a raw timestamp"
-        )
-    rows.sort(key=lambda r: (r[time_col] is None, r[time_col]))
-    S = np.array(
-        [[float(r[f"score_{j}"] or 0.0) for j in range(p)] for r in rows]
-    )
-    meat, T, lag_used = nw_combine(S, lag)
-    return meat, T, lag_used
+def _scores_block(p: int) -> ScoreBlock:
+    """The fepois score block: the profiled per-row score ``__s`` over the
+    profiled columns ``__xt0..p-1``."""
+    return ScoreBlock(Var("__s"), tuple(f"__xt{i}" for i in range(p)))
 
 
 # --------------------------------------------------------------------------
@@ -1498,7 +1219,7 @@ def dbglm(
                 m, src_df, weights, th, hist
             )
             if verbose:
-                print(f"[dbglm] negbin ML theta sweep: {th:.6g} -> {th_new:.6g}")
+                _log.info(f"[dbglm] negbin ML theta sweep: {th:.6g} -> {th_new:.6g}")
             if abs(th_new - th) <= 1e-6 * max(th, 1.0):
                 th = th_new
                 break
@@ -1545,7 +1266,7 @@ def dbglm(
             weights,
         )
         if verbose:
-            print(f"[dbglm] negbin two-step theta-hat = {th:.6g}")
+            _log.info(f"[dbglm] negbin two-step theta-hat = {th:.6g}")
         return dbglm(
             fml, data=data, spark=spark, table=table, path=path,
             family="negbin", vcov=vcov, cluster=cluster, offset=offset,
@@ -1782,7 +1503,7 @@ def dbglm(
             accepted_beta = beta
             ll_raw = ll_i
             if verbose:
-                print(f"[dbglm] iter {n_iter}: ll = {llp_i:.10g}")
+                _log.info(f"[dbglm] iter {n_iter}: ll = {llp_i:.10g}")
             if abs(llp_i - ll_prev) <= tol * (abs(llp_i) + 0.1):
                 ll_prev = llp_i
                 converged = True
@@ -1830,60 +1551,15 @@ def dbglm(
     )
 
     meat = n_clusters = None
-    if vcov_type == "conley":
-        meat = glm_conley_meat(
-            frame, fam, beta, x_kept, icpt, cluster_vars[0], cluster_vars[1],
-            conley_opts, offset=offset, weights=weights,
+    if vcov_type in MEAT_KIND:
+        block = glm_block(
+            fam, _eta_expr(beta, x_kept, icpt, offset), _d(Var(frame.y_col)),
+            x_kept, icpt, weights, info_inv, vcov_type,
         )
-    elif vcov_type == "hc1":
-        meat, _ = glm_meat(
-            frame, fam, beta, x_kept, icpt, offset=offset, weights=weights
-        )
-    elif vcov_type in ("hc2", "hc3"):
-        meat = glm_hck_meat(
-            frame, fam, beta, x_kept, icpt, info_inv, vcov_type,
-            offset=offset, weights=weights,
-        )
-    elif vcov_type == "dk":
-        # Driscoll-Kraay: per-period score sums + NW weighting; the period
-        # count T plays the cluster-count role in compute_vcov's scale
-        meat, n_clusters, _lag = glm_dk_meat(
-            frame, fam, beta, x_kept, icpt, cluster_vars[0], hac_lag,
-            offset=offset, weights=weights,
-        )
-    elif vcov_type == "cluster":
-        if len(cluster_vars) > 1:
-            # CGM inclusion-exclusion over non-empty subsets, mirroring the
-            # linear path (api.py:_cluster_meat_any): each component carries
-            # its OWN g_S/(g_S−1) small-sample factor, folded into an
-            # effective meat so compute_vcov's single CR1 formula (with
-            # G = min single-variable G, the reporting convention) returns
-            # the exact component sum — the n/(n−p) factors cancel in the
-            # ratio
-            from itertools import combinations
-
-            comps = []
-            gmin = None
-            for k in range(1, len(cluster_vars) + 1):
-                for subset in combinations(cluster_vars, k):
-                    m_s, g_s = glm_meat(
-                        frame, fam, beta, x_kept, icpt, list(subset),
-                        offset=offset, weights=weights,
-                    )
-                    comps.append((k, m_s, g_s))
-                    if k == 1:
-                        gmin = g_s if gmin is None else min(gmin, g_s)
-            scale_ref = gmin / (gmin - 1)
-            meat = np.zeros((p, p))
-            for k, m_s, g_s in comps:
-                sign = 1.0 if k % 2 == 1 else -1.0
-                meat += sign * ((g_s / (g_s - 1)) / scale_ref) * m_s
-            n_clusters = gmin
-        else:
-            meat, n_clusters = glm_meat(
-                frame, fam, beta, x_kept, icpt, list(cluster_vars),
-                offset=offset, weights=weights,
-            )
+        meat, n_clusters = sandwich_meat(
+            frame, [block], MEAT_KIND[vcov_type], cluster_vars or (),
+            lag=hac_lag, conley=conley_opts,
+        ).one()
 
     if vcov_type == "iid":
         # λ=0: B·A·B = A⁻¹ (classic); λ>0: the penalized model-based
@@ -2442,7 +2118,7 @@ def _fe_poisson(
             final_row, final_a = rowi, a_i
             accepted_beta = beta
             if verbose:
-                print(f"[dbglm fepois] iter {n_iter}: ll = {ll_i:.10g}")
+                _log.info(f"[dbglm fepois] iter {n_iter}: ll = {ll_i:.10g}")
             if math.isfinite(ll_prev) and abs(ll_i - ll_prev) <= tol * (
                 abs(ll_i) + 0.1
             ):
@@ -2494,57 +2170,14 @@ def _fe_poisson(
         info_inv = solve_with_fallback(final_a, np.zeros(p)).xtx_inv
 
         meat = n_clusters = None
-        if vcov_type == "conley":
-            from .plans.conley import conley_pair_agg
-
-            cutoff, kernel, distance = conley_opts
-            sc = profiled_pass(beta, raw_gtab, extra_keys=list(cluster_vars), center=gtab_center)
-            _FEPOIS_PASS_STATS["meat_passes"] += 1
-            cproj = sc.select(
-                F.col("__s").alias("__e"),
-                *[F.col(f"__xt{i}") for i in range(p)],
-                F.col(cluster_vars[0]).cast("double").alias("__lat"),
-                F.col(cluster_vars[1]).cast("double").alias("__lon"),
-            )
-            agg_df_c, _pc, _cc = conley_pair_agg(
-                cproj, [f"__xt{i}" for i in range(p)], False,
-                cutoff, kernel, distance, cache=True,
-            )
-            crow = agg_df_c.collect()[0].asDict()
-            if _cc is not None:
-                _cc.unpersist()
-            meat = np.zeros((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    v = crow[f"m_{i}_{j}"]
-                    meat[i, j] = meat[j, i] = (
-                        float(v) if v is not None else 0.0
-                    )
-        elif vcov_type in ("hc1", "cluster", "dk"):
-            keys = list(cluster_vars) if vcov_type in ("cluster", "dk") else []
+        if vcov_type in MEAT_KIND:
+            keys = list(cluster_vars) if vcov_type != "hc1" else []
             sc = profiled_pass(beta, raw_gtab, extra_keys=keys, center=gtab_center)
             _FEPOIS_PASS_STATS["meat_passes"] += 1
-            if vcov_type == "dk":
-                meat, n_clusters, _lag = _dk_meat_from_scores(
-                    sc, p, cluster_vars[0], hac_lag
-                )
-            elif vcov_type == "hc1":
-                aggs = []
-                for i in range(p):
-                    for j in range(i, p):
-                        aggs.append(
-                            F.sum(
-                                F.col("__s") * F.col("__s")
-                                * F.col(f"__xt{i}") * F.col(f"__xt{j}")
-                            ).alias(f"m_{i}_{j}")
-                        )
-                mrow = sc.agg(*aggs).collect()[0].asDict()
-                meat = np.zeros((p, p))
-                for i in range(p):
-                    for j in range(i, p):
-                        meat[i, j] = meat[j, i] = float(mrow[f"m_{i}_{j}"])
-            else:
-                meat, n_clusters = _cluster_meat_from_scores(sc, p, keys)
+            meat, n_clusters = sandwich_meat(
+                sc, [_scores_block(p)], MEAT_KIND[vcov_type], keys,
+                lag=hac_lag, conley=conley_opts,
+            ).one()
 
         if vcov_type == "iid":
             V = info_inv
@@ -2708,7 +2341,7 @@ def _kfe_solve_cells(cells, fes, p, verbose=False):
             "near-separation. Coefficients may be slightly biased."
         )
     if verbose:
-        print(f"[dbglm kfe] lambda alternation: {sweep + 1} sweeps")
+        _log.info(f"[dbglm kfe] lambda alternation: {sweep + 1} sweeps")
     lnphi = _lnphi()
 
     # corrections: weights W = C·φ (dead cells: 0), x-sums φ·X_j
@@ -2743,7 +2376,7 @@ def _kfe_solve_cells(cells, fes, p, verbose=False):
             "may be slightly off; check the FE graph's connectivity."
         )
     if verbose:
-        print(f"[dbglm kfe] AP corrections: {sweep + 1} sweeps")
+        _log.info(f"[dbglm kfe] AP corrections: {sweep + 1} sweeps")
     return lnphi, a, lnl, lvls
 
 
@@ -2977,7 +2610,7 @@ def _kfe_solve_cells_spark(
         )
     _KFE_PASS_STATS["lambda_sweeps"] = sweep + 1
     if verbose:
-        print(f"[dbglm kfe/spark] lambda alternation: {sweep + 1} sweeps")
+        _log.info(f"[dbglm kfe/spark] lambda alternation: {sweep + 1} sweeps")
 
     # cells with the converged profile attached — the SECOND and last
     # checkpoint; every corrections pass and the final helper read it
@@ -3134,7 +2767,7 @@ def _kfe_solve_cells_spark(
             )
         _KFE_PASS_STATS["corr_sweeps"] = sweep + 1
         if verbose:
-            print(f"[dbglm kfe/spark] AP corrections: {sweep + 1} sweeps")
+            _log.info(f"[dbglm kfe/spark] AP corrections: {sweep + 1} sweeps")
 
     helper = w2
     if p:
@@ -3482,7 +3115,7 @@ def _fe_poisson_kfe(
         helper_beta = evaluated_beta if helper is not None else None
         accepted_beta = beta
         if verbose:
-            print(f"[dbglm kfe] iter {n_iter}: ll = {ll_i:.10g}")
+            _log.info(f"[dbglm kfe] iter {n_iter}: ll = {ll_i:.10g}")
         if math.isfinite(ll_prev) and abs(ll_i - ll_prev) <= tol * (
             abs(ll_i) + 0.1
         ):
@@ -3531,29 +3164,10 @@ def _fe_poisson_kfe(
     meat = n_clusters = None
     if vcov_type in ("hc1", "cluster", "dk"):
         sc = system_pass(beta, x_names, final_helper, rows_only=True)
-        if vcov_type == "dk":
-            meat, n_clusters, _lag = _dk_meat_from_scores(
-                sc, p, cluster_vars[0], hac_lag
-            )
-        elif vcov_type == "hc1":
-            aggs = []
-            for i in range(p):
-                for j in range(i, p):
-                    aggs.append(
-                        F.sum(
-                            F.col("__s") * F.col("__s")
-                            * F.col(f"__xt{i}") * F.col(f"__xt{j}")
-                        ).alias(f"m_{i}_{j}")
-                    )
-            mrow = sc.agg(*aggs).collect()[0].asDict()
-            meat = np.zeros((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    meat[i, j] = meat[j, i] = float(mrow[f"m_{i}_{j}"])
-        else:
-            meat, n_clusters = _cluster_meat_from_scores(
-                sc, p, list(cluster_vars)
-            )
+        meat, n_clusters = sandwich_meat(
+            sc, [_scores_block(p)], MEAT_KIND[vcov_type], cluster_vars or (),
+            lag=hac_lag,
+        ).one()
 
     if vcov_type == "iid":
         V = info_inv

@@ -40,6 +40,7 @@ rather than failing.
 
 from __future__ import annotations
 
+import logging
 import math
 import warnings
 
@@ -48,6 +49,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from .plans.exprs import Cast, Expr, Func, Lit, Var, to_spark
+from .plans.meat import MEAT_KIND, cgm_combine, sandwich_meat
 from .solve import (
     CollinResult,
     compute_vcov,
@@ -55,6 +57,8 @@ from .solve import (
     gen_coeftable,
     solve_with_fallback,
 )
+
+_log = logging.getLogger("dbreg_spark")
 
 # diagnostics from the last cells fit: distributed pass counts (tests pin
 # the one-compress-pass contract here)
@@ -253,7 +257,7 @@ def glm_cells_fit(
     # deterministic summation order (collect order is partition-dependent)
     pdf = pdf.sort_values(keys, kind="mergesort").reset_index(drop=True)
     if verbose:
-        print(f"[dbglm] cells: {n_cells:,} cells over {len(keys)} keys")
+        _log.info(f"[dbglm] cells: {n_cells:,} cells over {len(keys)} keys")
 
     x_names = list(frame.x_cols)
     icpt_req = bool(parsed.intercept)
@@ -385,7 +389,7 @@ def glm_cells_fit(
             accepted_beta = beta
             ll_raw = ll_i
             if verbose:
-                print(f"[dbglm] cells iter {n_iter}: ll = {llp_i:.10g}")
+                _log.info(f"[dbglm] cells iter {n_iter}: ll = {llp_i:.10g}")
             if abs(llp_i - ll_prev) <= tol * (abs(llp_i) + 0.1):
                 ll_prev = llp_i
                 converged = True
@@ -429,13 +433,10 @@ def glm_cells_fit(
         if weights is not None:
             # leverage h_i = omega_i w x'Bx varies within a cell — ONE
             # raw-frame pass at the converged beta (still 2 passes total)
-            from .glm import glm_hck_meat
-
-            meat = glm_hck_meat(
-                frame, fam, beta, x_kept, icpt, info_inv, vcov_type,
-                offset=offset, weights=weights,
+            meat = _raw_meat(
+                frame, fam, beta, x_kept, icpt, offset, weights, vcov_type,
+                cluster_vars, conley_opts, info_inv,
             )
-            _CELLS_PASS_STATS["n_spark_passes"] += 1
         else:
             k = 1 if vcov_type == "hc2" else 2
             q = np.einsum("ij,jk,ik->i", Xk, info_inv, Xk)
@@ -465,12 +466,10 @@ def glm_cells_fit(
             meat = per_g.T @ per_g
             n_clusters = per_g.shape[0]
         else:
-            # CGM inclusion-exclusion, same effective-meat folding as the
-            # raw path (glm.py dbglm cluster branch)
+            # CGM inclusion-exclusion over the cell-level score sums
             from itertools import combinations
 
             comps = []
-            gmin = None
             for k in range(1, len(cluster_vars) + 1):
                 for subset in combinations(cluster_vars, k):
                     per_g = (
@@ -478,24 +477,13 @@ def glm_cells_fit(
                             [gcols[c] for c in subset], sort=True
                         ).sum().to_numpy(dtype=float)
                     )
-                    m_s, g_s = per_g.T @ per_g, per_g.shape[0]
-                    comps.append((k, m_s, g_s))
-                    if k == 1:
-                        gmin = g_s if gmin is None else min(gmin, g_s)
-            scale_ref = gmin / (gmin - 1)
-            meat = np.zeros((p, p))
-            for k, m_s, g_s in comps:
-                sign = 1.0 if k % 2 == 1 else -1.0
-                meat += sign * ((g_s / (g_s - 1)) / scale_ref) * m_s
-            n_clusters = gmin
+                    comps.append((k, per_g.T @ per_g, per_g.shape[0]))
+            meat, n_clusters = cgm_combine(comps)
     elif vcov_type == "conley":
-        from .glm import glm_conley_meat
-
-        meat = glm_conley_meat(
-            frame, fam, beta, x_kept, icpt, cluster_vars[0],
-            cluster_vars[1], conley_opts, offset=offset, weights=weights,
+        meat = _raw_meat(
+            frame, fam, beta, x_kept, icpt, offset, weights, vcov_type,
+            cluster_vars, conley_opts,
         )
-        _CELLS_PASS_STATS["n_spark_passes"] += 1
 
     return _finish(
         frame, parsed, design, fam, vcov_type, cluster_vars, offset,
@@ -503,6 +491,26 @@ def glm_cells_fit(
         n_clusters, n_total, sum_wt, sum_y, sum_y_sq, ll_sat, ll_raw,
         pearson, dispersion, df_res, n_iter, converged, p,
     )
+
+
+def _raw_meat(
+    frame, fam, beta, x_kept, icpt, offset, weights, vcov_type, cluster_vars,
+    conley_opts, info_inv=None,
+):
+    """A meat the cells cannot give (row-varying leverage under weights,
+    Conley's coordinates): one pass over the raw frame at the converged β."""
+    from .glm import _eta_expr, glm_block
+
+    block = glm_block(
+        fam, _eta_expr(beta, x_kept, icpt, offset), _d(Var(frame.y_col)),
+        x_kept, icpt, weights, info_inv, vcov_type,
+    )
+    _CELLS_PASS_STATS["n_spark_passes"] += 1
+    meat, _ = sandwich_meat(
+        frame, [block], MEAT_KIND[vcov_type], cluster_vars or (),
+        conley=conley_opts,
+    ).one()
+    return meat
 
 
 def _finish(

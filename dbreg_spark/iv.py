@@ -34,6 +34,7 @@ extra pass) and are reported on the model (``first_stage_F``).
 
 from __future__ import annotations
 
+import logging
 import warnings
 from dataclasses import dataclass, field
 
@@ -72,7 +73,6 @@ from .plans.frames import (
     build_demeaned_frame,
     build_demeaned_frame_iterative,
 )
-from .plans.meat import hc1_meat
 from .solve import (
     detect_collinearity,
     gen_coeftable,
@@ -80,6 +80,8 @@ from .solve import (
     solve_with_fallback,
     tss_from_moments,
 )
+
+_log = logging.getLogger("dbreg_spark")
 
 
 # --------------------------------------------------------------------------
@@ -451,7 +453,7 @@ def _solve_2sls(
     hac_lag=None,
     conley_opts=None,
 ):
-    from .api import _cluster_meat_any, _cluster_label
+    from .api import _cluster_label, _linear_meat
 
     w_names = list(frame.x_cols)
     A, b, n_total, sum_y, sum_y_sq = assemble_normal_eqs(
@@ -474,7 +476,7 @@ def _solve_2sls(
     Azz = A[np.ix_(z_idx, z_idx)]
     cz = detect_collinearity(Azz, b[z_idx], names_z)
     if cz.collinear and verbose:
-        print(f"[dbiv] dropped from Z (collinear): {cz.drop_names}")
+        _log.info(f"[dbiv] dropped from Z (collinear): {cz.drop_names}")
     zk = [z_idx[i] for i in cz.keep_idx]
     zk_names = cz.keep_names
     Azz_k = A[np.ix_(zk, zk)]
@@ -538,70 +540,15 @@ def _solve_2sls(
     # kept-Z (intercept first, matching the meat layout), columns kept-X
     Gamma = Azz_inv @ A[np.ix_(zk, xk_idx)]
 
-    meat = n_clusters = None
     n_params_cluster = p_kept + df_fe
-    if vcov_type == "hc1":
-        S, _ = hc1_meat(
-            frame, sol.betahat, kept_x_cols, intercept=icpt_x,
-            score_names=kept_z_cols, score_intercept=icpt_z,
-            weight_col=weight_col,
-        )
-        meat = Gamma.T @ S @ Gamma
-    elif vcov_type == "cluster":
-        S, n_clusters, _ = _cluster_meat_any(
-            frame, sol.betahat, kept_x_cols, icpt_x, cluster_vars,
-            n_total, n_params_cluster,
-            score_names=kept_z_cols, score_intercept=icpt_z,
-            weight_col=weight_col,
-        )
-        meat = Gamma.T @ S @ Gamma
-    elif vcov_type == "dk":
-        # Driscoll-Kraay 2SLS: NW-weighted per-period Z-score meat mapped
-        # into coefficient space by the same Gamma
-        from .plans.meat import dk_meat
-
-        S, n_clusters, _lag, _ = dk_meat(
-            frame, sol.betahat, kept_x_cols, intercept=icpt_x,
-            time_col=cluster_vars[0], lag=hac_lag,
-            score_names=kept_z_cols, score_intercept=icpt_z,
-            weight_col=weight_col,
-        )
-        meat = Gamma.T @ S @ Gamma
-    elif vcov_type == "conley":
-        # Conley 2SLS: the spatial pair meat over Z SCORES with the
-        # structural residual, mapped into coefficient space by the same
-        # Gamma (exactly the hc1 pattern with the spatial kernel)
-        import pyspark.sql.functions as F
-
-        from .plans.conley import conley_pair_agg
-        from .plans.exprs import Cast, to_spark
-        from .plans.meat import _resid_expr
-
-        r = _resid_expr(frame, sol.betahat, kept_x_cols, icpt_x)
-        if weight_col is not None:
-            from .plans.exprs import Var as _V
-
-            r = Cast(_V(weight_col), "double") * r
-        proj = frame.df.select(
-            to_spark(Cast(r, "double")).alias("__e"),
-            *[F.col(n) for n in dict.fromkeys(kept_z_cols)],
-            F.col(cluster_vars[0]).cast("double").alias("__lat"),
-            F.col(cluster_vars[1]).cast("double").alias("__lon"),
-        )
-        cutoff_c, kernel_c, distance_c = conley_opts
-        agg_df_c, pz, _cc = conley_pair_agg(
-            proj, kept_z_cols, icpt_z, cutoff_c, kernel_c, distance_c,
-            cache=True,
-        )
-        crow = agg_df_c.collect()[0].asDict()
-        if _cc is not None:
-            _cc.unpersist()
-        S = np.zeros((pz, pz))
-        for i in range(pz):
-            for j in range(i, pz):
-                v = crow[f"m_{i}_{j}"]
-                S[i, j] = S[j, i] = float(v) if v is not None else 0.0
-        meat = Gamma.T @ S @ Gamma
+    # the 2SLS meat: Z scores with the structural residual, mapped into
+    # coefficient space by Gamma
+    S, n_clusters = _linear_meat(
+        frame, vcov_type, sol.betahat, kept_x_cols, icpt_x, cluster_vars,
+        weight_col, hac_lag, conley_opts, score_names=kept_z_cols,
+        score_intercept=icpt_z,
+    )
+    meat = None if S is None else Gamma.T @ S @ Gamma
 
     from .solve import compute_vcov
 
@@ -692,7 +639,7 @@ def _solve_2sls(
             else float("inf")
         )
         if verbose:
-            print(f"[dbiv] first-stage F[{en}] = {fsF[standardize_coef_names(en)]:.4g}")
+            _log.info(f"[dbiv] first-stage F[{en}] = {fsF[standardize_coef_names(en)]:.4g}")
     weak = [k for k, v in fsF.items() if np.isfinite(v) and v < 10.0]
     if weak:
         warnings.warn(

@@ -40,7 +40,6 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 
 from .design import (
     DesignInfo,
@@ -65,21 +64,13 @@ from .plans.common import (
     resolve_source,
     run_agg,
 )
-from .plans.exprs import (
-    Agg,
-    Cast,
-    Lit,
-    Var,
-    agg_to_spark,
-    asum,
-    to_spark,
-)
+from .plans.exprs import Var, agg_to_spark
 from .plans.frames import (
     build_base_frame,
     build_demeaned_frame,
     build_demeaned_frame_iterative,
 )
-from .plans.meat import nw_combine
+from .plans.meat import MEAT_KIND, fe_leverage, ols_block, sandwich_meat
 from .solve import (
     compute_vcov,
     detect_collinearity,
@@ -412,249 +403,29 @@ def _sub_row(urow, pos, y_key, sub_x, intercept, fe_len):
     return r
 
 
-def _batched_resid_proj(frame, fits, weight_col, extra_keys):
-    """One projection carrying EVERY model's literal-beta residual (as
-    ``__e{m}``) plus the union of kept score columns and the cluster/time
-    keys — the shared input of all batched meat passes."""
-    proj_cols = []
-    for m, f in enumerate(fits):
-        b = np.asarray(f.sol.betahat, dtype=float).reshape(-1)
-        off = 1 if f.icpt else 0
-        ycol = frame.y_col if f.y_key == "__y1" else f.y_key
-        e = Var(ycol)
-        if f.icpt:
-            e = e - Lit(float(b[0]))
-        for j, xn in enumerate(f.kept_x):
-            e = e - (Lit(float(b[j + off])) * Var(xn))
-        if weight_col is not None:
-            e = Cast(Var(weight_col), "double") * e
-        proj_cols.append(to_spark(Cast(e, "double")).alias(f"__e{m}"))
-    carry = list(
-        dict.fromkeys(
-            [c for f in fits for c in f.kept_x] + list(extra_keys)
+def _model_meats(frame, fits, weight_col, vcov_type, keys, fe, hac_lag, conley_opts):
+    """Every model's meat from the sandwich kernel's shared passes: each
+    model is one score block w·(y − x'β̂) at its own literal β̂ (HC2/HC3
+    add its own leverage, plus the one-FE term all models share). Returns
+    the pass count."""
+    src, h_extra = frame, None
+    if vcov_type in ("hc2", "hc3") and fe:
+        src, h_extra = fe_leverage(frame.df, fe[0], weight_col)
+    blocks = [
+        ols_block(
+            frame.y_col if f.y_key == "__y1" else f.y_key, f.sol.betahat,
+            f.kept_x, f.icpt, weight_col, xtx_inv=f.sol.xtx_inv,
+            kind=vcov_type, h_extra=h_extra,
         )
-    )
-    return frame.df.select(*proj_cols, *[F.col(c) for c in carry])
-
-
-def _model_cols(f):
-    return ([Lit(1.0)] if f.icpt else []) + [Var(n) for n in f.kept_x]
-
-
-def _batched_hc1(frame, fits, weight_col):
-    """ALL models' HC1 meats from ONE aggregation pass."""
-    proj = _batched_resid_proj(frame, fits, weight_col, [])
-    spec: list[tuple[str, Agg]] = []
-    for m, f in enumerate(fits):
-        cols = _model_cols(f)
-        e = Var(f"__e{m}")
-        for i in range(len(cols)):
-            for j in range(i, len(cols)):
-                spec.append(
-                    (
-                        f"m{m}_{i}_{j}",
-                        asum(e * e * Cast(cols[i], "double") * Cast(cols[j], "double")),
-                    )
-                )
-    row = run_agg(proj, spec)
-    for m, f in enumerate(fits):
-        p = (1 if f.icpt else 0) + len(f.kept_x)
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                meat[i, j] = meat[j, i] = float(row[f"m{m}_{i}_{j}"])
-        f.meat = meat
-
-
-def _batched_cluster_pass(frame, fits, weight_col, cluster_cols):
-    """One grouped pass -> every model's CR1 meat clustered on
-    ``cluster_cols`` (their interaction). Returns (meats list, G)."""
-    proj = _batched_resid_proj(frame, fits, weight_col, cluster_cols)
-    score_spec: list[tuple[str, Agg]] = []
-    for m, f in enumerate(fits):
-        cols = _model_cols(f)
-        e = Var(f"__e{m}")
-        for i, c in enumerate(cols):
-            score_spec.append((f"s{m}_{i}", asum(e * Cast(c, "double"))))
-    scores = proj.groupBy(*[F.col(c) for c in cluster_cols]).agg(
-        *[agg_to_spark(a).alias(n) for n, a in score_spec]
-    )
-    outer: list[tuple[str, Agg]] = [
-        ("n_clusters", Agg("count_star", None, "long"))
+        for f in fits
     ]
-    for m, f in enumerate(fits):
-        p = (1 if f.icpt else 0) + len(f.kept_x)
-        for i in range(p):
-            for j in range(i, p):
-                outer.append(
-                    (f"m{m}_{i}_{j}", asum(Var(f"s{m}_{i}") * Var(f"s{m}_{j}")))
-                )
-    row = run_agg(scores, outer)
-    g = int(row["n_clusters"])
-    meats = []
-    for m, f in enumerate(fits):
-        p = (1 if f.icpt else 0) + len(f.kept_x)
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                meat[i, j] = meat[j, i] = float(row[f"m{m}_{i}_{j}"])
-        meats.append(meat)
-    return meats, g
-
-
-def _batched_cluster(frame, fits, weight_col, cluster_vars, n_total):
-    """1-way CR1 or multiway CGM for every model: one grouped pass per
-    cluster SUBSET (2^k - 1 total), each shared by all models."""
-    from itertools import combinations
-
-    n_passes = 0
-    if len(cluster_vars) == 1:
-        meats, g = _batched_cluster_pass(frame, fits, weight_col, cluster_vars)
-        for f, meat in zip(fits, meats):
-            f.meat, f.n_clusters = meat, g
-        return 1
-
-    comps: list[tuple[int, list[np.ndarray], int]] = []
-    g_single: dict[str, int] = {}
-    for r in range(1, len(cluster_vars) + 1):
-        for S in combinations(cluster_vars, r):
-            meats_S, g_S = _batched_cluster_pass(
-                frame, fits, weight_col, list(S)
-            )
-            n_passes += 1
-            comps.append((r, meats_S, g_S))
-            if r == 1:
-                g_single[S[0]] = g_S
-    g_min = min(g_single.values())
-    for mi, f in enumerate(fits):
-        scale_ref = (g_min / (g_min - 1)) * (
-            n_total / (n_total - f.n_params_cluster)
-        )
-        meat_eff = None
-        for r, meats_S, g_S in comps:
-            sign = 1.0 if r % 2 == 1 else -1.0
-            scale_S = (g_S / (g_S - 1)) * (
-                n_total / (n_total - f.n_params_cluster)
-            )
-            term = sign * (scale_S / scale_ref) * meats_S[mi]
-            meat_eff = term if meat_eff is None else meat_eff + term
-        f.meat, f.n_clusters = meat_eff, g_min
-    return n_passes
-
-
-def _batched_hck(frame, fits, weight_col, kind, fe):
-    """EVERY model's HC2/HC3 leverage-corrected meat from ONE aggregation:
-    each model's leverage is a LITERAL quadratic form with its own kept
-    inverse-Gram (driver-side constants), riding the shared residual
-    projection; 1 absorbed FE adds the exact w/W_g hat-matrix term from a
-    tiny group-weight table shared by all models (common sample)."""
-    k = 2 if kind == "hc3" else 1
-    # weight_col must ride the projection: the leverage terms below
-    # (h = w*h, h_fe = w/__Wg) reference it by name
-    extra = list(fe[:1]) + ([weight_col] if weight_col else [])
-    proj = _batched_resid_proj(frame, fits, weight_col, extra)
-    w = F.col(weight_col).cast("double") if weight_col else None
-    if fe:
-        fe1 = fe[0]
-        wsum = (
-            F.sum(F.col(weight_col).cast("double"))
-            if weight_col
-            else F.count(F.lit(1)).cast("double")
-        )
-        gt = frame.df.groupBy(fe1).agg(wsum.alias("__Wg"))
-        proj = proj.join(F.broadcast(gt), on=fe1)
-        h_fe = (w if w is not None else F.lit(1.0)) / F.col("__Wg")
-    else:
-        h_fe = F.lit(0.0)
-    aggs = []
-    for m, f in enumerate(fits):
-        Minv = np.asarray(f.sol.xtx_inv, dtype=float)
-        cols = ([F.lit(1.0)] if f.icpt else []) + [
-            F.col(n).cast("double") for n in f.kept_x
-        ]
-        p = len(cols)
-        h = F.lit(0.0)
-        for a in range(p):
-            for b in range(a, p):
-                c = float(Minv[a, b] * (1.0 if a == b else 2.0))
-                if c != 0.0:
-                    h = h + F.lit(c) * cols[a] * cols[b]
-        if w is not None:
-            h = w * h
-        h = h + h_fe
-        denom = F.greatest(F.lit(1.0) - h, F.lit(1e-12))
-        e = F.col(f"__e{m}")
-        psi2 = (e * e) / denom**k
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(
-                    F.sum(psi2 * cols[i] * cols[j]).alias(f"m{m}_{i}_{j}")
-                )
-    row = proj.agg(*aggs).collect()[0].asDict()
-    for m, f in enumerate(fits):
-        p = (1 if f.icpt else 0) + len(f.kept_x)
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                v = row[f"m{m}_{i}_{j}"]
-                meat[i, j] = meat[j, i] = float(v) if v is not None else 0.0
-        f.meat = meat
-
-
-def _batched_conley(frame, fits, weight_col, cluster_var, conley_opts):
-    """EVERY model's Conley spatial meat from ONE exploded cell join
-    (plans/conley.py:conley_pair_agg_batched): the shared residual
-    projection carries one ``__e{m}`` per model and each model's
-    K(d)·eᵢeⱼ·xᵢxⱼ sums land in its own column group of the same
-    aggregate row — M models, one pair pass instead of M."""
-    from .plans.conley import conley_pair_agg_batched
-
-    cutoff, kernel, distance = conley_opts
-    lat_col, lon_col = cluster_var
-    proj = _batched_resid_proj(frame, fits, weight_col, [lat_col, lon_col])
-    proj = proj.withColumn(
-        "__lat", F.col(lat_col).cast("double")
-    ).withColumn("__lon", F.col(lon_col).cast("double"))
-    groups = [(f"__e{m}", list(f.kept_x), f.icpt) for m, f in enumerate(fits)]
-    agg_df, ps, cached = conley_pair_agg_batched(
-        proj, groups, cutoff, kernel, distance, cache=True
+    res = sandwich_meat(
+        src, blocks, MEAT_KIND[vcov_type], keys or (), lag=hac_lag,
+        conley=conley_opts,
     )
-    row = agg_df.collect()[0].asDict()
-    if cached is not None:
-        cached.unpersist()
-    for m, f in enumerate(fits):
-        p = ps[m]
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                v = row[f"m{m}_{i}_{j}"]
-                meat[i, j] = meat[j, i] = float(v) if v is not None else 0.0
-        f.meat = meat
-
-
-def _batched_dk(frame, fits, weight_col, time_col, hac_lag):
-    """Driscoll-Kraay for every model from ONE per-period grouped pass:
-    collect the T x (sum of model widths) score table once, slice per model,
-    Newey-West combine driver-side."""
-    proj = _batched_resid_proj(frame, fits, weight_col, [time_col])
-    score_spec: list[tuple[str, Agg]] = []
-    for m, f in enumerate(fits):
-        for i, c in enumerate(_model_cols(f)):
-            score_spec.append(
-                (f"s{m}_{i}", asum(Var(f"__e{m}") * Cast(c, "double")))
-            )
-    pdf = (
-        proj.groupBy(F.col(time_col))
-        .agg(*[agg_to_spark(a).alias(n) for n, a in score_spec])
-        .toPandas()
-        .sort_values(time_col)
-        .reset_index(drop=True)
-    )
-    for m, f in enumerate(fits):
-        p = (1 if f.icpt else 0) + len(f.kept_x)
-        S = pdf[[f"s{m}_{i}" for i in range(p)]].to_numpy(dtype=float)
-        meat, T, _lag = nw_combine(S, hac_lag)
-        f.meat, f.n_clusters = meat, T
+    for f, meat in zip(fits, res.meats[None]):
+        f.meat, f.n_clusters = meat, res.g.get(None)
+    return res.passes
 
 
 def dbreg_multi(
@@ -977,22 +748,11 @@ def dbreg_multi(
             f.n_params_cluster = f.p_kept + df_fe
 
         # ---- batched second pass(es) for the sandwich meats ----
-        if vcov_type == "hc1":
-            _batched_hc1(frame, fits, weight_col)
-            n_passes += 1
-        elif vcov_type == "cluster":
-            n_passes += _batched_cluster(
-                frame, fits, weight_col, cluster_var, n_total
+        if vcov_type in MEAT_KIND:
+            n_passes += _model_meats(
+                frame, fits, weight_col, vcov_type, cluster_var, fe, hac_lag,
+                conley_opts,
             )
-        elif vcov_type == "dk":
-            _batched_dk(frame, fits, weight_col, cluster_var[0], hac_lag)
-            n_passes += 1
-        elif vcov_type == "conley":
-            _batched_conley(frame, fits, weight_col, cluster_var, conley_opts)
-            n_passes += 1
-        elif vcov_type in ("hc2", "hc3"):
-            _batched_hck(frame, fits, weight_col, vcov_type, fe)
-            n_passes += 1
     finally:
         frame.cleanup()
 

@@ -27,6 +27,7 @@ low-cardinality groups as factor regressors.
 
 from __future__ import annotations
 
+import logging
 import math
 import warnings
 
@@ -35,7 +36,7 @@ import pyspark.sql.functions as F
 
 from .design import standardize_coef_names
 from .formula import ParsedFormula, parse_formula, parse_vcov, parse_weights
-from .glm import GlmModel, _Family, _d, _eta_expr, get_family
+from .glm import GlmModel, _d, _eta_expr, get_family, glm_block
 from .multi import DbregMulti, _union_design, parse_multi_formula
 from .plans.common import resolve_source, run_agg
 from .plans.exprs import (
@@ -43,7 +44,6 @@ from .plans.exprs import (
     Expr,
     Lit,
     Var,
-    agg_to_spark,
     amax,
     amin,
     asum,
@@ -51,8 +51,10 @@ from .plans.exprs import (
     to_spark,
 )
 from .plans.frames import build_base_frame
-from .plans.meat import nw_combine
+from .plans.meat import MEAT_KIND, sandwich_meat
 from .solve import compute_vcov, detect_collinearity, gen_coeftable, solve_with_fallback
+
+_log = logging.getLogger("dbreg_spark")
 
 
 class GlmMulti(DbregMulti):
@@ -477,7 +479,7 @@ def dbglm_multi(
                     m.final_pearson = float(row[f"m{k}_pearson"])
                     m.accepted = m.cand
                     if verbose:
-                        print(f"[dbglm_multi] {m.key} iter {m.n_iter}: ll = {ll_i:.10g}")
+                        _log.info(f"[dbglm_multi] {m.key} iter {m.n_iter}: ll = {ll_i:.10g}")
                     if abs(ll_i - m.ll_prev) <= tol * (abs(ll_i) + 0.1):
                         m.ll_prev = ll_i
                         m.converged = True
@@ -539,7 +541,7 @@ def dbglm_multi(
                     )
                 m.fam = get_family("negbin", theta=1.0 / alpha)
                 if verbose:
-                    print(
+                    _log.info(
                         f"[dbglm_multi] {m.key} two-step theta-hat = "
                         f"{1.0 / alpha:.6g}"
                     )
@@ -551,17 +553,24 @@ def dbglm_multi(
         for m in models:
             m.meat = None
             m.n_clusters = None
-        if vcov_type in ("hc1", "cluster", "dk"):
-            n_passes += _batched_glm_meats(
-                fdf, fam, models, icpt_req, offset, weight_col, vcov_type,
-                cluster_vars, hac_lag, n_total,
+        if vcov_type in MEAT_KIND:
+            # one score block per model: its own family (negbin auto-theta
+            # gives each model its own theta) at its own final β
+            blocks = []
+            for m in models:
+                full = np.zeros(m.p_all)
+                full[np.asarray(m.keep_idx, dtype=int)] = m.beta
+                eta = _eta_expr(full, m.x, icpt_req, offset)
+                blocks.append(
+                    glm_block(m.fam, eta, _d(Var(m.y)), m.x_kept, m.icpt, weight_col)
+                )
+            res = sandwich_meat(
+                fdf, blocks, MEAT_KIND[vcov_type], cluster_vars or (),
+                lag=hac_lag, conley=conley_opts,
             )
-        if vcov_type == "conley":
-            _batched_glm_conley(
-                fdf, models, icpt_req, offset, weight_col, cluster_vars,
-                conley_opts,
-            )
-            n_passes += 1
+            n_passes += res.passes
+            for m, meat in zip(models, res.meats[None]):
+                m.meat, m.n_clusters = meat, res.g.get(None)
 
         # negbin: the reported loglik adds the beta-free lgamma terms (one
         # y-histogram pass per DISTINCT (outcome, theta); deviance stays
@@ -675,194 +684,3 @@ def dbglm_multi(
             _betahat=m.beta,
         )
     return out
-
-
-def _batched_glm_conley(
-    fdf, models, icpt_req, offset, weight_col, cluster_vars, conley_opts
-):
-    """EVERY model's Conley spatial GLM meat from ONE exploded cell join
-    (plans/conley.py:conley_pair_agg_batched): per-model family scores
-    s_k = m.fam.score(mu_k, y_k) at each model's final beta ride the
-    shared projection as __e{k}; each model's K(d)-weighted block lands
-    in its own column group of the same aggregate row."""
-    from .plans.conley import conley_pair_agg_batched
-
-    cutoff, kernel, distance = conley_opts
-    lat_col, lon_col = cluster_vars
-    om: Expr | None = _d(Var(weight_col)) if weight_col else None
-    proj_cols = []
-    for k, m in enumerate(models):
-        y = _d(Var(m.y))
-        full = np.zeros(m.p_all)
-        full[np.asarray(m.keep_idx, dtype=int)] = m.beta
-        eta = _eta_expr(full, m.x, icpt_req, offset)
-        mu = m.fam.mu(eta)
-        s = m.fam.score(mu, y)
-        if om is not None:
-            s = om * s
-        proj_cols.append(to_spark(_d(s)).alias(f"__e{k}"))
-    carry = dict.fromkeys(sum([m.x_kept for m in models], []))
-    proj = fdf.select(
-        *proj_cols,
-        *[F.col(c) for c in carry],
-        F.col(lat_col).cast("double").alias("__lat"),
-        F.col(lon_col).cast("double").alias("__lon"),
-    )
-    groups = [(f"__e{k}", list(m.x_kept), m.icpt) for k, m in enumerate(models)]
-    agg_df, ps, cached = conley_pair_agg_batched(
-        proj, groups, cutoff, kernel, distance, cache=True
-    )
-    row = agg_df.collect()[0].asDict()
-    if cached is not None:
-        cached.unpersist()
-    for k, m in enumerate(models):
-        p = ps[k]
-        meat = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                v = row[f"m{k}_{i}_{j}"]
-                meat[i, j] = meat[j, i] = float(v) if v is not None else 0.0
-        m.meat = meat
-
-
-def _batched_glm_meats(
-    fdf, fam: _Family, models, icpt_req, offset, weight_col, vcov_type,
-    cluster_vars, hac_lag, n_total,
-):
-    """All models' HC1 / CR1 / DK meats from shared passes (one per
-    cluster subset for CGM). Mirrors multi._batched_* with GLM scores."""
-    om: Expr | None = _d(Var(weight_col)) if weight_col else None
-
-    def score_proj(extra_keys):
-        """Every model's score column plus the carried columns, for one
-        shared pass."""
-        proj_exprs: list[tuple[str, Expr]] = []
-        carry: list[str] = []
-        for k, m in enumerate(models):
-            y = _d(Var(m.y))
-            eta = _eta_expr(to_full_beta(m), m.x, icpt_req, offset)
-            # per-model family (negbin auto-theta gives each model its own
-            # theta, hence its own score weight mu/(1+mu/theta))
-            mfam = getattr(m, "fam", fam)
-            mu = mfam.mu(eta)
-            s = mfam.score(mu, y)
-            if om is not None:
-                s = om * s
-            proj_exprs.append((f"__s{k}", _d(s)))
-            carry += m.x_kept
-        carry = dict.fromkeys(carry + list(extra_keys))
-        return fdf.select(
-            *[to_spark(e).alias(n) for n, e in proj_exprs],
-            *[F.col(c) for c in carry],
-        )
-
-    def to_full_beta(m):
-        full = np.zeros(m.p_all)
-        full[np.asarray(m.keep_idx, dtype=int)] = m.beta
-        return full
-
-    def model_cols(m):
-        return ([Lit(1.0)] if m.icpt else []) + [Var(n) for n in m.x_kept]
-
-    if vcov_type == "hc1":
-        spec: list[tuple[str, Agg]] = []
-        for k, m in enumerate(models):
-            cols = model_cols(m)
-            e = Var(f"__s{k}")
-            for i in range(len(cols)):
-                for j in range(i, len(cols)):
-                    spec.append(
-                        (f"m{k}_{i}_{j}",
-                         asum(e * e * _d(cols[i]) * _d(cols[j])))
-                    )
-        row = run_agg(score_proj([]), spec)
-        for k, m in enumerate(models):
-            p = len(model_cols(m))
-            meat = np.zeros((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    meat[i, j] = meat[j, i] = float(row[f"m{k}_{i}_{j}"])
-            m.meat = meat
-        return 1
-
-    if vcov_type == "dk":
-        tcol = cluster_vars[0]
-        proj = score_proj([tcol])
-        sspec: list[tuple[str, Agg]] = []
-        for k, m in enumerate(models):
-            for i, c in enumerate(model_cols(m)):
-                sspec.append((f"s{k}_{i}", asum(Var(f"__s{k}") * _d(c))))
-        pdf = (
-            proj.groupBy(F.col(tcol))
-            .agg(*[agg_to_spark(a).alias(n) for n, a in sspec])
-            .toPandas()
-            .sort_values(tcol).reset_index(drop=True)
-        )
-        for k, m in enumerate(models):
-            p = len(model_cols(m))
-            S = pdf[[f"s{k}_{i}" for i in range(p)]].to_numpy(dtype=float)
-            meat, T, _lag = nw_combine(S, hac_lag)
-            m.meat, m.n_clusters = meat, T
-        return 1
-
-    # cluster: one pass per CGM subset, shared by all models
-    from itertools import combinations
-
-    def one_subset(keys):
-        proj = score_proj(keys)
-        score_spec: list[tuple[str, Agg]] = []
-        for k, m in enumerate(models):
-            for i, c in enumerate(model_cols(m)):
-                score_spec.append((f"s{k}_{i}", asum(Var(f"__s{k}") * _d(c))))
-        scores = proj.groupBy(*[F.col(c) for c in keys]).agg(
-            *[agg_to_spark(a).alias(n) for n, a in score_spec]
-        )
-        outer: list[tuple[str, Agg]] = [
-            ("n_clusters", Agg("count_star", None, "long"))
-        ]
-        for k, m in enumerate(models):
-            p = len(model_cols(m))
-            for i in range(p):
-                for j in range(i, p):
-                    outer.append(
-                        (f"m{k}_{i}_{j}",
-                         asum(Var(f"s{k}_{i}") * Var(f"s{k}_{j}")))
-                    )
-        row = run_agg(scores, outer)
-        g = int(row["n_clusters"])
-        meats = []
-        for k, m in enumerate(models):
-            p = len(model_cols(m))
-            meat = np.zeros((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    meat[i, j] = meat[j, i] = float(row[f"m{k}_{i}_{j}"])
-            meats.append(meat)
-        return meats, g
-
-    if len(cluster_vars) == 1:
-        meats, g = one_subset(list(cluster_vars))
-        for m, meat in zip(models, meats):
-            m.meat, m.n_clusters = meat, g
-        return 1
-
-    comps = []
-    g_single = {}
-    n_passes = 0
-    for r in range(1, len(cluster_vars) + 1):
-        for S in combinations(cluster_vars, r):
-            meats_S, g_S = one_subset(list(S))
-            n_passes += 1
-            comps.append((r, meats_S, g_S))
-            if r == 1:
-                g_single[S[0]] = g_S
-    gmin = min(g_single.values())
-    scale_ref = gmin / (gmin - 1)
-    for mi, m in enumerate(models):
-        meat = None
-        for r, meats_S, g_S in comps:
-            sign = 1.0 if r % 2 == 1 else -1.0
-            term = sign * ((g_S / (g_S - 1)) / scale_ref) * meats_S[mi]
-            meat = term if meat is None else meat + term
-        m.meat, m.n_clusters = meat, gmin
-    return n_passes

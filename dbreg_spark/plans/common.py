@@ -178,8 +178,13 @@ def run_agg(
     df: DataFrame,
     spec: list[tuple[str, Agg]],
     fe_cols: list[str] | None = None,
-) -> dict:
+    by: list[str] | None = None,
+    limit: int | None = None,
+):
     """Execute a single-row aggregation and return it as a plain dict.
+
+    ``by`` groups the aggregation instead and returns one dict per group
+    (with the key columns), at most ``limit`` of them.
 
     When the spec carries exact ``COUNT(DISTINCT fe)`` entries and ``fe_cols``
     names those columns, the aggregation runs in TWO levels: partial sums per
@@ -190,6 +195,11 @@ def run_agg(
     sf0.1 and triples the aggregation input at 100 TB. The two-level shape
     pays one cell-keyed shuffle instead (cells = occupied FE combinations).
     """
+    if by is not None:
+        out = df.groupBy(*by).agg(*[agg_to_spark(a).alias(n) for n, a in spec])
+        if limit is not None:
+            out = out.limit(limit)
+        return [r.asDict() for r in out.collect()]
     cd = [(name, a) for name, a in spec if a.kind == "count_distinct"]
     two_level = (
         bool(fe_cols)

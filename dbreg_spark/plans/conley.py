@@ -48,7 +48,7 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 
-from .exprs import Cast, Lit, Var, to_spark
+from .exprs import Cast, Var, to_spark
 from .frames import Frame
 from .meat import _d, _resid_expr
 
@@ -89,7 +89,7 @@ def conley_meat_plan(
     :func:`conley_meat`; ``cache=True`` persists the slim score projection
     so the probes and both join sides read ONE upstream scan (the caller
     unpersists after collecting)."""
-    r = _resid_expr(frame, betahat, x_names, intercept)
+    r = _resid_expr(frame.y_col, betahat, x_names, intercept)
     if weight_col is not None:
         r = _d(Var(weight_col)) * r  # WLS score s = w·u·x
     s_names = list(dict.fromkeys(x_names))

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .design import build_design, standardize_coef_names
 from .formula import parse_formula, parse_vcov, parse_weights
@@ -39,8 +40,9 @@ from .plans.common import (
     moment_spec,
     resolve_source,
 )
-from .plans.exprs import Var, agg_to_spark, agg_to_sql
+from .plans.exprs import Cast, Lit, Var, agg_to_spark, agg_to_sql
 from .plans.frames import _wmean_col, build_base_frame
+from .plans.meat import MEAT_KIND, ScoreBlock, fe_leverage, quad_form, sandwich_meat
 from .solve import (
     compute_vcov,
     detect_collinearity,
@@ -135,7 +137,7 @@ def dbreg_split(
         # batched: every level's spatial meat rides ONE exploded cell join
         # (the level joins the cell key — see plans/conley.py:
         # conley_pair_agg_batched); per-level betas enter as a broadcast
-        # (level -> beta) table exactly like _split_meats
+        # (level -> beta) table exactly like _level_meats
         if conley_cutoff is None:
             raise ValueError(
                 "vcov='conley ~ lat + lon' needs conley_cutoff= (km for "
@@ -429,20 +431,10 @@ def _grouped_fit(
 
     meats = {}
     n_clusters = {}
-    if vcov_type in ("hc1", "cluster", "dk") and sols:
-        meats, n_clusters = _split_meats(
+    if vcov_type in MEAT_KIND and sols:
+        meats, n_clusters = _level_meats(
             frame_df, split, base.y_col, x_cols, intercept, sols, vcov_type,
-            cluster_vars, weight_col, hac_lag=hac_lag,
-        )
-    if vcov_type in ("hc2", "hc3") and sols:
-        meats = _split_hck_meats(
-            frame_df, split, base.y_col, x_cols, intercept, sols, vcov_type,
-            weight_col, fe,
-        )
-    if vcov_type == "conley" and sols:
-        meats = _split_conley_meats(
-            frame_df, split, base.y_col, x_cols, intercept, sols,
-            cluster_vars, weight_col, conley_opts,
+            cluster_vars, weight_col, fe, hac_lag, conley_opts,
         )
     cr3_V: dict = {}
     if vcov_type == "cr3" and sols:
@@ -497,199 +489,6 @@ def _grouped_fit(
             weight_col=weight_col,
         )
     return models
-
-
-def _split_hck_meats(
-    frame_df, split, y_col, x_cols, intercept, sols, kind, weight_col, fe
-):
-    """Every level's HC2/HC3 leverage-corrected meat from ONE grouped
-    pass: per-level betas AND per-level kept inverse-Grams ride broadcast
-    (level -> values) tables (dropped-column entries are 0, so the full-
-    layout quadratic form equals the kept-design leverage); 1-FE demean
-    adds the exact w/W_(level,g) hat-matrix term from a tiny
-    (level, fe) weight table — the same decomposition as
-    plans/meat.py:hck_meat."""
-    from pyspark.sql import types as T
-
-    spark = frame_df.sparkSession
-    p_x = len(x_cols)
-    off = 1 if intercept else 0
-    p = off + p_x
-    names_all = (["(Intercept)"] if intercept else []) + [
-        standardize_coef_names(n) for n in x_cols
-    ]
-    pos = {}
-    beta_rows = []
-    minv_rows = []
-    for lvl, s in sols.items():
-        collin, sol = s["collin"], s["sol"]
-        full = np.zeros(p)
-        keep = []
-        for name, b in zip(collin.keep_names, sol.betahat):
-            full[names_all.index(name)] = b
-        beta_rows.append((lvl,) + tuple(float(v) for v in full))
-        Mfull = np.zeros((p, p))
-        ki = np.asarray(collin.keep_idx, dtype=int)
-        Mfull[np.ix_(ki, ki)] = sol.xtx_inv
-        tri = [
-            float(Mfull[a, b_]) for a in range(p) for b_ in range(a, p)
-        ]
-        minv_rows.append((lvl,) + tuple(tri))
-        pos[lvl] = collin
-    bt = spark.createDataFrame(
-        beta_rows,
-        schema=beta_schema(frame_df.schema[split].dataType, p),
-    )
-    n_tri = p * (p + 1) // 2
-    mt_fields = [T.StructField("__lvl", frame_df.schema[split].dataType)] + [
-        T.StructField(f"__q{i}", T.DoubleType()) for i in range(n_tri)
-    ]
-    mt = spark.createDataFrame(minv_rows, schema=T.StructType(mt_fields))
-    j = (
-        frame_df.join(
-            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-        )
-        .drop("__lvl")
-        .join(
-            F.broadcast(mt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-        )
-        .drop("__lvl")
-    )
-    bcols = [f"__b{i}" for i in range(p)]
-    fitted = F.col("__b0") if intercept else F.lit(0.0)
-    for i, xc in enumerate(x_cols):
-        fitted = fitted + F.col(bcols[off + i]) * F.col(xc).cast("double")
-    e = F.col(y_col).cast("double") - fitted
-    wcol = (
-        F.col(weight_col).cast("double") if weight_col is not None else None
-    )
-    if wcol is not None:
-        e = wcol * e
-
-    score_cols = ([F.lit(1.0)] if intercept else []) + [
-        F.col(xc).cast("double") for xc in x_cols
-    ]
-    h = F.lit(0.0)
-    qi = 0
-    for a in range(p):
-        for b_ in range(a, p):
-            mult = F.lit(1.0) if a == b_ else F.lit(2.0)
-            h = h + mult * F.col(f"__q{qi}") * score_cols[a] * score_cols[b_]
-            qi += 1
-    if wcol is not None:
-        h = wcol * h
-    if fe:
-        # exact 1-FE LSDV leverage: + w / W_(level, g)
-        fe1 = fe[0]
-        wsum = (
-            F.sum(F.col(weight_col).cast("double"))
-            if weight_col is not None
-            else F.count(F.lit(1)).cast("double")
-        )
-        gt = frame_df.groupBy(
-            F.col(split).alias("__s1"), F.col(fe1).alias("__f1")
-        ).agg(wsum.alias("__Wg"))
-        j = j.join(
-            F.broadcast(gt),
-            on=F.col(split).eqNullSafe(F.col("__s1"))
-            & (F.col(fe1) == F.col("__f1")),
-        ).drop("__s1", "__f1")
-        h = h + (wcol if wcol is not None else F.lit(1.0)) / F.col("__Wg")
-
-    k = 1 if kind == "hc2" else 2
-    denom = F.greatest(F.lit(1.0) - h, F.lit(1e-12))
-    psi2 = (e * e) / denom**k
-    aggs = []
-    for a in range(p):
-        for b_ in range(a, p):
-            aggs.append(
-                F.sum(psi2 * score_cols[a] * score_cols[b_]).alias(
-                    f"m_{a}_{b_}"
-                )
-            )
-    rows = j.groupBy(split).agg(*aggs).collect()
-    meats = {}
-    for r in rows:
-        lvl = r[split]
-        Mf = np.zeros((p, p))
-        for a in range(p):
-            for b_ in range(a, p):
-                v = r[f"m_{a}_{b_}"]
-                Mf[a, b_] = Mf[b_, a] = float(v) if v is not None else 0.0
-        ki = np.asarray(pos[lvl].keep_idx, dtype=int)
-        meats[lvl] = Mf[np.ix_(ki, ki)]
-    return meats
-
-
-def _split_conley_meats(
-    frame_df, split, y_col, x_cols, intercept, sols, cluster_vars,
-    weight_col, conley_opts,
-):
-    """Every level's Conley spatial meat from ONE exploded cell join
-    (plans/conley.py:conley_pair_agg_batched, group_col=split): per-level
-    betas ride the same broadcast (level -> beta) table as _split_meats,
-    the level joins the cell key so no cross-level pair is ever evaluated,
-    and the grouped aggregation returns one meat row per level, sliced to
-    each level's kept coefficient layout driver-side."""
-    from .plans.conley import conley_pair_agg_batched
-
-    cutoff, kernel, distance = conley_opts
-    lat_col, lon_col = cluster_vars
-    spark = frame_df.sparkSession
-    p_x = len(x_cols)
-    off = 1 if intercept else 0
-    names_all = (["(Intercept)"] if intercept else []) + [
-        standardize_coef_names(n) for n in x_cols
-    ]
-    pos = {}
-    beta_rows = []
-    for lvl, s in sols.items():
-        collin, sol = s["collin"], s["sol"]
-        full = np.zeros(off + p_x)
-        for name, b in zip(collin.keep_names, sol.betahat):
-            full[names_all.index(name)] = b
-        beta_rows.append((lvl,) + tuple(float(v) for v in full))
-        pos[lvl] = collin
-    bcols = [f"__b{i}" for i in range(off + p_x)]
-    bt = spark.createDataFrame(
-        beta_rows,
-        schema=beta_schema(frame_df.schema[split].dataType, off + p_x),
-    )
-    j = frame_df.join(
-        F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-    ).drop("__lvl")
-    fitted = F.col("__b0") if intercept else F.lit(0.0)
-    for i, xc in enumerate(x_cols):
-        fitted = fitted + F.col(bcols[off + i]) * F.col(xc).cast("double")
-    e = F.col(y_col).cast("double") - fitted
-    if weight_col is not None:
-        e = F.col(weight_col).cast("double") * e  # WLS score s = w·u·x
-    proj = j.select(
-        F.col(split),
-        e.alias("__e"),
-        *[F.col(c) for c in x_cols],
-        F.col(lat_col).cast("double").alias("__lat"),
-        F.col(lon_col).cast("double").alias("__lon"),
-    )
-    agg_df, ps, cached = conley_pair_agg_batched(
-        proj, [("__e", list(x_cols), intercept)], cutoff, kernel, distance,
-        cache=True, group_col=split,
-    )
-    rows = agg_df.collect()
-    if cached is not None:
-        cached.unpersist()
-    p = ps[0]
-    meats = {}
-    for r in rows:
-        lvl = r[split]
-        Mfull = np.zeros((p, p))
-        for a in range(p):
-            for b in range(a, p):
-                v = r[f"m0_{a}_{b}"]
-                Mfull[a, b] = Mfull[b, a] = float(v) if v is not None else 0.0
-        keep = np.asarray(pos[lvl].keep_idx, dtype=int)
-        meats[lvl] = Mfull[np.ix_(keep, keep)]
-    return meats
 
 
 def _split_cr3(
@@ -767,188 +566,73 @@ def _split_cr3(
         ncl[lvl] = G
     return Vs, ncl
 
-def combine_level_scores(per_level, key_cols, vcov_type, hac_lag, p):
-    """Driver-side reduction of per-(level, key-tuple) score vectors into
-    per-level meats — shared by the linear, GLM and FE-Poisson split paths.
 
-    ``per_level``: {level: [(key_tuple, score_vec p,)]} from ONE grouped
-    pass over the finest key. DK sorts by the (single) period key and
-    Newey-West-combines; 1-way sums outer products; multiway runs the CGM
-    inclusion-exclusion with each subset's g_S/(g_S-1) folded into an
-    effective meat (compute_vcov then applies the G=min single-variable G
-    convention, the n/(n-p) factors cancelling within a level). Degenerate
-    levels (one period / one cluster / g_S<2) raise a clear per-level error
-    instead of a downstream ZeroDivisionError (ADVICE r06). Returns
-    (meats, n_clusters) keyed by level.
-    """
-    meats: dict = {}
-    n_clusters: dict = {}
-    if vcov_type == "dk":
-        from .plans.meat import nw_combine
-
-        for lvl, pairs in per_level.items():
-            if len(pairs) < 2:
-                raise ValueError(
-                    f"Driscoll-Kraay needs >= 2 time periods within each "
-                    f"split level; {key_cols[0]!r} has {len(pairs)} in "
-                    f"level {lvl!r}"
-                )
-            pairs.sort(key=lambda e: (e[0][0] is None, e[0][0]))
-            S = np.vstack([sv for _, sv in pairs])
-            meats[lvl], n_clusters[lvl], _ = nw_combine(S, hac_lag)
-        return meats, n_clusters
-    if len(key_cols) == 1:
-        for lvl, pairs in per_level.items():
-            if len(pairs) < 2:
-                raise ValueError(
-                    f"clustered vcov needs >= 2 clusters within each split "
-                    f"level; {key_cols[0]!r} has {len(pairs)} in level "
-                    f"{lvl!r}"
-                )
-            M = np.zeros((p, p))
-            for _, sv in pairs:
-                M += np.outer(sv, sv)
-            meats[lvl] = M
-            n_clusters[lvl] = len(pairs)
-        return meats, n_clusters
-    from itertools import combinations
-
-    k = len(key_cols)
-    for lvl, pairs in per_level.items():
-        comps = []
-        g_single = {}
-        for r_sz in range(1, k + 1):
-            for S_idx in combinations(range(k), r_sz):
-                groups: dict = {}
-                for kt, sv in pairs:
-                    sub = tuple(kt[i] for i in S_idx)
-                    acc = groups.get(sub)
-                    groups[sub] = sv if acc is None else acc + sv
-                g_S = len(groups)
-                if g_S < 2:
-                    raise ValueError(
-                        f"multiway clustering needs >= 2 clusters per "
-                        f"dimension within each split level; "
-                        f"{'x'.join(key_cols[i] for i in S_idx)} has "
-                        f"{g_S} in level {lvl!r}"
-                    )
-                M = np.zeros((p, p))
-                for svv in groups.values():
-                    M += np.outer(svv, svv)
-                comps.append((r_sz, M, g_S))
-                if r_sz == 1:
-                    g_single[S_idx[0]] = g_S
-        g_min = min(g_single.values())
-        scale_ref = g_min / (g_min - 1)
-        M_eff = np.zeros((p, p))
-        for r_sz, M, g_S in comps:
-            sign = 1.0 if r_sz % 2 == 1 else -1.0
-            M_eff += sign * ((g_S / (g_S - 1)) / scale_ref) * M
-        meats[lvl] = M_eff
-        n_clusters[lvl] = g_min
-    return meats, n_clusters
-
-
-def _split_meats(
+def _level_meats(
     frame_df, split, y_col, x_cols, intercept, sols, vcov_type, cluster_vars,
-    weight_col, hac_lag=None,
+    weight_col, fe, hac_lag=None, conley_opts=None,
 ):
-    """One grouped pass for every level's HC1 meat (or per-(level, key)
-    scores for cluster/CGM/DK): the per-level β̂ rides a broadcast (level → β) table into the
-    residual expression. Dropped-by-collinearity columns carry β = 0 —
-    fitted values are unchanged (the dropped column is a linear combination
-    of kept ones), so the residual is exact; the driver then slices each
-    level's meat to its kept coefficient layout."""
+    """Every level's meat from ONE sandwich-kernel call with ``by=split``:
+    the per-level β̂ rides a broadcast (level → β) table into the score
+    w·(y − x'β̂), and for HC2/HC3 the per-level kept inverse Gram rides a
+    second one into the leverage (plus the exact one-FE term w/W_(level,g)).
+    Dropped-by-collinearity columns carry 0, which leaves fitted values
+    and leverages unchanged; each level's meat is then sliced to its kept
+    coefficient layout. Returns (meats, n_clusters) keyed by level."""
     spark = frame_df.sparkSession
-    p_x = len(x_cols)
-    pos = {}
-    off = 1 if intercept else 0
-    beta_rows = []
-    for lvl, s in sols.items():
-        collin, sol = s["collin"], s["sol"]
-        full = np.zeros(off + p_x)
-        names_all = (["(Intercept)"] if intercept else []) + [
-            standardize_coef_names(n) for n in x_cols
-        ]
-        for name, b in zip(collin.keep_names, sol.betahat):
-            full[names_all.index(name)] = b
+    lvl_type = frame_df.schema[split].dataType
+    p = (1 if intercept else 0) + len(x_cols)
+    hck = vcov_type in ("hc2", "hc3")
+    tri = [(a, b) for a in range(p) for b in range(a, p)]
+    beta_rows, minv_rows = [], []
+    for lvl, sl in sols.items():
+        keep = np.asarray(sl["collin"].keep_idx, dtype=int)
+        full = np.zeros(p)
+        full[keep] = sl["sol"].betahat
         beta_rows.append((lvl,) + tuple(float(v) for v in full))
-        pos[lvl] = collin
-    bcols = [f"__b{i}" for i in range(off + p_x)]
-    bt = spark.createDataFrame(
-        beta_rows, schema=beta_schema(frame_df.schema[split].dataType, off + p_x)
-    )
+        if hck:
+            M = np.zeros((p, p))
+            M[np.ix_(keep, keep)] = sl["sol"].xtx_inv
+            minv_rows.append((lvl,) + tuple(float(M[ab]) for ab in tri))
 
-    # null-safe: a NULL split value is a real level and must match its row
-    j = frame_df.join(
-        F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-    ).drop("__lvl")
-    fitted = (F.col("__b0") if intercept else F.lit(0.0))
+    def join(df, rows, schema):
+        bt = spark.createDataFrame(rows, schema=schema)
+        # null-safe: a NULL split value is a real level and must match
+        return df.join(
+            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
+        ).drop("__lvl")
+
+    j = join(frame_df, beta_rows, beta_schema(lvl_type, p))
+    off = 1 if intercept else 0
+    fitted = Var("__b0") if intercept else Lit(0.0)
     for i, xc in enumerate(x_cols):
-        fitted = fitted + F.col(bcols[off + i]) * F.col(xc).cast("double")
-    e = F.col(y_col).cast("double") - fitted
-    if weight_col is not None:
-        e = F.col(weight_col).cast("double") * e  # WLS score factor w·u
-    j = j.withColumn("__e", e)
-
-    score_cols = ([F.lit(1.0)] if intercept else []) + [
-        F.col(xc).cast("double") for xc in x_cols
-    ]
-    p = len(score_cols)
-
-    if vcov_type == "hc1":
-        aggs = []
-        for a in range(p):
-            for b in range(a, p):
-                aggs.append(
-                    F.sum(
-                        F.col("__e") * F.col("__e") * score_cols[a] * score_cols[b]
-                    ).alias(f"m_{a}_{b}")
-                )
-        rows = j.groupBy(split).agg(*aggs).collect()
-        meats = {}
-        for r in rows:
-            lvl = r[split]
-            Mfull = np.zeros((p, p))
-            for a in range(p):
-                for b in range(a, p):
-                    v = float(r[f"m_{a}_{b}"] or 0.0)
-                    Mfull[a, b] = Mfull[b, a] = v
-            keep = np.asarray(pos[lvl].keep_idx, dtype=int)
-            meats[lvl] = Mfull[np.ix_(keep, keep)]
-        return meats, {}
-
-    # cluster (1-way or CGM multiway) and Driscoll-Kraay all reduce to
-    # per-(level, key-tuple) score vectors from ONE grouped pass over the
-    # FINEST key (all cluster variables together, or the period column) —
-    # scores are additive, so every CGM subset component is a driver-side
-    # re-aggregation of the same rows. The collect is Σ_g (finest cells)
-    # rows of p doubles — bounded explicitly (a silent full collect could
-    # exceed the driver at extreme level × cluster cardinalities).
-    key_cols = list(cluster_vars)
-    aggs = [F.sum(F.col("__e") * score_cols[a]).alias(f"s_{a}") for a in range(p)]
-    scores_df = j.groupBy(split, *key_cols).agg(*aggs)
-    cap = 2_000_000
-    rows = scores_df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"split x cluster score table exceeds {cap:,} rows; use a "
-            "coarser split or cluster variable (or fit levels separately)"
+        fitted = fitted + Var(f"__b{off + i}") * Cast(Var(xc), "double")
+    score = Cast(Var(y_col), "double") - fitted
+    w = Cast(Var(weight_col), "double") if weight_col is not None else None
+    if w is not None:
+        score = w * score
+    block = ScoreBlock(score, tuple(x_cols), intercept)
+    if hck:
+        q_schema = T.StructType(
+            [T.StructField("__lvl", lvl_type)]
+            + [T.StructField(f"__q{i}", T.DoubleType()) for i in range(len(tri))]
         )
-    per_level: dict = {}
-    for r in rows:
-        lvl = r[split]
-        kt = tuple(r[c] for c in key_cols)
-        s = np.array([float(r[f"s_{a}"] or 0.0) for a in range(p)])
-        per_level.setdefault(lvl, []).append((kt, s))
-
-    meats, n_clusters = combine_level_scores(
-        per_level, key_cols, vcov_type, hac_lag, p
+        j = join(j, minv_rows, q_schema)
+        h = quad_form(block.cols, lambda a, b: Var(f"__q{tri.index((a, b))}"))
+        if w is not None:
+            h = w * h
+        if fe:
+            j, h_fe = fe_leverage(j, fe[0], weight_col, by=split)
+            h = h + h_fe
+        block = ScoreBlock(score, block.x, intercept, h, 2 if vcov_type == "hc3" else 1)
+    res = sandwich_meat(
+        j, [block], MEAT_KIND[vcov_type], cluster_vars or (), by=split,
+        lag=hac_lag, conley=conley_opts,
     )
-    for lvl in list(meats):
-        keep = np.asarray(pos[lvl].keep_idx, dtype=int)
-        meats[lvl] = meats[lvl][np.ix_(keep, keep)]
-    return meats, n_clusters
+    meats = {}
+    for lvl, (meat,) in res.meats.items():
+        keep = np.asarray(sols[lvl]["collin"].keep_idx, dtype=int)
+        meats[lvl] = meat[np.ix_(keep, keep)]
+    return meats, res.g
 
 
 def _split_compress(

@@ -24,6 +24,7 @@ per level with ``dbglm`` for those.
 
 from __future__ import annotations
 
+import logging
 import math
 import warnings
 
@@ -33,10 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .design import build_design, standardize_coef_names
 from .formula import parse_formula, parse_vcov, parse_weights
-from .glm import GlmModel, _decode_pass, get_family
+from .glm import GlmModel, _decode_pass, _scores_block, get_family, glm_block
 from .plans.common import resolve_source
 from .plans.exprs import (
-    Agg,
     Func,
     Lit,
     Var,
@@ -54,7 +54,10 @@ from .solve import (
     gen_coeftable,
     solve_with_fallback,
 )
-from .split import DbregSplit, beta_schema, combine_level_scores
+from .plans.meat import MEAT_KIND, sandwich_meat
+from .split import DbregSplit, beta_schema
+
+_log = logging.getLogger("dbreg_spark")
 
 
 def _d(e):
@@ -364,7 +367,7 @@ def _fit_lockstep(
             st["final_row"], st["final_a"] = row, a_i
             st["accepted"] = st["cand"]
             if verbose:
-                print(f"[dbglm_split] {lvl!r} iter {st['n_iter']}: ll = {ll_i:.10g}")
+                _log.info(f"[dbglm_split] {lvl!r} iter {st['n_iter']}: ll = {ll_i:.10g}")
             if abs(ll_i - st["ll_prev"]) <= tol * (abs(ll_i) + 0.1):
                 st["ll_prev"] = ll_i
                 st["converged"] = True
@@ -384,16 +387,24 @@ def _fit_lockstep(
     # ---- sandwiches: one more grouped pass at the FINAL β ----------------
     meats = {}
     n_clusters = {}
-    if vcov_type in ("hc1", "cluster", "dk"):
-        meats, n_clusters = _grouped_glm_meat(
-            frame_df, sess, fam, split, states, x_names, icpt, offset,
-            weight_col, vcov_type, cluster_vars, p_all, hac_lag,
+    if vcov_type in MEAT_KIND:
+        bt = _beta_frame(
+            sess, frame_df.schema[split].dataType,
+            {l: dict(s, cand=s["beta"]) for l, s in states.items()},
+            p_all,
         )
-    if vcov_type == "conley":
-        meats = _grouped_glm_conley(
-            frame_df, sess, fam, split, states, x_names, icpt, offset,
-            weight_col, cluster_vars, p_all, conley_opts,
+        j = frame_df.join(
+            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
+        ).drop("__lvl")
+        block = glm_block(
+            fam, _col_eta(x_names, icpt, offset), _d(Var("__y_raw")), x_names,
+            icpt, weight_col,
         )
+        res = sandwich_meat(
+            j, [block], MEAT_KIND[vcov_type], cluster_vars or (), by=split,
+            lag=hac_lag, conley=conley_opts,
+        )
+        meats, n_clusters = _kept_meats(res, states), res.g
 
     out = GlmSplit()
     out.split_var = split
@@ -428,145 +439,13 @@ def _validate_level(fam, parsed, weight_col, lvl, row):
         raise ValueError(f"poisson needs a non-negative outcome{tag}")
 
 
-def _grouped_glm_meat(
-    frame_df, sess, fam, split, states, x_names, icpt, offset, weight_col,
-    vcov_type, cluster_vars, p_all, hac_lag=None,
-):
-    bt = _beta_frame(
-        sess, frame_df.schema[split].dataType,
-        {l: dict(s, cand=s["beta"]) for l, s in states.items()},
-        p_all,
-    )
-    j = frame_df.join(
-        F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-    ).drop("__lvl")
-    y = _d(Var("__y_raw"))
-    eta = _col_eta(x_names, icpt, offset)
-    mu = fam.mu(eta)
-    s = y - mu
-    if weight_col is not None:
-        s = _d(Var(weight_col)) * s
-    cols = ([Lit(1.0)] if icpt else []) + [Var(n) for n in x_names]
-    p = len(cols)
-    keep_sets = {l: np.asarray(st["keep_idx"], dtype=int) for l, st in states.items()}
-
-    if vcov_type == "hc1":
-        proj = j.select(
-            F.col(split).alias("__sp"),
-            to_spark(_d(s)).alias("__s"),
-            *[F.col(n) for n in x_names],
-        )
-        sv = Var("__s")
-        mspec: list[tuple[str, Agg]] = []
-        for i in range(p):
-            for k in range(i, p):
-                mspec.append(
-                    (f"m_{i}_{k}", asum(sv * sv * _d(cols[i]) * _d(cols[k])))
-                )
-        rows = (
-            proj.groupBy("__sp")
-            .agg(*[agg_to_spark(a).alias(n) for n, a in mspec])
-            .collect()
-        )
-        meats = {}
-        for r in rows:
-            lvl = r["__sp"]
-            M = np.zeros((p, p))
-            for i in range(p):
-                for k in range(i, p):
-                    M[i, k] = M[k, i] = float(r[f"m_{i}_{k}"] or 0.0)
-            ki = keep_sets[lvl]
-            meats[lvl] = M[np.ix_(ki, ki)]
-        return meats, {}
-
-    # ONE grouped pass over the FINEST key (all cluster variables): scores
-    # are additive, so every CGM subset component re-aggregates the same
-    # collected rows driver-side — mirroring split.py's _split_meats
-    proj = j.select(
-        F.col(split).alias("__sp"),
-        *[F.col(c) for c in cluster_vars],
-        to_spark(_d(s)).alias("__s"),
-        *[F.col(n) for n in x_names],
-    )
-    sv = Var("__s")
-    sspec = [(f"s_{i}", asum(sv * _d(c))) for i, c in enumerate(cols)]
-    scores_df = proj.groupBy("__sp", *cluster_vars).agg(
-        *[agg_to_spark(a).alias(n) for n, a in sspec]
-    )
-    cap = 2_000_000
-    rows = scores_df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"split x cluster score table exceeds {cap:,} rows; use a "
-            "coarser split or cluster variable (or fit levels separately)"
-        )
-    per_level: dict = {}
-    for r in rows:
-        kt = tuple(r[c] for c in cluster_vars)
-        vec = np.array([float(r[f"s_{i}"] or 0.0) for i in range(p)])
-        per_level.setdefault(r["__sp"], []).append((kt, vec))
-    meats, ncl = combine_level_scores(
-        per_level, list(cluster_vars), vcov_type, hac_lag, p
-    )
-    for lvl in list(meats):
-        ki = keep_sets[lvl]
-        meats[lvl] = meats[lvl][np.ix_(ki, ki)]
-    return meats, ncl
-
-
-def _grouped_glm_conley(
-    frame_df, sess, fam, split, states, x_names, icpt, offset, weight_col,
-    cluster_vars, p_all, conley_opts,
-):
-    """Every level's Conley spatial GLM meat from ONE exploded cell join
-    (plans/conley.py:conley_pair_agg_batched, group_col=split): family
-    scores s = fam.score(mu, y)·x at the per-level broadcast beta, the
-    level joins the cell key so no cross-level pair is evaluated, one
-    grouped aggregation returns every level's meat row."""
-    from .plans.conley import conley_pair_agg_batched
-
-    cutoff, kernel, distance = conley_opts
-    lat_col, lon_col = cluster_vars
-    bt = _beta_frame(
-        sess, frame_df.schema[split].dataType,
-        {l: dict(s, cand=s["beta"]) for l, s in states.items()},
-        p_all,
-    )
-    j = frame_df.join(
-        F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-    ).drop("__lvl")
-    y = _d(Var("__y_raw"))
-    eta = _col_eta(x_names, icpt, offset)
-    mu = fam.mu(eta)
-    s = fam.score(mu, y)
-    if weight_col is not None:
-        s = _d(Var(weight_col)) * s
-    proj = j.select(
-        F.col(split),
-        to_spark(_d(s)).alias("__e"),
-        *[F.col(n) for n in x_names],
-        F.col(lat_col).cast("double").alias("__lat"),
-        F.col(lon_col).cast("double").alias("__lon"),
-    )
-    agg_df, ps, cached = conley_pair_agg_batched(
-        proj, [("__e", list(x_names), icpt)], cutoff, kernel, distance,
-        cache=True, group_col=split,
-    )
-    rows = agg_df.collect()
-    if cached is not None:
-        cached.unpersist()
-    p = ps[0]
-    meats = {}
-    for r in rows:
-        lvl = r[split]
-        M = np.zeros((p, p))
-        for i in range(p):
-            for k in range(i, p):
-                v = r[f"m0_{i}_{k}"]
-                M[i, k] = M[k, i] = float(v) if v is not None else 0.0
+def _kept_meats(res, states) -> dict:
+    """Each level's kernel meat sliced to its kept coefficient layout."""
+    out = {}
+    for lvl, (meat,) in res.meats.items():
         ki = np.asarray(states[lvl]["keep_idx"], dtype=int)
-        meats[lvl] = M[np.ix_(ki, ki)]
-    return meats
+        out[lvl] = meat[np.ix_(ki, ki)]
+    return out
 
 
 def _finish_level(
@@ -924,7 +803,7 @@ def _fit_lockstep_fepois(
             st["final_row"], st["final_a"] = row, a_i
             st["accepted"] = st["cand"]
             if verbose:
-                print(
+                _log.info(
                     f"[dbglm_split fepois] {lvl!r} iter {st['n_iter']}: "
                     f"ll = {ll_i:.10g}"
                 )
@@ -974,50 +853,11 @@ def _fit_lockstep_fepois(
                 j_f, gtab_f, split, fe, x_names, offset, weight_col,
                 first=False, extra_keys=keys,
             )
-            if vcov_type == "hc1":
-                aggs = []
-                for i in range(p_all):
-                    for k in range(i, p_all):
-                        aggs.append(
-                            F.sum(
-                                F.col("__s") * F.col("__s")
-                                * F.col(f"__xt{i}") * F.col(f"__xt{k}")
-                            ).alias(f"m_{i}_{k}")
-                        )
-                for r in sc.groupBy("__sp").agg(*aggs).collect():
-                    M = np.zeros((p_all, p_all))
-                    for i in range(p_all):
-                        for k in range(i, p_all):
-                            v = float(r[f"m_{i}_{k}"] or 0.0)
-                            M[i, k] = M[k, i] = v
-                    meats[r["__sp"]] = M
-            else:
-                aggs = [
-                    F.sum(F.col("__s") * F.col(f"__xt{i}")).alias(f"s_{i}")
-                    for i in range(p_all)
-                ]
-                sdf = sc.groupBy("__sp", *keys).agg(*aggs)
-                cap = 2_000_000
-                srows = sdf.limit(cap + 1).collect()
-                if len(srows) > cap:
-                    raise ValueError(
-                        f"split x cluster score table exceeds {cap:,} rows; "
-                        "use a coarser split or cluster variable (or fit "
-                        "levels separately)"
-                    )
-                per_level: dict = {}
-                for r in srows:
-                    kt = tuple(r[c] for c in keys)
-                    vec = np.array(
-                        [float(r[f"s_{i}"] or 0.0) for i in range(p_all)]
-                    )
-                    per_level.setdefault(r["__sp"], []).append((kt, vec))
-                meats, n_clusters = combine_level_scores(
-                    per_level, keys, vcov_type, hac_lag, p_all
-                )
-            for lvl in list(meats):
-                ki = np.asarray(states[lvl]["keep_idx"], dtype=int)
-                meats[lvl] = meats[lvl][np.ix_(ki, ki)]
+            res = sandwich_meat(
+                sc, [_scores_block(p_all)], MEAT_KIND[vcov_type], keys,
+                by="__sp", lag=hac_lag,
+            )
+            meats, n_clusters = _kept_meats(res, states), res.g
     finally:
         gtab_f.unpersist()
 

@@ -59,3 +59,35 @@ def test_pyspark_captured_wrapper_matches():
     assert is_result_too_large(
         Captured("result is bigger than spark.driver.maxResultSize")
     )
+
+
+def test_one_cluster_or_period_raises_clear_error(spark):
+    """A cluster or time column with one value leaves the G/(G − 1)
+    small-sample factor undefined: the linear and GLM fits raise a clear
+    ValueError instead of a ZeroDivisionError."""
+    import numpy as np
+    import pandas as pd
+    import pytest
+
+    from dbreg_spark import dbglm, dbreg
+
+    rng = np.random.default_rng(11)
+    x = rng.normal(size=200)
+    pdf = pd.DataFrame(
+        {
+            "x": x,
+            "y": 1.0 + 2.0 * x + rng.normal(size=200),
+            "b": (rng.uniform(size=200) < 1 / (1 + np.exp(-x))).astype(float),
+            "g": ["only"] * 200,
+            "t": [7] * 200,
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="at least 2 clusters"):
+        dbreg("y ~ x", df, strategy="moments", vcov="~g")
+    with pytest.raises(ValueError, match="at least 2 time periods"):
+        dbreg("y ~ x", df, strategy="moments", vcov="dk ~ t")
+    with pytest.raises(ValueError, match="at least 2 clusters"):
+        dbglm("b ~ x", df, family="binomial", vcov="~g")
+    with pytest.raises(ValueError, match="at least 2 time periods"):
+        dbglm("b ~ x", df, family="binomial", vcov="dk ~ t")

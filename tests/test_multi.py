@@ -146,6 +146,24 @@ def test_multi_dk_matches_single(tables):
         _assert_model_match(m, o)
 
 
+def test_multi_dk_period_cap(spark):
+    """Multi-model Driscoll-Kraay collects its per-period score table under
+    the same 100,000-period cap as a single fit: a raw id column as the
+    time variable is refused, not collected."""
+    from dbreg_spark.multi_glm import dbglm_multi
+
+    df = spark.range(100_001).select(
+        "id",
+        (F.col("id") % 7).cast("double").alias("x1"),
+        (F.col("id") % 5).cast("double").alias("x2"),
+        (F.col("id") % 3).cast("double").alias("y"),
+    )
+    with pytest.raises(ValueError, match="100,000"):
+        dbreg_multi("y ~ sw(x1, x2)", df, vcov="dk ~ id", strategy="moments")
+    with pytest.raises(ValueError, match="100,000"):
+        dbglm_multi("y ~ sw(x1, x2)", df, family="gaussian", vcov="dk ~ id")
+
+
 def test_multi_factor_step_matches_single(tables):
     li = tables["lineitem"]
     mm = dbreg_multi(
