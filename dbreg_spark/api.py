@@ -1699,7 +1699,7 @@ def build_plan(
     """Build (agg_df, oracle_sql) for a strategy's main aggregation without
     executing it. ``strategy`` in {moments, demean, mundlak, compress,
     group_means}. ``weights`` emits the WLS variant of the plan."""
-    from .plans.exprs import agg_to_spark
+    from .plans.exprs import agg_frame
 
     parsed = parse_formula(fml)
     weight_col = parse_weights(weights)
@@ -1774,7 +1774,7 @@ def build_plan(
         n_fe_exprs=n_fe,
         weight=Var(weight_col) if weight_col else None,
     )
-    agg_df = frame.df.agg(*[agg_to_spark(a).alias(n) for n, a in spec])
+    agg_df = agg_frame(frame.df, spec)
     sql = None
     if frame.sql_cte:
         sql = (

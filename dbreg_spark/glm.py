@@ -72,7 +72,7 @@ from .plans.exprs import (
     Func,
     Lit,
     Var,
-    agg_to_spark,
+    agg_frame,
     amax,
     amin,
     asum,
@@ -103,6 +103,10 @@ FAMILIES = (
 )
 
 _W_EPS = 1e-12  # pearson-residual denominator floor (never used in w·z)
+# the cell-resident k-FE solver inlines an FE's per-level state into each
+# sweep's plan as array literals up to this many levels (see
+# _kfe_solve_cells_spark); larger level catalogs join a broadcast table
+_INLINE_LEVELS = 4_096
 
 # diagnostics from the last cell-resident k-FE solve: sweep and distributed
 # pass counts for the λ alternation and the AP corrections (tests pin the
@@ -557,7 +561,7 @@ def irls_pass_plan(
         *[to_spark(e).alias(n) for n, e in proj_exprs],
         *[F.col(n) for n in x_names],
     )
-    agg_df = proj.agg(*[agg_to_spark(a).alias(n) for n, a in spec])
+    agg_df = agg_frame(proj, spec)
 
     sql = None
     if frame.sql_cte:
@@ -2397,8 +2401,9 @@ def _kfe_solve_cells_spark(
     therefore keeps the cells in Spark — checkpointed exactly twice, so
     every pass has a constant, shallow plan — and runs the SAME numpy
     alternation fixed points as the driver solver on per-level arrays,
-    with each SWEEP realized as ONE Spark job: broadcast every FE's tiny
-    (level-id, value) table in, aggregate ALL k per-FE level tables from
+    with each SWEEP realized as ONE Spark job: attach every FE's per-level
+    values by level id (array literals in the plan, or a broadcast table
+    past ``_INLINE_LEVELS`` levels), aggregate ALL k per-FE level tables from
     a single GROUPING SETS pass over the cells, collect the level-sized
     sums out. Simultaneity makes the updates damped-Jacobi (1/k) rather
     than Gauss-Seidel — same fixed point, monotone ascent, Aitken-
@@ -2414,7 +2419,7 @@ def _kfe_solve_cells_spark(
 
     Identical algebra and edge handling to :func:`_kfe_solve_cells`:
     dead levels (Σωy = 0) get lnλ = −inf and drop out of the weighted
-    system (the broadcast clamps −inf to −1e308; Spark's exp of that is
+    system (the level values clamp −inf to −1e308; Spark's exp of that is
     exactly 0.0); separation raises with the same diagnosis; convergence
     compares mutually-finite levels and treats a liveness flip as
     non-stationary.
@@ -2455,14 +2460,34 @@ def _kfe_solve_cells_spark(
         *[f"__X{j}" for j in range(p)],
     ).localCheckpoint()
 
-    def _bcast(f, values, colname):
-        arr = np.asarray(values, dtype=float)
-        # -inf breaks some Arrow paths; Spark exp(-1e308) == 0.0 exactly
-        arr = np.where(np.isfinite(arr), arr, -1.0e308)
-        pdf = pd.DataFrame(
-            {lid_col[f]: np.arange(len(arr), dtype=np.int64), colname: arr}
-        )
-        return F.broadcast(spark.createDataFrame(pdf))
+    def _with_levels(df, f, cols):
+        """``df`` with FE ``f``'s per-level arrays attached as columns
+        (``cols``: name -> finite values indexed by level id). Up to
+        ``_INLINE_LEVELS`` levels each array rides in the plan as a literal
+        indexed by the id, so a sweep costs one Spark job; a table built
+        with createDataFrame would add a broadcast job per FE per sweep.
+        Larger catalogs join a broadcast table."""
+        n = len(Yk[f])
+        if 0 < n <= _INLINE_LEVELS:
+            idx = Cast(Var(lid_col[f]), "int") + Lit(1)
+            return df.select(
+                "*",
+                *[
+                    to_spark(
+                        Func(
+                            "element_at",
+                            (Func("array", tuple(Lit(float(v)) for v in arr)), idx),
+                        )
+                    ).alias(name)
+                    for name, arr in cols.items()
+                ],
+            )
+        pdf = pd.DataFrame({lid_col[f]: np.arange(n, dtype=np.int64), **cols})
+        return df.join(F.broadcast(spark.createDataFrame(pdf)), lid_col[f])
+
+    def _lnl_cols(f):
+        # Spark exp(-1e308) == 0.0 exactly: dead levels (lnλ = −inf) vanish
+        return {f"__lnl_{f}": np.where(np.isfinite(lnl[f]), lnl[f], -1.0e308)}
 
     def _aligned(t, f, col, fill=0.0):
         arr = np.full(len(Yk[f]), fill)
@@ -2508,7 +2533,7 @@ def _kfe_solve_cells_spark(
     for sweep in range(sweep_cap):
         joined = base
         for f2 in fes:
-            joined = joined.join(_bcast(f2, lnl[f2], f"__lnl_{f2}"), lid_col[f2])
+            joined = _with_levels(joined, f2, _lnl_cols(f2))
         aggs = []
         for f in fes:
             other = F.lit(0.0)
@@ -2617,7 +2642,7 @@ def _kfe_solve_cells_spark(
     w2 = base
     lnphi = F.lit(0.0)
     for f in fes:
-        w2 = w2.join(_bcast(f, lnl[f], f"__lnl_{f}"), lid_col[f])
+        w2 = _with_levels(w2, f, _lnl_cols(f))
         lnphi = lnphi + F.col(f"__lnl_{f}")
     w2 = w2.withColumn("__lnphi", lnphi).withColumn(
         "__W", F.col("__C") * F.exp(F.col("__lnphi"))
@@ -2660,23 +2685,15 @@ def _kfe_solve_cells_spark(
         def _c_joined():
             out = w2
             for f2 in fes:
-                pdf = pd.DataFrame(
+                out = _with_levels(
+                    out,
+                    f2,
                     {
-                        lid_col[f2]: np.arange(
-                            len(Yk[f2]), dtype=np.int64
-                        ),
-                        **{
-                            f"__c{j}_{f2}": np.where(
-                                np.isfinite(corr[f2][:, j]),
-                                corr[f2][:, j],
-                                0.0,
-                            )
-                            for j in range(p)
-                        },
-                    }
-                )
-                out = out.join(
-                    F.broadcast(spark.createDataFrame(pdf)), lid_col[f2]
+                        f"__c{j}_{f2}": np.where(
+                            np.isfinite(corr[f2][:, j]), corr[f2][:, j], 0.0
+                        )
+                        for j in range(p)
+                    },
                 )
             return out
 

@@ -64,7 +64,7 @@ from .plans.common import (
     resolve_source,
     run_agg,
 )
-from .plans.exprs import Var, agg_to_spark
+from .plans.exprs import Var, agg_frame
 from .plans.frames import (
     build_base_frame,
     build_demeaned_frame,
@@ -872,7 +872,7 @@ def build_multi_plan(
         n_fe_exprs=n_fe_exprs,
         weight=Var(weight_col) if weight_col else None,
     )
-    agg_df = frame.df.agg(*[agg_to_spark(a).alias(n) for n, a in mspec])
+    agg_df = agg_frame(frame.df, mspec)
     sql = None
     if frame.sql_cte:
         sql = (

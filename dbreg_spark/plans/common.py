@@ -30,6 +30,7 @@ from .exprs import (
     Var,
     _spark_ident,
     acountd,
+    agg_frame,
     agg_to_spark,
     agg_to_sql,
     amin,
@@ -207,7 +208,7 @@ def run_agg(
         and all(isinstance(a.expr, Var) and a.expr.name in fe_cols for _, a in cd)
     )
     if not two_level:
-        row = df.agg(*[agg_to_spark(a).alias(name) for name, a in spec]).collect()[0]
+        row = agg_frame(df, spec).collect()[0]
         return row.asDict()
 
     partial_cols = []

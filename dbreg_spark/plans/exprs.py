@@ -18,7 +18,7 @@ from typing import Union
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 
 Exprish = Union["Expr", str, int, float]
 
@@ -261,6 +261,20 @@ def to_spark(e: Expr) -> Column:
 
 def agg_to_spark(a: Agg) -> Column:
     return F.expr(_render_agg(a, spark=True))
+
+
+def agg_frame(df: DataFrame, spec: list[tuple[str, Agg]]) -> DataFrame:
+    """The one-row aggregation of ``spec`` (``[(alias, Agg)]``) over ``df``.
+    Every aggregate reaches Spark as SQL text in ONE ``selectExpr`` call,
+    parsed in the JVM; ``df.agg(*map(agg_to_spark, ...))`` would cost
+    about 15 py4j round trips per aggregate, which dominates a wide pass
+    (an IRLS pass at p = 33 carries about 600 aggregates)."""
+    return df.selectExpr(
+        *[
+            f"{_render_agg(a, spark=True)} AS `{n.replace('`', '``')}`"
+            for n, a in spec
+        ]
+    )
 
 
 def to_sql(e: Expr) -> str:
