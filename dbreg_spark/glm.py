@@ -104,9 +104,10 @@ FAMILIES = (
 
 _W_EPS = 1e-12  # pearson-residual denominator floor (never used in w·z)
 # the cell-resident k-FE solver inlines an FE's per-level state into each
-# sweep's plan as array literals up to this many levels (see
-# _kfe_solve_cells_spark); larger level catalogs join a broadcast table
-_INLINE_LEVELS = 4_096
+# sweep's plan as array literals up to this many values per FE (see
+# _kfe_solve_cells_spark); beyond it, parsing the literals (about 0.1 ms a
+# value) costs more than the broadcast job of a level table
+_INLINE_VALUES = 2_048
 
 # diagnostics from the last cell-resident k-FE solve: sweep and distributed
 # pass counts for the λ alternation and the AP corrections (tests pin the
@@ -2403,7 +2404,7 @@ def _kfe_solve_cells_spark(
     alternation fixed points as the driver solver on per-level arrays,
     with each SWEEP realized as ONE Spark job: attach every FE's per-level
     values by level id (array literals in the plan, or a broadcast table
-    past ``_INLINE_LEVELS`` levels), aggregate ALL k per-FE level tables from
+    past ``_INLINE_VALUES`` values), aggregate ALL k per-FE level tables from
     a single GROUPING SETS pass over the cells, collect the level-sized
     sums out. Simultaneity makes the updates damped-Jacobi (1/k) rather
     than Gauss-Seidel — same fixed point, monotone ascent, Aitken-
@@ -2463,12 +2464,12 @@ def _kfe_solve_cells_spark(
     def _with_levels(df, f, cols):
         """``df`` with FE ``f``'s per-level arrays attached as columns
         (``cols``: name -> finite values indexed by level id). Up to
-        ``_INLINE_LEVELS`` levels each array rides in the plan as a literal
+        ``_INLINE_VALUES`` values each array rides in the plan as a literal
         indexed by the id, so a sweep costs one Spark job; a table built
         with createDataFrame would add a broadcast job per FE per sweep.
         Larger catalogs join a broadcast table."""
         n = len(Yk[f])
-        if 0 < n <= _INLINE_LEVELS:
+        if 0 < n * len(cols) <= _INLINE_VALUES:
             idx = Cast(Var(lid_col[f]), "int") + Lit(1)
             return df.select(
                 "*",
