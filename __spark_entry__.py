@@ -649,7 +649,7 @@ def _diag_bp_mundlak_plan(spark: SparkSession):
     design = build_design(src_.df, parsed, expand="all", fe_vars=parsed.fe)
     base = build_base_frame(src_, parsed, design, True, want_sql=True)
     frame = build_mundlak_frame(
-        base, parsed.fe, design.numeric_vars, one_scan_means=False
+        base, parsed.fe, design.numeric_vars, cache_means=False
     )
     xb1 = "l_quantity_bar_l_returnflag"
     xb2 = "l_discount_bar_l_returnflag"

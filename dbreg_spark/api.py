@@ -34,7 +34,6 @@ from .plans.common import (
 )
 from .plans.exprs import Var
 from .plans.frames import (
-    Frame,
     build_base_frame,
     build_demeaned_frame,
     build_demeaned_frame_iterative,
@@ -43,6 +42,7 @@ from .plans.frames import (
 from .plans.meat import (
     MEAT_KIND,
     cgm_combine,
+    check_groups,
     count_nested_fe_levels,
     fe_leverage,
     ols_block,
@@ -317,7 +317,7 @@ def _combined_probe(source: Source, parsed: ParsedFormula, drop_missings=True):
 
     aggs = [
         F.count(F.lit(1)).alias("__n"),
-        F.approx_count_distinct(F.struct(*key_cols), rsd=0.02).alias("__g"),
+        F.approx_count_distinct(F.struct(*key_cols)).alias("__g"),
     ] + [F.approx_count_distinct(v).alias(f"__c_{v}") for v in float_vars]
     row = df.agg(*aggs).collect()[0]
     total_n, n_groups = row["__n"], row["__g"]
@@ -643,13 +643,9 @@ def _execute_demean(
         )
     else:
         frame = build_demeaned_frame(
-            base, fe, broadcast_means, weight_col=weight_col
+            base, fe, broadcast_means, weight_col=weight_col,
+            carry=cluster_var,
         )
-        if cluster_var and any(c not in frame.df.columns for c in cluster_var):
-            # carry the cluster keys through the demeaned projection
-            frame = _reattach_cluster(
-                base, frame, fe, cluster_var, broadcast_means, weight_col
-            )
 
     try:
         return _finish_demean(
@@ -798,68 +794,6 @@ def _finish_demean(
         weight_col=weight_col,
         intercept=False,
         demean_iterated=(frame.cte_name == "demeaned_iter"),
-    )
-
-
-def _reattach_cluster(
-    base: Frame, frame: Frame, fe, cluster_vars, broadcast_means,
-    weight_col=None,
-):
-    """Rebuild the demeaned frame carrying the cluster column(s) through."""
-    from .plans.frames import _wmean_col
-
-    # Cheap approach: re-run the demeaning select with the cluster cols kept.
-    vals = [base.y_col] + base.x_cols
-    bc = F.broadcast if broadcast_means else (lambda d: d)
-    ccols = list(cluster_vars)
-    wcols = [weight_col] if weight_col else []
-
-    def _mean(c: str, alias: str):
-        if weight_col is not None:
-            return _wmean_col(c, weight_col).alias(alias)
-        return F.avg(c).alias(alias)
-
-    if len(fe) == 1:
-        fe1 = fe[0]
-        means = base.df.groupBy(fe1).agg(*[_mean(c, f"{c}__m1") for c in vals])
-        dm = base.df.join(bc(means), on=fe1).select(
-            fe1,
-            *ccols,
-            *wcols,
-            *[(F.col(c) - F.col(f"{c}__m1")).alias(c) for c in vals],
-        )
-        keys = [fe1] + ccols + wcols
-    else:
-        fe1, fe2 = fe
-        um = base.df.groupBy(fe1).agg(*[F.avg(c).alias(f"{c}__m1") for c in vals])
-        tm = base.df.groupBy(fe2).agg(*[F.avg(c).alias(f"{c}__m2") for c in vals])
-        om = base.df.agg(*[F.avg(c).alias(f"{c}__mo") for c in vals])
-        dm = (
-            base.df.join(bc(um), on=fe1)
-            .join(bc(tm), on=fe2)
-            .crossJoin(bc(om))
-            .select(
-                fe1,
-                fe2,
-                *ccols,
-                *[
-                    (
-                        F.col(c) - F.col(f"{c}__m1") - F.col(f"{c}__m2") + F.col(f"{c}__mo")
-                    ).alias(c)
-                    for c in vals
-                ],
-            )
-        )
-        keys = [fe1, fe2] + ccols
-    sql_cte = frame.sql_cte
-    if sql_cte is not None:
-        # mirror: add cluster columns into the demeaned CTE projection
-        prefix = "".join(f"b.{c}, " for c in ccols)
-        sql_cte = sql_cte.replace("SELECT b.", f"SELECT {prefix}b.", 1)
-    # carry ownership of any cached means table from the replaced frame
-    return Frame(
-        dm, base.y_col, base.x_cols, keys, sql_cte, frame.cte_name,
-        cached=frame.cached,
     )
 
 
@@ -1446,15 +1380,15 @@ def _execute_compress_distributed(
                 return blocked_cluster_meat(scored_cc, blocks, sub_aliases)
 
             try:
-                if len(cluster_var) == 1:
-                    meat_full, n_clusters = comp_meat(aliases)
-                else:
-                    comps = [
-                        (r, *comp_meat([aliases[i] for i in S]))
-                        for r in range(1, len(aliases) + 1)
-                        for S in combinations(range(len(aliases)), r)
-                    ]
-                    meat_full, n_clusters = cgm_combine(comps)
+                comps = []
+                for r in range(1, len(aliases) + 1):
+                    for S in combinations(range(len(aliases)), r):
+                        m, g = comp_meat([aliases[i] for i in S])
+                        check_groups(
+                            g, "cluster", [cluster_var[i] for i in S], None, None
+                        )
+                        comps.append((r, m, g))
+                meat_full, n_clusters = cgm_combine(comps)
             finally:
                 if len(cluster_var) > 1:
                     cc.unpersist()
@@ -1586,19 +1520,21 @@ def _compress_cluster_meat(
         # distributed components share the persisted finest table: one scan
         cc_df = cc_df.persist()
     try:
-        if len(cluster_vars) == 1:
-            return component(aliases, cc_df)
         comps = []
         for r in range(1, len(aliases) + 1):
             for S in combinations(range(len(aliases)), r):
                 sub = [aliases[i] for i in S]
-                sub_df = None
-                if cc is None:
+                sub_df = cc_df
+                if cc is None and len(aliases) > 1:
                     sub_df = cc_df.groupBy(*sub, *group_cols).agg(
                         F.sum("n_gc").alias("n_gc"),
                         F.sum("sum_y_gc").alias("sum_y_gc"),
                     )
-                comps.append((r, *component(sub, sub_df)))
+                m, g = component(sub, sub_df)
+                check_groups(
+                    g, "cluster", [cluster_vars[i] for i in S], None, None
+                )
+                comps.append((r, m, g))
         return cgm_combine(comps)
     finally:
         if cc is None:
@@ -1697,7 +1633,8 @@ def build_plan(
     weights: str | None = None,
 ):
     """Build (agg_df, oracle_sql) for a strategy's main aggregation without
-    executing it. ``strategy`` in {moments, demean, mundlak, compress,
+    executing it (demean and mundlak first collect their group means, which
+    ride in the plan). ``strategy`` in {moments, demean, mundlak, compress,
     group_means}. ``weights`` emits the WLS variant of the plan."""
     from .plans.exprs import agg_frame
 
@@ -1735,7 +1672,8 @@ def build_plan(
             )
             if use_iter
             else build_demeaned_frame(
-                base, parsed.fe, broadcast_means, weight_col=weight_col
+                base, parsed.fe, broadcast_means, weight_col=weight_col,
+                cache_means=False,
             ),
             False,
             [Var(f) for f in parsed.fe],
@@ -1744,7 +1682,7 @@ def build_plan(
         frame, intercept, n_fe = (
             build_mundlak_frame(
                 base, parsed.fe, design.numeric_vars, broadcast_means,
-                weight_col=weight_col,
+                weight_col=weight_col, cache_means=False,
             ),
             True,
             [Var(f) for f in parsed.fe[:2]],

@@ -310,14 +310,8 @@ def wild_cluster_bootstrap(
                 g_fe[0] + (g_fe[1] - 1 if len(absorb_fes) == 2 else 0)
             )
             frame = build_demeaned_frame(
-                base, absorb_fes, weight_col=weight_col
+                base, absorb_fes, weight_col=weight_col, carry=[cluster]
             )
-            if cluster not in frame.df.columns:
-                from .api import _reattach_cluster
-
-                frame = _reattach_cluster(
-                    base, frame, absorb_fes, [cluster], True, weight_col
-                )
         else:
             frame = base
     x_cols = list(frame.x_cols)
@@ -327,14 +321,17 @@ def wild_cluster_bootstrap(
     p_all = len(names_all)
 
     # ---- ONE grouped pass: per-cluster Gram blocks + moment vectors ------
-    rows = (
-        cluster_gram_frame(
-            frame.df, frame.y_col, x_cols, cluster, weight_col,
-            intercept=intercept,
+    try:
+        rows = (
+            cluster_gram_frame(
+                frame.df, frame.y_col, x_cols, cluster, weight_col,
+                intercept=intercept,
+            )
+            .limit(MAX_CLUSTERS + 1)
+            .collect()
         )
-        .limit(MAX_CLUSTERS + 1)
-        .collect()
-    )
+    finally:
+        frame.cleanup()
     if len(rows) > MAX_CLUSTERS:
         raise ValueError(
             f"cluster variable {cluster!r} has more than {MAX_CLUSTERS:,} "

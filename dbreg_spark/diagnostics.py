@@ -87,7 +87,7 @@ def _within_frame(model, data):
     if getattr(model, "demean_iterated", False) or len(fe) > 2:
         frame = build_demeaned_frame_iterative(base, fe)
     else:
-        frame = build_demeaned_frame(base, fe)
+        frame = build_demeaned_frame(base, fe, cache_means=False)
     b = dict(
         zip(model.coeftable.index, model.coeftable["estimate"].astype(float))
     )
@@ -117,7 +117,7 @@ def _mundlak_frame(model, data):
     = the kept [X, x̄] design columns. One means pass per FE + one
     projection — the same plans/frames build as estimation
     (build_mundlak_frame), so the augmentation cannot drift from the fit.
-    ``one_scan_means=False`` keeps the build cache-free (the diagnostic's
+    ``cache_means=False`` keeps the build cache-free (the diagnostic's
     consumers run lazily after this function returns)."""
     import pyspark.sql.functions as F
 
@@ -136,7 +136,7 @@ def _mundlak_frame(model, data):
         source, parsed, design, drop_missings=True, want_sql=False
     )
     frame = build_mundlak_frame(
-        base, list(model.fe), design.numeric_vars, one_scan_means=False
+        base, list(model.fe), design.numeric_vars, cache_means=False
     )
     b = dict(
         zip(model.coeftable.index, model.coeftable["estimate"].astype(float))

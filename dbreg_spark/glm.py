@@ -82,6 +82,7 @@ from .plans.exprs import (
 )
 from .guards import is_result_too_large
 from .plans.frames import Frame, build_base_frame
+from .plans.levels import with_levels
 from .plans.meat import MEAT_KIND, ScoreBlock, quad_form, sandwich_meat
 from .solve import (
     compute_vcov,
@@ -103,11 +104,6 @@ FAMILIES = (
 )
 
 _W_EPS = 1e-12  # pearson-residual denominator floor (never used in w·z)
-# the cell-resident k-FE solver inlines an FE's per-level state into each
-# sweep's plan as array literals up to this many values per FE (see
-# _kfe_solve_cells_spark); beyond it, parsing the literals (about 0.1 ms a
-# value) costs more than the broadcast job of a level table
-_INLINE_VALUES = 2_048
 
 # diagnostics from the last cell-resident k-FE solve: sweep and distributed
 # pass counts for the λ alternation and the AP corrections (tests pin the
@@ -2403,8 +2399,8 @@ def _kfe_solve_cells_spark(
     every pass has a constant, shallow plan — and runs the SAME numpy
     alternation fixed points as the driver solver on per-level arrays,
     with each SWEEP realized as ONE Spark job: attach every FE's per-level
-    values by level id (array literals in the plan, or a broadcast table
-    past ``_INLINE_VALUES`` values), aggregate ALL k per-FE level tables from
+    values by level id (plan literals, or a broadcast table past
+    ``plans.levels.INLINE_VALUES`` values), aggregate ALL k per-FE level tables from
     a single GROUPING SETS pass over the cells, collect the level-sized
     sums out. Simultaneity makes the updates damped-Jacobi (1/k) rather
     than Gauss-Seidel — same fixed point, monotone ascent, Aitken-
@@ -2412,8 +2408,8 @@ def _kfe_solve_cells_spark(
     cell-proportional ever reaches the driver.
 
     Level ids are assigned once per call by a DETERMINISTIC sort of each
-    FE's level values (nulls last), attached to the cells with null-safe
-    equality joins — so warm-start arrays from the previous Newton
+    FE's level values (nulls last), attached to the cells by null-safe
+    level lookups — so warm-start arrays from the previous Newton
     iteration (cell occupancy is β-independent) align positionally, and
     null FE levels behave exactly as the driver tier's
     ``factorize(use_na_sentinel=False)``.
@@ -2448,14 +2444,12 @@ def _kfe_solve_cells_spark(
         )
         lvl_pdf[f] = t
         Yk[f] = t["__yk"].to_numpy(dtype=float)
-        m = spark.createDataFrame(
-            t[[f]].assign(**{lid_col[f]: np.arange(len(t), dtype=np.int64)})
-        ).withColumn(f, F.col(f).cast(cdf.schema[f].dataType))
-        # null-safe equality so a NULL level keys its own group, exactly
+        # null-safe so a NULL level keys its own group, exactly
         # factorize(use_na_sentinel=False)
-        w = w.join(
-            F.broadcast(m), on=w[f].eqNullSafe(m[f]), how="inner"
-        ).drop(m[f])
+        w = with_levels(
+            w, f, t[f].tolist(),
+            {lid_col[f]: np.arange(len(t), dtype=np.int64)}, null_safe=True,
+        )
     base = w.select(
         *fes, *[lid_col[f] for f in fes], "__C", "__Y",
         *[f"__X{j}" for j in range(p)],
@@ -2463,28 +2457,10 @@ def _kfe_solve_cells_spark(
 
     def _with_levels(df, f, cols):
         """``df`` with FE ``f``'s per-level arrays attached as columns
-        (``cols``: name -> finite values indexed by level id). Up to
-        ``_INLINE_VALUES`` values each array rides in the plan as a literal
-        indexed by the id, so a sweep costs one Spark job; a table built
-        with createDataFrame would add a broadcast job per FE per sweep.
-        Larger catalogs join a broadcast table."""
-        n = len(Yk[f])
-        if 0 < n * len(cols) <= _INLINE_VALUES:
-            idx = Cast(Var(lid_col[f]), "int") + Lit(1)
-            return df.select(
-                "*",
-                *[
-                    to_spark(
-                        Func(
-                            "element_at",
-                            (Func("array", tuple(Lit(float(v)) for v in arr)), idx),
-                        )
-                    ).alias(name)
-                    for name, arr in cols.items()
-                ],
-            )
-        pdf = pd.DataFrame({lid_col[f]: np.arange(n, dtype=np.int64), **cols})
-        return df.join(F.broadcast(spark.createDataFrame(pdf)), lid_col[f])
+        (``cols``: name -> finite values indexed by level id). As plan
+        literals a sweep costs one Spark job; a level table would add a
+        broadcast job per FE per sweep."""
+        return with_levels(df, lid_col[f], range(len(Yk[f])), cols)
 
     def _lnl_cols(f):
         # Spark exp(-1e308) == 0.0 exactly: dead levels (lnλ = −inf) vanish

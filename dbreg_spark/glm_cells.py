@@ -49,7 +49,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 
 from .plans.exprs import Cast, Expr, Func, Lit, Var, to_spark
-from .plans.meat import MEAT_KIND, cgm_combine, sandwich_meat
+from .plans.meat import MEAT_KIND, cgm_combine, check_groups, sandwich_meat
 from .solve import (
     CollinResult,
     compute_vcov,
@@ -463,6 +463,7 @@ def glm_cells_fit(
                 pd.DataFrame(S).groupby(gcols[cluster_vars[0]], sort=True)
                 .sum().to_numpy(dtype=float)
             )
+            check_groups(per_g.shape[0], "cluster", cluster_vars, None, None)
             meat = per_g.T @ per_g
             n_clusters = per_g.shape[0]
         else:
@@ -477,6 +478,7 @@ def glm_cells_fit(
                             [gcols[c] for c in subset], sort=True
                         ).sum().to_numpy(dtype=float)
                     )
+                    check_groups(per_g.shape[0], "cluster", subset, None, None)
                     comps.append((k, per_g.T @ per_g, per_g.shape[0]))
             meat, n_clusters = cgm_combine(comps)
     elif vcov_type == "conley":

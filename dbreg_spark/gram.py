@@ -25,10 +25,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .plans.levels import with_levels
 
 # hard cap on the expanded design width for the dense driver solve:
 # 2048² doubles = 32 MiB Gram, O(p³) solve ≈ seconds
@@ -357,23 +358,19 @@ def yhat_frame(
     comp: DataFrame, blocks: list[GramBlock], beta_full: np.ndarray
 ) -> tuple[DataFrame, "F.Column"]:
     """(df, ŷ expression): numeric terms as literal-β column math,
-    categorical terms via broadcast level→β lookup joins (scales to many
-    levels where a CASE ladder would not)."""
-    spark = comp.sparkSession
+    categorical terms via level→β lookups (plan literals up to the inline
+    cap, else broadcast joins; scales to many levels where a CASE ladder
+    would not)."""
     df = comp
     yhat = F.lit(float(beta_full[0]))
     for b in blocks[1:]:
         if b.kind == "num":
             yhat = yhat + F.lit(float(beta_full[b.offset])) * F.col(b.var).cast("double")
         elif b.ncols > 0:
-            lut = pd.DataFrame(
-                {
-                    b.var: pd.Series(b.levels),
-                    f"__beta_{b.var}": beta_full[b.offset : b.offset + b.ncols],
-                }
-            )
-            df = df.join(
-                F.broadcast(spark.createDataFrame(lut)), on=b.var, how="left"
+            df = with_levels(
+                df, b.var, b.levels,
+                {f"__beta_{b.var}": beta_full[b.offset : b.offset + b.ncols]},
+                how="left",
             )
             yhat = yhat + F.coalesce(F.col(f"__beta_{b.var}"), F.lit(0.0))
     return df, yhat

@@ -396,17 +396,9 @@ def dbiv(
         # weights — absorb via (weighted) alternating projections instead
         if len(ivf.fe) <= 2 and not (weight_col and len(ivf.fe) == 2):
             frame = build_demeaned_frame(
-                base, ivf.fe, broadcast_means, weight_col=weight_col
+                base, ivf.fe, broadcast_means, weight_col=weight_col,
+                carry=cluster_vars,
             )
-            if cluster_vars and any(
-                c not in frame.df.columns for c in cluster_vars
-            ):
-                from .api import _reattach_cluster
-
-                frame = _reattach_cluster(
-                    base, frame, ivf.fe, cluster_vars, broadcast_means,
-                    weight_col,
-                )
         else:
             # iterated demeaning carries cluster keys in base.key_cols
             frame = build_demeaned_frame_iterative(

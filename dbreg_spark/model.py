@@ -366,8 +366,9 @@ class DbregModel:
         """(df, fit_expr, {coef_name: column_expr}) for moments / mundlak /
         compress scoring. ``df`` is ``newdata`` with any broadcast-joined
         helper columns (mundlak group means, compress level lookups)."""
-        import pandas as pd_
         import pyspark.sql.functions as F
+
+        from .plans.levels import with_levels
 
         df = newdata
         fit = F.lit(0.0)
@@ -377,18 +378,17 @@ class DbregModel:
         col_exprs["(Intercept)"] = F.lit(1.0)
 
         cat_levels = self.cat_levels or {}
-        # categorical blocks (compress): one tiny level→β lookup table per
-        # variable, broadcast-joined — scales to many FE levels where a
-        # literal CASE ladder would blow up the plan
+        # categorical blocks (compress): one level→β lookup per variable
+        # (plan literals up to the inline cap, else a broadcast join) —
+        # scales to many FE levels where a CASE ladder would not; unseen
+        # levels score 0
         for v, lvls in cat_levels.items():
             if not lvls:
                 continue
             bvals = [float(beta.get(f"{v}{lvl}", 0.0)) for lvl in lvls]
             if not any(bvals) and all(f"{v}{lvl}" not in beta.index for lvl in lvls):
                 continue
-            lut = pd_.DataFrame({v: pd_.Series(lvls), f"__beta_{v}": bvals})
-            small = F.broadcast(newdata.sparkSession.createDataFrame(lut))
-            df = df.join(small, on=v, how="left")
+            df = with_levels(df, v, lvls, {f"__beta_{v}": bvals}, how="left")
             fit = fit + F.coalesce(F.col(f"__beta_{v}"), F.lit(0.0))
             for lvl in lvls:
                 cname = f"{v}{lvl}"

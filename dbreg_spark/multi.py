@@ -544,7 +544,7 @@ def dbreg_multi(
     if spark is None and hasattr(data, "sparkSession"):
         spark = data.sparkSession
     source = resolve_source(spark=spark, data=data, table=table, path=path)
-    from .api import _check_weights_valid, _cluster_label, _reattach_cluster, _require_columns
+    from .api import _check_weights_valid, _cluster_label, _require_columns
 
     _require_columns(
         source.df,
@@ -641,14 +641,9 @@ def dbreg_multi(
             )
         else:
             frame = build_demeaned_frame(
-                base, fe, broadcast_means, weight_col=weight_col
+                base, fe, broadcast_means, weight_col=weight_col,
+                carry=cluster_var,
             )
-            if cluster_var and any(
-                c not in frame.df.columns for c in cluster_var
-            ):
-                frame = _reattach_cluster(
-                    base, frame, fe, cluster_var, broadcast_means, weight_col
-                )
         use_intercept = False
         n_fe_exprs = [Var(f) for f in fe]
 
@@ -862,7 +857,9 @@ def build_multi_plan(
         frame = (
             build_demeaned_frame_iterative(base, fe, weight_col=weight_col)
             if len(fe) > 2 or force_iter
-            else build_demeaned_frame(base, fe, weight_col=weight_col)
+            else build_demeaned_frame(
+                base, fe, weight_col=weight_col, cache_means=False
+            )
         )
         use_intercept, n_fe_exprs = False, [Var(f) for f in fe]
     mspec = moment_spec(

@@ -6,10 +6,14 @@ both run. Its columns are: FE/cluster keys, the outcome, and the (expanded)
 regressor columns — for demean, these hold the *demeaned* (tilde) values; for
 mundlak, the group-mean (``_bar_``) columns are appended.
 
-All heavy group-mean attachment is done with ``groupBy().agg()`` + broadcast
-hash joins: the group-mean tables have one row per FE level, so at 100 TB the
-full data is never shuffled — only tiny aggregate tables move (the map-side
-partial aggregation reduces each scan partition to its distinct FE levels).
+Group means come from ONE grouping-sets aggregation (one row per FE level,
+so the full data is never shuffled — the map-side partial aggregation
+reduces each scan partition to its distinct FE levels). While the table is
+small (``levels.INLINE_VALUES``) it is collected once and rides in every
+pass's plan as literals (``plans/levels.py``): the passes are projections
+of the scan with no join. Eager fits cache the table before the collect
+that counts its levels; past the cap the passes broadcast-join that cache,
+so the moment and meat passes still share one means scan.
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from ..design import DesignInfo
 from ..formula import ParsedFormula
 from .common import Source, filter_missing, not_null_filter_sql
 from .exprs import Expr, Var, to_spark, to_sql
+from .levels import inlinable, max_inline_levels, with_levels
 
 
 @dataclass
@@ -35,8 +40,8 @@ class Frame:
     key_cols: list[str]  # FE (+cluster) columns carried through
     sql_cte: str | None  # "WITH ... <cte_name> AS (...)" prefix, or None
     cte_name: str
-    # cached helper table (one-scan GROUPING SETS means) owned by this frame;
-    # executors unpersist it after their last aggregation pass
+    # cached GROUPING SETS means table (past the inline cap) owned by this
+    # frame; executors unpersist it after their last aggregation pass
     cached: DataFrame | None = None
     # extra storage-release hook (e.g. checkpoint blocks of the iterative
     # demeaning loop, which DataFrame.unpersist cannot reach)
@@ -53,31 +58,6 @@ class Frame:
         if self.cleanup_fn is not None:
             self.cleanup_fn()
             self.cleanup_fn = None
-
-
-# Above this estimated input size, the multi-FE mean tables are computed in a
-# single GROUPING SETS scan and cached (halves source I/O; the cached tiny
-# table also feeds the HC1/cluster second pass). Below it, per-FE groupBys
-# win: scans of page-cached small inputs are cheaper than the Expand operator
-# plus the cache-materialization job barrier (measured at sf0.1: 0.9s vs
-# 1.5s). At 100 TB the scan is the scarce resource, so the one-scan shape
-# takes over.
-ONE_SCAN_MEANS_BYTES = 2 << 30
-
-
-def _input_size_bytes(df: DataFrame) -> int | None:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
-def _use_one_scan_means(df: DataFrame, override: bool | None) -> bool:
-    if override is not None:
-        return override
-    size = _input_size_bytes(df)
-    # unknown size -> assume large (scale-safe default)
-    return size is None or size > ONE_SCAN_MEANS_BYTES
 
 
 def _base_select_exprs(
@@ -185,47 +165,95 @@ def _wmean_sql(c: str, w: str) -> str:
     )
 
 
+def _group_means(
+    df: DataFrame, sets: list[list[str]], keys: list[str], aggs, n_cols: int,
+    cache: bool,
+):
+    """The per-level means of every grouping set in ``sets`` from ONE
+    aggregation (``__gid`` tells the sets apart). Returns ``(rows, None)``
+    with the collected rows while they ride in the plan as literals, else
+    ``(None, table)`` for joins. With ``cache`` the table is cached before
+    the collect that counts its levels, so past the cap every pass reuses
+    the one means scan (the caller's Frame owns the table); under the cap
+    it is released at once. Keys without a literal form skip the collect."""
+    gs = df.groupingSets(sets, *keys).agg(*aggs, F.grouping_id().alias("__gid"))
+    if cache:
+        gs = gs.cache()
+    if all(inlinable(df.schema[k].dataType) for k in keys):
+        cap = max_inline_levels(n_cols)
+        rows = gs.limit(cap + 1).collect()
+        if len(rows) <= cap:
+            if cache:
+                gs.unpersist()
+            return rows, None
+    return None, gs
+
+
+def _attach_means(df, key, gid, cols, rows, gs, bc):
+    """``df`` inner-joined with set ``gid``'s means (``cols``: table column
+    -> output name): plan literals from ``rows``, or a join of the table
+    ``gs``."""
+    if rows is not None:
+        sub = [r for r in rows if r["__gid"] == gid]
+        return with_levels(
+            df, key, [r[key] for r in sub],
+            {out: [r[c] for r in sub] for c, out in cols.items()},
+        )
+    means = gs.where(F.col("__gid") == gid).select(
+        key, *[F.col(c).alias(out) for c, out in cols.items()]
+    )
+    return df.join(bc(means), on=key)
+
+
 def build_demeaned_frame(
     base: Frame,
     fe: list[str],
     broadcast_means: bool = True,
-    one_scan_means: bool | None = None,
     weight_col: str | None = None,
+    carry: list[str] | None = None,
+    cache_means: bool = True,
 ) -> Frame:
     """Attach group means and demean (reference: R/dbreg.R:902-1053).
 
     1 FE:  ṽ = v − mean(v | fe1)
     2 FE:  ṽ = v − mean(v | fe1) − mean(v | fe2) + mean(v)   (balanced TWFE)
 
-    Spark formulation: per-FE ``groupBy().agg(avg)`` (tiny result, map-side
-    combined) broadcast-joined back; the grand mean is a 1-row aggregate
-    cross-joined. The big table is never shuffled.
+    Spark formulation: every mean (per FE level, and the grand mean) from
+    ONE grouping-sets aggregation (:func:`_group_means`); the demeaned
+    frame is a projection of the scan with the means as plan literals, or
+    broadcast joins of the cached table past the inline cap. The big table
+    is never shuffled.
 
     ``weight_col`` switches to w-weighted group means (exact weighted FWL
     for 1 FE; callers route weighted k≥2 fits to the iterative path — the
     double-demean identity does not hold under weights even on balanced
     grids) and carries the weight column through for the moment pass.
+    ``carry`` names extra columns (cluster keys) kept in the frame.
+    ``cache_means=False`` leaves a past-the-cap means table uncached, for
+    callers that consume the frame lazily and cannot release it.
     """
     vals = [base.y_col] + base.x_cols
     bc = F.broadcast if broadcast_means else (lambda d: d)
+    carry = [c for c in carry or [] if c not in fe and c != weight_col]
+    prefix = "".join(f"b.{c}, " for c in carry)
 
     if len(fe) == 1:
         fe1 = fe[0]
         if weight_col is not None:
-            means = base.df.groupBy(fe1).agg(
-                *[_wmean_col(c, weight_col).alias(f"{c}__m1") for c in vals]
-            )
+            aggs = [_wmean_col(c, weight_col).alias(f"{c}__m1") for c in vals]
         else:
-            means = base.df.groupBy(fe1).agg(
-                *[F.avg(c).alias(f"{c}__m1") for c in vals]
-            )
+            aggs = [F.avg(c).alias(f"{c}__m1") for c in vals]
+        rows, gs = _group_means(
+            base.df, [[fe1]], [fe1], aggs, len(vals), cache_means
+        )
         keep = [fe1] + ([weight_col] if weight_col is not None else [])
-        dm = (
-            base.df.join(bc(means), on=fe1)
-            .select(
-                *keep,
-                *[(F.col(c) - F.col(f"{c}__m1")).alias(c) for c in vals],
-            )
+        dm = _attach_means(
+            base.df, fe1, 0, {f"{c}__m1": f"{c}__m1" for c in vals}, rows, gs, bc
+        ).select(
+            fe1,
+            *carry,
+            *keep[1:],
+            *[(F.col(c) - F.col(f"{c}__m1")).alias(c) for c in vals],
         )
         sql_cte = None
         if base.sql_cte:
@@ -242,10 +270,14 @@ def build_demeaned_frame(
             sql_cte = (
                 f"{base.sql_cte},\ngroup_means AS (\n  SELECT {fe1}, {mean_cols}"
                 f" FROM {base.cte_name} GROUP BY {fe1}\n),\n"
-                f"demeaned AS (\n  SELECT {keep_sql},\n    {tilde}\n"
+                f"demeaned AS (\n  SELECT {prefix}{keep_sql},\n    {tilde}\n"
                 f"  FROM {base.cte_name} b JOIN group_means gm ON b.{fe1} = gm.{fe1}\n)"
             )
-        return Frame(dm, base.y_col, base.x_cols, keep, sql_cte, "demeaned")
+        keys = [fe1] + carry + keep[1:]
+        return Frame(
+            dm, base.y_col, base.x_cols, keys, sql_cte, "demeaned",
+            cached=gs if cache_means else None,
+        )
 
     if weight_col is not None:
         raise ValueError(
@@ -253,51 +285,37 @@ def build_demeaned_frame(
             "weighted k>=2 FE fits to the iterative path"
         )
     fe1, fe2 = fe[0], fe[1]
-    gs = None
-    if _use_one_scan_means(base.df, one_scan_means):
-        # ONE scan computes unit means, time means AND the grand mean via
-        # GROUPING SETS ((fe1),(fe2),()) — separate groupBys would re-read
-        # the source three times (3x I/O at 100 TB). The result is G1+G2+1
-        # tiny rows, cached so the three broadcast sides (and the meat pass)
-        # reuse the materialized table instead of re-scanning.
-        gs = (
-            base.df.groupingSets([[fe1], [fe2], []], fe1, fe2)
-            .agg(
-                *[F.avg(c).alias(f"{c}__m") for c in vals],
-                F.grouping_id().alias("__gid"),
-            )
-            .cache()
-        )
-        um = gs.where("__gid = 1").select(
-            fe1, *[F.col(f"{c}__m").alias(f"{c}__m1") for c in vals]
-        )
-        tm = gs.where("__gid = 2").select(
-            fe2, *[F.col(f"{c}__m").alias(f"{c}__m2") for c in vals]
-        )
-        om = gs.where("__gid = 3").select(
-            *[F.col(f"{c}__m").alias(f"{c}__mo") for c in vals]
-        )
+    # ONE scan computes unit means, time means AND the grand mean via
+    # GROUPING SETS ((fe1),(fe2),()) — separate groupBys would re-read the
+    # source three times. The result is G1+G2+1 tiny rows.
+    rows, gs = _group_means(
+        base.df, [[fe1], [fe2], []], [fe1, fe2],
+        [F.avg(c).alias(f"{c}__m") for c in vals], len(vals), cache_means,
+    )
+    dm = _attach_means(
+        base.df, fe1, 1, {f"{c}__m": f"{c}__m1" for c in vals}, rows, gs, bc
+    )
+    dm = _attach_means(
+        dm, fe2, 2, {f"{c}__m": f"{c}__m2" for c in vals}, rows, gs, bc
+    )
+    if rows is not None:
+        (grand,) = [r for r in rows if r["__gid"] == 3]
+        om = {c: F.lit(grand[f"{c}__m"]).cast("double") for c in vals}
     else:
-        um = base.df.groupBy(fe1).agg(*[F.avg(c).alias(f"{c}__m1") for c in vals])
-        tm = base.df.groupBy(fe2).agg(*[F.avg(c).alias(f"{c}__m2") for c in vals])
-        om = base.df.agg(*[F.avg(c).alias(f"{c}__mo") for c in vals])
-    dm = (
-        base.df.join(bc(um), on=fe1)
-        .join(bc(tm), on=fe2)
-        .crossJoin(bc(om))
-        .select(
-            fe1,
-            fe2,
-            *[
-                (
-                    F.col(c)
-                    - F.col(f"{c}__m1")
-                    - F.col(f"{c}__m2")
-                    + F.col(f"{c}__mo")
-                ).alias(c)
-                for c in vals
-            ],
+        dm = dm.crossJoin(
+            bc(gs.where("__gid = 3").select(
+                *[F.col(f"{c}__m").alias(f"{c}__mo") for c in vals]
+            ))
         )
+        om = {c: F.col(f"{c}__mo") for c in vals}
+    dm = dm.select(
+        fe1,
+        fe2,
+        *carry,
+        *[
+            (F.col(c) - F.col(f"{c}__m1") - F.col(f"{c}__m2") + om[c]).alias(c)
+            for c in vals
+        ],
     )
     sql_cte = None
     if base.sql_cte:
@@ -312,13 +330,16 @@ def build_demeaned_frame(
             f"unit_means AS (\n  SELECT {fe1}, {u_cols} FROM {base.cte_name} GROUP BY {fe1}\n),\n"
             f"time_means AS (\n  SELECT {fe2}, {t_cols} FROM {base.cte_name} GROUP BY {fe2}\n),\n"
             f"overall AS (\n  SELECT {o_cols} FROM {base.cte_name}\n),\n"
-            f"demeaned AS (\n  SELECT b.{fe1}, b.{fe2},\n    {tilde}\n"
+            f"demeaned AS (\n  SELECT {prefix}b.{fe1}, b.{fe2},\n    {tilde}\n"
             f"  FROM {base.cte_name} b\n"
             f"  JOIN unit_means um ON b.{fe1} = um.{fe1}\n"
             f"  JOIN time_means tm ON b.{fe2} = tm.{fe2}\n"
             f"  CROSS JOIN overall o\n)"
         )
-    return Frame(dm, base.y_col, base.x_cols, [fe1, fe2], sql_cte, "demeaned", cached=gs)
+    return Frame(
+        dm, base.y_col, base.x_cols, [fe1, fe2] + carry, sql_cte, "demeaned",
+        cached=gs if cache_means else None,
+    )
 
 
 def build_demeaned_frame_iterative(
@@ -416,7 +437,7 @@ def build_demeaned_frame_iterative(
     # level/pair tables are too large to collect (or nulls demand Spark's
     # avg semantics).
     compressed = _demeaned_iterative_compressed(
-        base, fe, vals, keys, bc, tol, weight_col
+        base, fe, vals, keys, tol, weight_col, broadcast_means
     )
     if compressed is not None:
         return compressed
@@ -504,8 +525,8 @@ COMPRESSED_ITER_NMAX = 5_000_000
 
 
 def _demeaned_iterative_compressed(
-    base: Frame, fe: list[str], vals: list[str], keys: list[str], bc,
-    tol: float, weight_col: str | None = None,
+    base: Frame, fe: list[str], vals: list[str], keys: list[str],
+    tol: float, weight_col: str | None = None, broadcast: bool = True,
 ) -> Frame | None:
     """k-FE alternating projections on COMPRESSED statistics (VERDICT r03
     #6; the in-memory formulation fixest's demeaning loop uses, re-shaped
@@ -523,16 +544,14 @@ def _demeaned_iterative_compressed(
     - the iteration runs driver-side in numpy (a sweep is k·m bincounts
       over the pair triplets — microseconds, no Spark jobs), iterated to
       1e-12 relative, far past the sweep loop's tol;
-    - one transform pass applies the offsets via broadcast level→δ lookup
-      joins and localCheckpoints the result.
+    - one transform pass applies the offsets via level→δ lookups (plan
+      literals up to the inline cap) and localCheckpoints the result.
 
     Total full-data passes: 2, independent of sweep count (the fallback
     loop pays ~2 scans per sweep). Returns None — falling back to the
     data-resident loop — when the stats exceed COMPRESSED_ITER_NMAX rows /
     the driver cap, or when null FE levels or null values require Spark's
     null-ignoring avg semantics row-by-row."""
-    import pandas as pd
-
     df = base.df
     k = len(fe)
     stats = fe_level_stats(df, fe, vals, weight_col)
@@ -542,14 +561,16 @@ def _demeaned_iterative_compressed(
     delta = gauss_seidel_offsets(levels, counts, sums, pairs)
     n_comp = fe_components(levels, pairs)[1] if k >= 2 else 1
 
-    # apply: broadcast level→δ lookups, one projection, checkpointed
+    # apply: level→δ lookups (plan literals, or broadcast joins past the
+    # inline cap), one projection, checkpointed
     spark = df.sparkSession
     out = df
     for i, f in enumerate(fe):
-        lut = pd.DataFrame({f: pd.Series(levels[i])})
-        for col, c in enumerate(vals):
-            lut[f"__d{i}_{col}"] = delta[i][:, col]
-        out = out.join(bc(spark.createDataFrame(lut)), on=f, how="left")
+        out = with_levels(
+            out, f, levels[i],
+            {f"__d{i}_{col}": delta[i][:, col] for col in range(len(vals))},
+            how="left", broadcast=broadcast,
+        )
     new_vals = [
         (
             F.col(c).cast("double")
@@ -741,8 +762,8 @@ def build_mundlak_frame(
     fe: list[str],
     numeric_xvars: list[str],
     broadcast_means: bool = True,
-    one_scan_means: bool | None = None,
     weight_col: str | None = None,
+    cache_means: bool = True,
 ) -> Frame:
     """Augment with per-FE group means of the numeric regressors
     (reference: R/dbreg.R:1295-1332). ``x_bar_fek`` columns are appended; the
@@ -764,23 +785,15 @@ def build_mundlak_frame(
         return f"AVG({v})"
 
     # all per-FE mean tables from ONE scan via GROUPING SETS ((fe1),...,(fek))
-    # (k separate groupBys would re-read the source k times); the tiny cached
-    # result feeds every broadcast join. grouping_id bit for fe_i is set when
-    # fe_i is aggregated away, so the set that groups BY fe_i has gid =
-    # all-ones minus fe_i's bit.
-    gs = None
-    if (
-        numeric_in_frame
-        and len(fe) > 1
-        and _use_one_scan_means(base.df, one_scan_means)
-    ):
-        gs = (
-            base.df.groupingSets([[f] for f in fe], *fe)
-            .agg(
-                *[_m_agg(v, f"{v}__m") for v in numeric_in_frame],
-                F.grouping_id().alias("__gid"),
-            )
-            .cache()
+    # (k separate groupBys would re-read the source k times). grouping_id
+    # bit for fe_i is set when fe_i is aggregated away, so the set that
+    # groups BY fe_i has gid = all-ones minus fe_i's bit.
+    rows = gs = None
+    if numeric_in_frame:
+        rows, gs = _group_means(
+            base.df, [[f] for f in fe], fe,
+            [_m_agg(v, f"{v}__m") for v in numeric_in_frame],
+            len(numeric_in_frame), cache_means,
         )
     all_ones = (1 << len(fe)) - 1
 
@@ -792,17 +805,11 @@ def build_mundlak_frame(
         xbar_k = [f"{v}{suffix}" for v in numeric_in_frame]
         xbar_all.extend(xbar_k)
         if numeric_in_frame:
-            if gs is not None:
-                gid = all_ones ^ (1 << (len(fe) - k))
-                means = gs.where(F.col("__gid") == gid).select(
-                    fe_k,
-                    *[F.col(f"{v}__m").alias(f"{v}{suffix}") for v in numeric_in_frame],
-                )
-            else:
-                means = base.df.groupBy(fe_k).agg(
-                    *[_m_agg(v, f"{v}{suffix}") for v in numeric_in_frame]
-                )
-            df = df.join(bc(means), on=fe_k)
+            df = _attach_means(
+                df, fe_k, all_ones ^ (1 << (len(fe) - k)),
+                {f"{v}__m": f"{v}{suffix}" for v in numeric_in_frame},
+                rows, gs, bc,
+            )
             mc = ", ".join(
                 f"{_m_sql(v)} AS {v}{suffix}" for v in numeric_in_frame
             )
@@ -836,5 +843,5 @@ def build_mundlak_frame(
         key_cols=base.key_cols,
         sql_cte=sql_cte,
         cte_name="augmented",
-        cached=gs,
+        cached=gs if cache_means else None,
     )

@@ -195,7 +195,7 @@ def _tri(row: dict, name, p: int) -> np.ndarray:
     return m
 
 
-def _check_groups(g: int, kind: str, keys, by: str | None, level) -> None:
+def check_groups(g: int, kind: str, keys, by: str | None, level) -> None:
     """The one ≥ 2 clusters / periods check: G/(G − 1) is undefined at 1."""
     if g >= 2:
         return
@@ -409,7 +409,7 @@ def sandwich_meat(
             per.setdefault(level(r), []).append(r)
         out = SandwichMeat({}, sql=sql)
         for lvl, rs in per.items():
-            _check_groups(len(rs), kind, keys, by, lvl)
+            check_groups(len(rs), kind, keys, by, lvl)
             rs.sort(key=lambda r: (r[keys[0]] is None, r[keys[0]]))
             out.meats[lvl] = []
             for t, p in zip(tags, ps):
@@ -439,7 +439,7 @@ def sandwich_meat(
             )
             for r in run_agg(tab, outer, by=lead):
                 g = int(r["n_clusters"])
-                _check_groups(g, kind, S, by, level(r))
+                check_groups(g, kind, S, by, level(r))
                 meats = block_meats(r, [f"m{t}" for t in tags])
                 comps.setdefault(level(r), []).append((len(S), meats, g))
     finally:
@@ -461,7 +461,8 @@ def cgm_combine(comps):
     V_S carrying its own G_S/(G_S − 1); the factors are folded into the
     meat relative to G_min's, so the one CR1 formula with G = G_min (the
     usual reporting choice) returns the exact sum. The n/(n − k) factors
-    cancel. One component returns it unchanged."""
+    cancel. One component returns it unchanged. Callers check each G
+    (:func:`check_groups`) first."""
     g_min = min(g for r, _, g in comps if r == 1)
     ref = g_min / (g_min - 1.0)
     meat = 0.0

@@ -30,7 +30,6 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from .design import build_design, standardize_coef_names
 from .formula import parse_formula, parse_vcov, parse_weights
@@ -42,6 +41,7 @@ from .plans.common import (
 )
 from .plans.exprs import Cast, Lit, Var, agg_to_spark, agg_to_sql
 from .plans.frames import _wmean_col, build_base_frame
+from .plans.levels import with_levels
 from .plans.meat import MEAT_KIND, ScoreBlock, fe_leverage, quad_form, sandwich_meat
 from .solve import (
     compute_vcov,
@@ -53,20 +53,6 @@ from .solve import (
 )
 
 SPLIT_NMAX = 10_000  # max split levels collected to the driver
-
-
-def beta_schema(lvl_type, n_beta: int):
-    """Explicit StructType for a broadcast (level, __b0..__b{n-1}) lookup.
-
-    Name-only schemas lean on type inference for ``__lvl``, which fails when
-    the split column is entirely NULL in the driver rows (one all-None
-    level) — take the level's type from the frame's schema instead."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    return StructType(
-        [StructField("__lvl", lvl_type, True)]
-        + [StructField(f"__b{i}", DoubleType(), False) for i in range(n_beta)]
-    )
 
 
 class DbregSplit(dict):
@@ -572,36 +558,37 @@ def _level_meats(
     weight_col, fe, hac_lag=None, conley_opts=None,
 ):
     """Every level's meat from ONE sandwich-kernel call with ``by=split``:
-    the per-level β̂ rides a broadcast (level → β) table into the score
-    w·(y − x'β̂), and for HC2/HC3 the per-level kept inverse Gram rides a
-    second one into the leverage (plus the exact one-FE term w/W_(level,g)).
+    the per-level β̂ rides a (level → β) lookup into the score w·(y − x'β̂),
+    and for HC2/HC3 the per-level kept inverse Gram rides a second one into
+    the leverage (plus the exact one-FE term w/W_(level,g)). Both are plan
+    literals up to the inline cap (plans/levels.py).
     Dropped-by-collinearity columns carry 0, which leaves fitted values
     and leverages unchanged; each level's meat is then sliced to its kept
     coefficient layout. Returns (meats, n_clusters) keyed by level."""
-    spark = frame_df.sparkSession
-    lvl_type = frame_df.schema[split].dataType
     p = (1 if intercept else 0) + len(x_cols)
     hck = vcov_type in ("hc2", "hc3")
     tri = [(a, b) for a in range(p) for b in range(a, p)]
-    beta_rows, minv_rows = [], []
-    for lvl, sl in sols.items():
+    betas, minvs = [], []
+    for sl in sols.values():
         keep = np.asarray(sl["collin"].keep_idx, dtype=int)
         full = np.zeros(p)
         full[keep] = sl["sol"].betahat
-        beta_rows.append((lvl,) + tuple(float(v) for v in full))
+        betas.append(full)
         if hck:
             M = np.zeros((p, p))
             M[np.ix_(keep, keep)] = sl["sol"].xtx_inv
-            minv_rows.append((lvl,) + tuple(float(M[ab]) for ab in tri))
+            minvs.append([M[ab] for ab in tri])
 
-    def join(df, rows, schema):
-        bt = spark.createDataFrame(rows, schema=schema)
+    def join(df, prefix, table):
         # null-safe: a NULL split value is a real level and must match
-        return df.join(
-            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-        ).drop("__lvl")
+        table = np.asarray(table, dtype=float).reshape(len(sols), -1)
+        return with_levels(
+            df, split, list(sols),
+            {f"{prefix}{i}": table[:, i] for i in range(table.shape[1])},
+            null_safe=True,
+        )
 
-    j = join(frame_df, beta_rows, beta_schema(lvl_type, p))
+    j = join(frame_df, "__b", betas)
     off = 1 if intercept else 0
     fitted = Var("__b0") if intercept else Lit(0.0)
     for i, xc in enumerate(x_cols):
@@ -612,11 +599,7 @@ def _level_meats(
         score = w * score
     block = ScoreBlock(score, tuple(x_cols), intercept)
     if hck:
-        q_schema = T.StructType(
-            [T.StructField("__lvl", lvl_type)]
-            + [T.StructField(f"__q{i}", T.DoubleType()) for i in range(len(tri))]
-        )
-        j = join(j, minv_rows, q_schema)
+        j = join(j, "__q", minvs)
         h = quad_form(block.cols, lambda a, b: Var(f"__q{tri.index((a, b))}"))
         if w is not None:
             h = w * h

@@ -48,6 +48,7 @@ from .plans.exprs import (
     to_spark,
 )
 from .plans.frames import build_base_frame
+from .plans.levels import with_levels
 from .solve import (
     compute_vcov,
     detect_collinearity,
@@ -55,7 +56,7 @@ from .solve import (
     solve_with_fallback,
 )
 from .plans.meat import MEAT_KIND, sandwich_meat
-from .split import DbregSplit, beta_schema
+from .split import DbregSplit
 
 _log = logging.getLogger("dbreg_spark")
 
@@ -154,17 +155,18 @@ def _grouped_pass(
     return {r["__sp"]: r.asDict() for r in rows}, p
 
 
-def _beta_frame(spark, lvl_type, states, p_all):
-    """Broadcastable (level, __b0..__b{p_all-1}) lookup from driver state.
-    Full design space: collinearity-dropped columns carry 0. ``lvl_type`` is
-    the split column's Spark DataType (explicit schema — inference fails on
-    an all-None level)."""
-    rows = []
-    for lvl, st in states.items():
-        full = np.zeros(p_all)
-        full[np.asarray(st["keep_idx"], dtype=int)] = st["cand"]
-        rows.append((lvl,) + tuple(float(v) for v in full))
-    return spark.createDataFrame(rows, schema=beta_schema(lvl_type, p_all))
+def _with_beta(df, split, states, p_all):
+    """``df`` with each level's ``__b0..__b{p_all-1}`` from driver state
+    (full design space: collinearity-dropped columns carry 0). Rows of
+    levels not in ``states`` drop out; a NULL split value is a real level.
+    Plan literals up to the inline cap (plans/levels.py)."""
+    full = np.zeros((len(states), p_all))
+    for r, st in enumerate(states.values()):
+        full[r, np.asarray(st["keep_idx"], dtype=int)] = st["cand"]
+    return with_levels(
+        df, split, list(states),
+        {f"__b{i}": full[:, i] for i in range(p_all)}, null_safe=True,
+    )
 
 
 def dbglm_split(
@@ -233,7 +235,6 @@ def dbglm_split(
     if spark is None and isinstance(data, DataFrame):
         spark = data.sparkSession
     source = resolve_source(spark=spark, data=data, table=table, path=path)
-    sess = source.df.sparkSession
 
     design = build_design(
         source.df, parsed, expand="all", fe_vars=parsed.fe or None
@@ -263,12 +264,12 @@ def dbglm_split(
                 )
             names_fe = [standardize_coef_names(n) for n in base.x_cols]
             return _fit_lockstep_fepois(
-                frame_df, sess, fam, parsed, split, list(base.x_cols),
+                frame_df, fam, parsed, split, list(base.x_cols),
                 names_fe, offset, weight_col, vcov_type, cluster_vars,
                 max_iter, tol, split_nmax, verbose, design, hac_lag,
             )
         return _fit_lockstep(
-            frame_df, sess, fam, parsed, split, x_names, names_all, icpt,
+            frame_df, fam, parsed, split, x_names, names_all, icpt,
             offset, weight_col, vcov_type, cluster_vars, max_iter, tol,
             split_nmax, verbose, p_all, design, hac_lag,
             conley_opts=conley_opts,
@@ -278,7 +279,7 @@ def dbglm_split(
 
 
 def _fit_lockstep(
-    frame_df, sess, fam, parsed, split, x_names, names_all, icpt, offset,
+    frame_df, fam, parsed, split, x_names, names_all, icpt, offset,
     weight_col, vcov_type, cluster_vars, max_iter, tol, split_nmax, verbose,
     p_all, design, hac_lag=None, conley_opts=None,
 ):
@@ -324,18 +325,8 @@ def _fit_lockstep(
         active = {l: s for l, s in states.items() if not s["converged"] and not s["gave_up"]}
         if not active:
             break
-        bt = _beta_frame(
-            sess, frame_df.schema[split].dataType, active, p_all
-        )
-        scan = frame_df
-        # prune frozen levels from the scan when possible (None-keyed
-        # levels can't ride isin; keep scanning everything in that case)
-        frozen = [l for l in states if l not in active]
-        if frozen and None not in states:
-            scan = scan.where(F.col(split).isin(list(active.keys())))
-        j = scan.join(
-            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-        ).drop("__lvl")
+        # frozen levels drop out of the scan with the inner lookup
+        j = _with_beta(frame_df, split, active, p_all)
         rows, _ = _grouped_pass(
             j, fam, split, x_names, icpt, offset, weight_col, first=False
         )
@@ -388,14 +379,10 @@ def _fit_lockstep(
     meats = {}
     n_clusters = {}
     if vcov_type in MEAT_KIND:
-        bt = _beta_frame(
-            sess, frame_df.schema[split].dataType,
-            {l: dict(s, cand=s["beta"]) for l, s in states.items()},
-            p_all,
+        j = _with_beta(
+            frame_df, split,
+            {l: dict(s, cand=s["beta"]) for l, s in states.items()}, p_all,
         )
-        j = frame_df.join(
-            F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-        ).drop("__lvl")
         block = glm_block(
             fam, _col_eta(x_names, icpt, offset), _d(Var("__y_raw")), x_names,
             icpt, weight_col,
@@ -543,12 +530,6 @@ def _fepois_col_m(x_names, offset):
     return y, full, Func("exp", (full,))
 
 
-def _fepois_join_beta(frame_df, split, bt):
-    return frame_df.join(
-        F.broadcast(bt), on=F.col(split).eqNullSafe(F.col("__lvl"))
-    ).drop("__lvl")
-
-
 def _fepois_group_table(j, split, fe, x_names, offset, weight_col):
     """Pass 1: per-(level, fe-group) sums W_g = sum(w*m), Y_g = sum(w*y),
     T_gj = sum(w*m*x_j) — glm.fepois_group_table keyed on (split, fe)."""
@@ -661,7 +642,7 @@ _FEPOIS_SPLIT_STATS: dict = {}
 
 
 def _fit_lockstep_fepois(
-    frame_df, sess, fam, parsed, split, x_names, names_all, offset,
+    frame_df, fam, parsed, split, x_names, names_all, offset,
     weight_col, vcov_type, cluster_vars, max_iter, tol, split_nmax, verbose,
     design, hac_lag=None,
 ):
@@ -679,11 +660,9 @@ def _fit_lockstep_fepois(
     """
     fe = parsed.fe[0]
     p_all = len(x_names)
-    lvl_type = frame_df.schema[split].dataType
 
     def _passes(states_sel, first):
-        bt = _beta_frame(sess, lvl_type, states_sel, p_all)
-        j = _fepois_join_beta(frame_df, split, bt)
+        j = _with_beta(frame_df, split, states_sel, p_all)
         gtab = _fepois_group_table(j, split, fe, x_names, offset, weight_col)
         rows_df = _fepois_profiled_rows(
             j, gtab, split, fe, x_names, offset, weight_col, first
@@ -828,12 +807,10 @@ def _fit_lockstep_fepois(
         )
 
     # ---- final-beta group table: G per level, fixef plans, meat pass -------
-    bt_f = _beta_frame(
-        sess, lvl_type,
-        {l: dict(s, cand=s["beta"]) for l, s in states.items()},
-        p_all,
+    j_f = _with_beta(
+        frame_df, split,
+        {l: dict(s, cand=s["beta"]) for l, s in states.items()}, p_all,
     )
-    j_f = _fepois_join_beta(frame_df, split, bt_f)
     gtab_f = _fepois_group_table(
         j_f, split, fe, x_names, offset, weight_col
     ).persist()

@@ -32,9 +32,35 @@ def test_minhash_lsh_releases_cache(spark, tables):
     assert _cached_ids(spark) - before == set()
 
 
-def test_demean_one_scan_means_released(spark):
-    """Forced one-scan GROUPING SETS means: the cached means table must be
-    unpersisted by Frame.cleanup()."""
+def test_demean_one_scan_means_released(spark, monkeypatch):
+    """GROUPING SETS means past the inline cap: the cached means table must
+    be unpersisted by Frame.cleanup()."""
+    from dbreg_spark.design import build_design
+    from dbreg_spark.formula import parse_formula
+    from dbreg_spark.plans.common import resolve_source
+    from dbreg_spark.plans.frames import build_base_frame, build_demeaned_frame
+
+    from fixtures import panel_balanced
+
+    df = spark.createDataFrame(panel_balanced())
+    parsed = parse_formula("y ~ x1 + x2 | firm + year")
+    source = resolve_source(spark=spark, data=df)
+    design = build_design(source.df, parsed, expand="all", fe_vars=parsed.fe)
+    base = build_base_frame(source, parsed, design, want_sql=False)
+
+    monkeypatch.setattr("dbreg_spark.plans.levels.INLINE_VALUES", 0)
+    before = _cached_ids(spark)
+    frame = build_demeaned_frame(base, parsed.fe)
+    frame.df.count()  # materializes the cached gs table
+    new = _cached_ids(spark) - before
+    assert len(new) == 1
+    frame.cleanup()
+    assert _cached_ids(spark) & new == set()
+
+
+def test_demean_inline_means_released(spark):
+    """Under the inline cap the means table, cached before the collect that
+    counts its levels, is released as soon as the rows are in hand."""
     from dbreg_spark.design import build_design
     from dbreg_spark.formula import parse_formula
     from dbreg_spark.plans.common import resolve_source
@@ -49,12 +75,28 @@ def test_demean_one_scan_means_released(spark):
     base = build_base_frame(source, parsed, design, want_sql=False)
 
     before = _cached_ids(spark)
-    frame = build_demeaned_frame(base, parsed.fe, one_scan_means=True)
-    frame.df.count()  # materializes the cached gs table
-    new = _cached_ids(spark) - before
-    assert len(new) == 1
-    frame.cleanup()
-    assert _cached_ids(spark) & new == set()
+    frame = build_demeaned_frame(base, parsed.fe)
+    assert frame.cached is None
+    frame.df.count()
+    assert _cached_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize("fe", ["firm", "firm + year"])
+def test_multi_plan_leaves_no_cache(spark, monkeypatch, fe):
+    """The lazy dbreg_multi plan cannot release a means table, so past the
+    inline cap it must not cache one."""
+    from dbreg_spark.multi import build_multi_plan
+
+    from fixtures import panel_balanced
+
+    df = spark.createDataFrame(panel_balanced())
+    monkeypatch.setattr("dbreg_spark.plans.levels.INLINE_VALUES", 0)
+    before = _cached_ids(spark)
+    agg_df, _ = build_multi_plan(
+        f"y ~ x1 + sw(x2) | {fe}", spark=spark, data=df, strategy="demean"
+    )
+    agg_df.collect()
+    assert _cached_ids(spark) - before == set()
 
 
 @pytest.mark.slowparity

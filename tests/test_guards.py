@@ -91,3 +91,33 @@ def test_one_cluster_or_period_raises_clear_error(spark):
         dbglm("b ~ x", df, family="binomial", vcov="~g")
     with pytest.raises(ValueError, match="at least 2 time periods"):
         dbglm("b ~ x", df, family="binomial", vcov="dk ~ t")
+
+
+def test_one_cluster_raises_clear_error_on_cell_paths(spark):
+    """The compress strategy and the GLM cell path keep their own cell-level
+    cluster meats; one cluster raises the kernel's ValueError there too,
+    for one-way and two-way clustering."""
+    import numpy as np
+    import pandas as pd
+    import pytest
+
+    from dbreg_spark import dbglm, dbreg
+
+    rng = np.random.default_rng(12)
+    x = rng.normal(size=200)
+    pdf = pd.DataFrame(
+        {
+            "x": x,
+            "y": 1.0 + 2.0 * x + rng.normal(size=200),
+            "b": (rng.uniform(size=200) < 1 / (1 + np.exp(-x))).astype(float),
+            "f": rng.integers(0, 4, 200),
+            "g": ["only"] * 200,
+            "h": rng.integers(0, 5, 200),
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    for vcov in ("~g", "~g + h"):
+        with pytest.raises(ValueError, match="at least 2 clusters; g has 1"):
+            dbreg("y ~ x | f", df, strategy="compress", vcov=vcov)
+        with pytest.raises(ValueError, match="at least 2 clusters; g has 1"):
+            dbglm("b ~ x", df, family="binomial", strategy="cells", vcov=vcov)

@@ -1,7 +1,8 @@
 """Plan-shape regression guards: the SCALE.md physical-plan claims, pinned
 mechanically. These tests read `.explain`-style plan strings and assert the
-shapes that make the engine survive a 100 TB scale-up — means broadcast
-(never a big-side shuffle), filters/pruning reaching the parquet scan, a
+shapes that make the engine survive a 100 TB scale-up — per-level tables as
+plan literals, or broadcast past the inline cap (never a big-side
+shuffle), filters/pruning reaching the parquet scan, a
 single exchange on the aggregation paths, and no window functions on
 production binning. A refactor that silently degrades a plan (broadcast →
 sort-merge join, lost pushdown) fails here long before a benchmark would
@@ -30,6 +31,12 @@ def _formatted(df) -> str:
 
 
 FML = "l_tax ~ l_quantity + l_discount | l_returnflag + l_linestatus"
+
+
+@pytest.fixture
+def past_inline_cap(monkeypatch):
+    """Every per-level table past the inline cap: broadcast joins."""
+    monkeypatch.setattr("dbreg_spark.plans.levels.INLINE_VALUES", 0)
 
 
 def test_moments_plan_single_exchange_pushdown(tables):
@@ -66,7 +73,30 @@ def test_filter_missing_pushes_every_not_null_to_scan(spark, tmp_path):
     assert df.count() == 1
 
 
-def test_demean_plan_broadcasts_means(tables):
+def test_demean_plan_float_key_joins_grouping_sets(tables):
+    """A double FE key has no literal form: the plan broadcast-joins the
+    grouping-sets means table itself, not a re-uploaded copy of its rows."""
+    import pyspark.sql.functions as F
+
+    li = tables["lineitem"].withColumn("ln", F.col("l_linenumber").cast("double"))
+    df, _sql = build_plan(
+        "l_tax ~ l_quantity + l_discount | ln", li, strategy="demean"
+    )
+    plan = _formatted(df)
+    assert _n_nodes(plan, "BroadcastHashJoin") == 1
+    assert _n_nodes(plan, "Expand") == 1  # the grouping-sets aggregation
+    assert "ExistingRDD" not in plan and "LocalTableScan" not in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_demean_plan_inlines_means(tables):
+    df, _sql = build_plan(FML, tables["lineitem"], strategy="demean")
+    plan = _formatted(df)
+    assert "Join" not in plan  # the means ride in the plan as literals
+    assert "Window" not in plan
+
+
+def test_demean_plan_broadcasts_means(tables, past_inline_cap):
     df, _sql = build_plan(FML, tables["lineitem"], strategy="demean")
     plan = _formatted(df)
     assert "BroadcastHashJoin" in plan  # mean tables broadcast to the scan side
@@ -74,7 +104,13 @@ def test_demean_plan_broadcasts_means(tables):
     assert "Window" not in plan
 
 
-def test_mundlak_plan_broadcasts_means(tables):
+def test_mundlak_plan_inlines_means(tables):
+    df, _sql = build_plan(FML, tables["lineitem"], strategy="mundlak")
+    plan = _formatted(df)
+    assert "Join" not in plan
+
+
+def test_mundlak_plan_broadcasts_means(tables, past_inline_cap):
     df, _sql = build_plan(FML, tables["lineitem"], strategy="mundlak")
     plan = _formatted(df)
     assert "BroadcastHashJoin" in plan
@@ -103,7 +139,16 @@ def test_binscatter_assignment_no_window(tables):
     assert _n_nodes(plan, "Exchange") == 0  # embarrassingly parallel projection
 
 
-def test_compress_predict_plan_broadcast_luts(tables):
+def test_compress_predict_plan_inline_luts(tables):
+    from dbreg_spark import dbreg
+
+    li = tables["lineitem"]
+    m = dbreg(FML, li, strategy="compress")
+    plan = _formatted(m.predict(li))
+    assert "Join" not in plan  # level→β lookups are plan literals
+
+
+def test_compress_predict_plan_broadcast_luts(tables, past_inline_cap):
     from dbreg_spark import dbreg
 
     li = tables["lineitem"]
@@ -367,11 +412,10 @@ def test_iv_gram_plan_single_exchange(tables):
     assert _n_nodes(plan, "Scan parquet") <= 1
 
 
-def test_weighted_plans_match_unweighted_shapes(tables):
-    """WLS must not change plan shapes: same exchange counts, means still
-    broadcast — the weighting is pure expression arithmetic inside the
-    same aggregations."""
-    li = tables["lineitem"]
+def _weighted_demean_broadcasts(li) -> int:
+    """Broadcast joins in the weighted demean plan, after checking that WLS
+    keeps the unweighted plan shapes (moments and demean)."""
+    n_bhj = 0
     for strategy in ("moments", "demean"):
         fml = (
             "l_extendedprice ~ l_discount + l_tax"
@@ -382,8 +426,21 @@ def test_weighted_plans_match_unweighted_shapes(tables):
         pu, pw = _formatted(dfu), _formatted(dfw)
         assert _n_nodes(pw, "Exchange") == _n_nodes(pu, "Exchange")
         assert _n_nodes(pw, "SortMergeJoin") == 0
-        if strategy == "demean":
-            assert _n_nodes(pw, "BroadcastHashJoin") >= 1
+        n_bhj = _n_nodes(pw, "BroadcastHashJoin")
+    return n_bhj
+
+
+def test_weighted_plans_inline_means(tables):
+    """WLS must not change plan shapes; the weighted means still ride in
+    the plan as literals."""
+    assert _weighted_demean_broadcasts(tables["lineitem"]) == 0
+
+
+def test_weighted_plans_match_unweighted_shapes(tables, past_inline_cap):
+    """WLS must not change plan shapes: same exchange counts, means still
+    broadcast past the inline cap — the weighting is pure expression
+    arithmetic inside the same aggregations."""
+    assert _weighted_demean_broadcasts(tables["lineitem"]) >= 1
 
 
 def test_split_grouped_moments_single_exchange(tables):

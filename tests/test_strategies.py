@@ -303,10 +303,13 @@ def test_compress_sql_matches_duckdb(spark, trade):
     np.testing.assert_allclose(cells["sum_y"], ddf["sum_y"], rtol=1e-9)
 
 
-def test_one_scan_means_parity(panel):
-    """The grouping-sets (one-scan) means path and the per-FE groupBy path
-    produce identical demean/mundlak moments (the size heuristic switches
-    between them; both must agree to double precision)."""
+def test_one_scan_means_parity(panel, monkeypatch):
+    """The inline means (plan literals) and the cached grouping-sets table
+    broadcast past the inline cap produce identical demean/mundlak moments
+    (the level-count cap switches between them; both must agree to double
+    precision)."""
+    from dbreg_spark.plans import levels
+
     import pyspark.sql.functions as F
 
     from dbreg_spark.design import build_design
@@ -338,8 +341,15 @@ def test_one_scan_means_parity(panel):
         (build_demeaned_frame, dict(fe=["firm", "year"])),
         (build_mundlak_frame, dict(fe=["firm", "year"], numeric_xvars=["x1", "x2"])),
     ]:
-        m_one = moments(builder(base, one_scan_means=True, **kwargs))
-        m_per = moments(builder(base, one_scan_means=False, **kwargs))
+        frame = builder(base, **kwargs)
+        assert frame.cached is None  # the means rode in the plan
+        m_per = moments(frame)
+        with monkeypatch.context() as mp:
+            mp.setattr(levels, "INLINE_VALUES", 0)
+            frame = builder(base, **kwargs)
+            assert frame.cached is not None  # the broadcast path ran
+            m_one = moments(frame)
+            frame.cleanup()
         assert m_one.keys() == m_per.keys()
         for k in m_one:
             np.testing.assert_allclose(m_one[k], m_per[k], rtol=1e-12, err_msg=k)
